@@ -6,9 +6,11 @@ writer/KafkaWriter.java:641-693); the e2e correctness oracle is
 "audit-topic count == messages written" (e2e/SingerEndToEndTest.java:67-117).
 
 Here the audit row is produced inside foreachBatch AFTER the sink write
-succeeds — the same at-least-once accounting window as the reference
-(count per attempted batch; a crash between sink-write and commit re-sends
-and re-audits, never under-counts).
+succeeds — the same at-least-once accounting window as the reference.  Its
+count is the sum of the successful tasks' delivery counts, collected after
+the delivery job succeeds: a failed task attempt is never counted, and a
+crash between sink-write and commit re-sends and re-audits, never
+under-counts.
 """
 
 from __future__ import annotations
@@ -95,8 +97,12 @@ class AuditCollector:
     def __init__(self) -> None:
         self.rows: list[tuple] = []
 
-    def append(self, df: DataFrame) -> None:
-        self.rows.extend(tuple(r) for r in df.collect())
+    def append(self, audit: tuple | DataFrame) -> None:
+        """Take one :func:`audit_row` tuple, or collect an audit DataFrame."""
+        if isinstance(audit, tuple):
+            self.rows.append(audit)
+        else:
+            self.rows.extend(tuple(r) for r in audit.collect())
 
     def total(self, topic: str | None = None) -> int:
         return sum(r[3] for r in self.rows if topic is None or r[2] == topic)

@@ -355,87 +355,69 @@ class PipelineManager:
         return cap
 
     def _build_writer(self, cfg: LogConfig, df: DataFrame, ckpt: str, audit_sink=None):
+        """Direct writeStream sinks for kafka/memory/noop and the plain file
+        sink; every other writer is one foreachBatch handler composed as
+        cap? → deliver → audit? (sinks.foreach_batch_sink).  The delivery
+        returns the messages it wrote, and the audit row carries that count —
+        counted after the successful write, the reference's accounting point
+        (writer/KafkaWriter.java:641-693)."""
         w = cfg.writer
         cap = self._hot_key_cap(cfg)
-        if cap is not None and w.type in ("kafka", "memory", "noop"):
-            # the cap is a per-micro-batch frame transform, so it needs a
-            # foreachBatch hook; these direct writeStream sinks have none.
-            # Fail at config time — a guard that silently doesn't guard is
-            # worse than an error the operator sees on deploy.
-            raise ValueError(
-                f"processor.maxEventsPerKey is not supported with "
-                f"writer.type={w.type}; use kafka_direct, file, or pulsar")
-        if w.type == "kafka":
-            writer = sinks.kafka_sink(df, w.bootstrap_servers, w.topic, ckpt,
-                                      producer_configs=w.producer_configs,
-                                      trigger_seconds=cfg.processor.processing_interval_secs)
-        elif w.type == "kafka_direct":
-            # connector-free Kafka path (W1 twin); audited variant counts
-            # after each successful producer flush — the reference's
-            # accounting point (writer/KafkaWriter.java:641-693)
-            if w.audit_topic and audit_sink is not None:
-                factory, configs = self.kafka_producer_factory, w.producer_configs
+        audit = (sinks.auditor(w.audit_topic, audit_sink)
+                 if w.audit_topic and audit_sink is not None else None)
+        if w.type in ("kafka", "memory", "noop"):
+            if cap is not None:
+                # the cap is a per-micro-batch frame transform, so it needs
+                # a foreachBatch hook; these direct writeStream sinks have
+                # none.  Fail at config time — a guard that silently doesn't
+                # guard is worse than an error the operator sees on deploy.
+                raise ValueError(
+                    f"processor.maxEventsPerKey is not supported with "
+                    f"writer.type={w.type}; use kafka_direct, file, or pulsar")
+            if w.type == "kafka":
+                return sinks.kafka_sink(df, w.bootstrap_servers, w.topic, ckpt,
+                                        producer_configs=w.producer_configs,
+                                        trigger_seconds=cfg.processor.processing_interval_secs)
+            if w.type == "memory":
+                return sinks.memory_sink(df, cfg.name, ckpt)
+            return sinks.noop_sink(df, ckpt)
+        trigger_seconds = None
+        if w.type == "kafka_direct":
+            # connector-free Kafka path (W1 twin)
+            factory = self.kafka_producer_factory
 
-                def write_kafka_batch(batch_df: DataFrame, batch_id: int) -> None:
-                    sinks.kafka_write_batch(batch_df, w.bootstrap_servers, w.topic,
-                                            factory, configs,
-                                            transactional=w.transaction_enabled)
-
-                writer = sinks.with_audit(df, w.audit_topic, ckpt,
-                                          write_kafka_batch, audit_sink,
-                                          batch_transform=cap)
-            else:
-                writer = sinks.kafka_direct_sink(df, w.bootstrap_servers, w.topic, ckpt,
-                                                 self.kafka_producer_factory,
-                                                 w.producer_configs,
-                                                 transactional=w.transaction_enabled,
-                                                 batch_transform=cap)
-        elif w.type in ("file", "s3", "parquet", "text"):
-            if w.audit_topic and audit_sink is not None:
-                # audited file delivery: foreachBatch write + audit row (B5),
-                # keeping the writer config the plain path gets — byte-based
-                # size rollover (maxFileSizeMB fidelity) and the
-                # minUploadTime trigger.  Batches land in per-batch-id dirs
-                # so a replay overwrites instead of duplicating
-                # (effectively-once; see sinks.write_batch_idempotent)
-                path, fmt, size_mb = w.path, w.format, w.max_file_size_mb
-
-                def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-                    sinks.write_batch_idempotent(batch_df, path, batch_id, fmt, size_mb)
-
-                writer = sinks.with_audit(df, w.audit_topic, ckpt, write_batch,
-                                          audit_sink, batch_transform=cap)
-                if w.min_upload_seconds:
-                    writer = writer.trigger(processingTime=f"{w.min_upload_seconds} seconds")
-            elif cap is not None:
-                # capped unaudited file delivery routes through the same
-                # idempotent per-batch-dir writer (foreachBatch hook)
-                path, fmt, size_mb = w.path, w.format, w.max_file_size_mb
-
-                def write_capped(batch_df: DataFrame, batch_id: int) -> None:
-                    sinks.write_batch_idempotent(cap(batch_df), path,
-                                                 batch_id, fmt, size_mb)
-
-                writer = (df.writeStream.foreachBatch(write_capped)
-                          .option("checkpointLocation", ckpt))
-                if w.min_upload_seconds:
-                    writer = writer.trigger(processingTime=f"{w.min_upload_seconds} seconds")
-            else:
-                writer = sinks.file_sink(df, w.path, ckpt, fmt=w.format,
-                                         min_upload_seconds=w.min_upload_seconds)
+            def deliver(batch_df: DataFrame, batch_id: int) -> int:
+                return sinks.kafka_write_batch(batch_df, w.bootstrap_servers, w.topic,
+                                               factory, w.producer_configs,
+                                               transactional=w.transaction_enabled)
         elif w.type == "pulsar":
             # W4/P11: the partitioner-computed `partition` column routes to
             # sub-topic producers inside pulsar_write_batch (the reference's
             # MessageRouter-wrapping-partitioner composition)
-            writer = sinks.pulsar_sink(df, w.bootstrap_servers, w.topic, ckpt,
-                                       client_factory=self.pulsar_client_factory,
-                                       batch_transform=cap)
-        elif w.type == "memory":
-            writer = sinks.memory_sink(df, cfg.name, ckpt)
-        elif w.type == "noop":
-            writer = sinks.noop_sink(df, ckpt)
+            client_factory = self.pulsar_client_factory
+
+            def deliver(batch_df: DataFrame, batch_id: int) -> int:
+                return sinks.pulsar_write_batch(batch_df, w.bootstrap_servers, w.topic,
+                                                client_factory=client_factory)
+        elif w.type in ("file", "s3", "parquet", "text"):
+            if cap is None and audit is None:
+                return sinks.file_sink(df, w.path, ckpt, fmt=w.format,
+                                       min_upload_seconds=w.min_upload_seconds)
+            # audited or capped file delivery keeps the writer config the
+            # plain path gets — byte-based size rollover (maxFileSizeMB
+            # fidelity) and the minUploadTime trigger.  Batches land in
+            # per-batch-id dirs so a replay overwrites instead of
+            # duplicating (effectively-once; see sinks.write_batch_idempotent)
+            trigger_seconds = w.min_upload_seconds
+
+            def deliver(batch_df: DataFrame, batch_id: int) -> int:
+                return sinks.write_batch_idempotent(batch_df, w.path, batch_id,
+                                                    w.format, w.max_file_size_mb)
         else:
             raise ValueError(f"unsupported writer type: {w.type}")
+        writer = sinks.foreach_batch_sink(df, ckpt, deliver, cap=cap, audit=audit)
+        if trigger_seconds:
+            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return writer
 
     def start_all(self, audit_sink=None) -> None:

@@ -511,14 +511,6 @@ def frame_text_blobs(df: DataFrame, content_col: str = "content",
     return df.mapInPandas(gen, schema)
 
 
-def split_messages_expr(col, message_start_regex: str):
-    """Pure-JVM alternative to :func:`frame_text_blobs` for single-line-start
-    regexes: split with a zero-width lookahead so the delimiter is kept.
-    Stays inside WholeStageCodegen — preferred at scale when messages are
-    newline-delimited records."""
-    return F.split(col, f"(?={message_start_regex})")
-
-
 # ---------------------------------------------------------------------------
 # T6/W9 — Kafka-record audit headers, serialized JVM-side.
 # The reference re-serializes each message's LoggingAuditHeaders and adds it

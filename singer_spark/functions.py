@@ -31,11 +31,6 @@ def md5_int(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c.cast("string")), 1, 15), 16, 10).cast("bigint")
 
 
-def md5_int_sql(expr: str) -> str:
-    """DuckDB SQL text equivalent of :func:`md5_int`."""
-    return f"(('0x' || substr(md5(CAST({expr} AS VARCHAR)), 1, 15))::BIGINT)"
-
-
 def windowed_join(arr: Column, start: Column, length, sep: str) -> Column:
     """`array_join(slice(arr, start, length), sep)` rewritten to cost
     O(length) instead of O(len(arr)) — for ATTRIBUTE arrays only.
@@ -108,11 +103,6 @@ def qround(col: Column, digits: int) -> Column:
     return F.floor(col * scale + F.lit(0.5)) / F.lit(scale)
 
 
-def qround_sql(expr: str, digits: int) -> str:
-    scale = 10 ** digits
-    return f"(floor(({expr}) * {scale} + 0.5) / {scale})"
-
-
 def fan_out(df, min_rows_per_part: int = 0):
     """Raise scan parallelism for compute-heavy per-row operators.
 
@@ -166,14 +156,6 @@ def crc32_bytes(col: Column | str) -> Column:
     ``crc32(message)`` on the raw bytes)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.crc32(c.cast("binary"))
-
-
-def murmur3_int(col: Column | str) -> Column:
-    """Spark's `hash` = Murmur3_x86_32, the same family the reference's
-    MurmurByteArrayPartitioner uses (``writer/partitioners/
-    MurmurByteArrayPartitioner.java:40-53``)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.hash(c)
 
 
 # ---------------------------------------------------------------------------

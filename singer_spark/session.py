@@ -20,10 +20,19 @@ import os
 from pyspark.sql import SparkSession
 
 
-def get_spark(app_name: str = "singer_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+def local_sizing(shuffle_partitions: int | None = None) -> tuple[str, int]:
+    """(local master cores, shuffle partitions): `SPARK_GRAFT_CPUS` when
+    set, else this host's `os.cpu_count()`; shuffle partitions default to
+    twice the cores, at least 8."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus) * 2 if cpus.isdigit() else 64, 8)
+        cores = int(cpus) if cpus.isdigit() else os.cpu_count() or 1
+        shuffle_partitions = max(cores * 2, 8)
+    return cpus, shuffle_partitions
+
+
+def get_spark(app_name: str = "singer_spark", shuffle_partitions: int | None = None) -> SparkSession:
+    cpus, shuffle_partitions = local_sizing(shuffle_partitions)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -57,26 +66,6 @@ def get_spark(app_name: str = "singer_spark", shuffle_partitions: int | None = N
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None) -> dict:
-    """Load the TESTDATA parquet tables and register temp views.
-
-    At cluster scale these reads are partitioned parquet scans; Catalyst
-    pushes filters/projections down into them (verify via
-    ``df.explain('formatted')`` → PushedFilters / ReadSchema).
-    """
-    all_names = (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    )
-    out = {}
-    for name in names or all_names:
-        df = read_events(spark, sf_dir) if name == "events" \
-            else spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> "DataFrame":

@@ -13,8 +13,10 @@
   point replaces the reference's producer cache for testing.
 - NoOp sink    (W6): format("noop").
 - Memory sink  (tests): format("memory").
-- Audit        (B5/W9): `with_audit` wraps any batch writer in foreachBatch,
-  emitting one AuditMessage row after each successful sink write.
+- Audit        (B5/W9): every foreachBatch writer is cap? → deliver → audit?
+  (`foreach_batch_sink`).  The delivery pass returns the messages it wrote,
+  and the AuditMessage row carries the sum of the successful tasks' counts,
+  collected after the job succeeds — a failed task attempt is never counted.
 """
 
 from __future__ import annotations
@@ -24,12 +26,13 @@ import os
 import re
 import socket
 import uuid as _uuid
-from typing import Callable
+from itertools import repeat
+from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
-from singer_spark.audit import AuditCollector, make_audit_df
+from singer_spark.audit import AuditCollector, audit_row, make_audit_df
 
 
 # ---------------------------------------------------------------------------
@@ -85,10 +88,45 @@ def file_sink(df: DataFrame, path: str, checkpoint_dir: str, fmt: str = "parquet
 
 
 # ---------------------------------------------------------------------------
-# Kafka direct writer (W1/W3 twin without the Spark Kafka connector) —
-# foreachBatch + a producer protocol, mirroring the reference's
-# writeLogMessagesInBatch: per partition create/borrow one producer, send
-# every row (key/value/headers/partition), flush once, surface per-message
+# Delivery pass shared by the producer-protocol writers: one mapInArrow job
+# per micro-batch.  Each task hands its rows to the writer's send protocol
+# and yields the number of messages it sent; the driver sums those rows only
+# after the job succeeds, so a failed task attempt is never counted — the
+# reference's count-after-successful-write point
+# (writer/KafkaWriter.java:641-693).
+# ---------------------------------------------------------------------------
+def _deliver(batch_df: DataFrame, send_task: Callable[[Iterator[tuple]], int],
+             key_col: str | None, value_col: str,
+             headers_col: str | None = None,
+             partition_col: str | None = None) -> int:
+    """Run `send_task` once per partition of `batch_df` over (key, value,
+    headers, partition) tuples — None where the column is absent or null —
+    and return the messages sent.  Rows cross into Python as Arrow record
+    batches, read with one `to_pylist()` per column (map<string,binary>
+    headers arrive as [(str, bytes)])."""
+    fields = (key_col, value_col, headers_col, partition_col)
+    cols = [c for c in fields
+            if c is not None and (c == value_col or c in batch_df.columns)]
+
+    def run(batches):
+        import pyarrow as pa
+
+        def rows():
+            for b in batches:
+                yield from zip(*(b.column(c).to_pylist() if c in cols
+                                 else repeat(None, b.num_rows) for c in fields))
+
+        yield pa.RecordBatch.from_pydict({"sent": [send_task(rows())]})
+
+    sent = batch_df.select(*cols).mapInArrow(run, "sent long").collect()
+    return sum(r.sent for r in sent)
+
+
+# ---------------------------------------------------------------------------
+# Kafka direct writer (W1/W3 twin without the Spark Kafka connector) — a
+# producer protocol over the delivery pass, mirroring the reference's
+# writeLogMessagesInBatch: per task create/borrow one producer, send every
+# row (key/value/headers/partition), flush once, surface per-message
 # failures so Spark retries the task (writer/KafkaWriter.java:509-622).
 # `producer_factory(bootstrap_servers, configs)` must return an object with
 # `send(topic, value=, key=, headers=, partition=) -> future-like` and
@@ -113,10 +151,11 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
                       key_col: str = "key", value_col: str = "value",
                       headers_col: str = "headers",
                       partition_col: str = "partition",
-                      transactional: bool = False) -> None:
-    """Write one micro-batch through the producer protocol.  Key, headers
-    (map<string,binary> → [(str, bytes)]), and the partitioner-computed
-    partition id ride along when the columns exist.
+                      transactional: bool = False) -> int:
+    """Write one micro-batch through the producer protocol and return the
+    number of messages sent.  Key, headers (map<string,binary> →
+    [(str, bytes)]), and the partitioner-computed partition id ride along
+    when the columns exist.
 
     W2 `transactional` mode (CommittableKafkaWriter parity,
     writer/KafkaWriter.java:514-515,584-585,603-604): each task's sends are
@@ -130,17 +169,10 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
     a committed-offset handshake, which Kafka-side dedup by `_mid` covers."""
     factory = producer_factory or _default_kafka_producer
     configs = producer_configs or {}
-    cols = [c for c in (key_col, value_col, headers_col, partition_col)
-            if c in batch_df.columns]
-    plan = batch_df.select(*cols)
-    has_key = key_col in plan.columns
-    has_headers = headers_col in plan.columns
-    has_partition = partition_col in plan.columns
 
-    def send_partition(rows) -> None:
+    def send_task(rows) -> int:
         producer = factory(bootstrap_servers, configs)
         futures = []
-        n = 0
         in_txn = False
         try:
             if transactional:
@@ -149,31 +181,27 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
                     init()
                 producer.begin_transaction()
                 in_txn = True
-            for row in rows:
-                payload = row[value_col]
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
-                kwargs: dict = {"value": bytes(payload)}
-                if has_key and row[key_col] is not None:
-                    k = row[key_col]
-                    kwargs["key"] = k.encode("utf-8") if isinstance(k, str) else bytes(k)
-                if has_headers and row[headers_col] is not None:
-                    kwargs["headers"] = [(hk, bytes(hv) if hv is not None else None)
-                                         for hk, hv in row[headers_col].items()]
-                if has_partition and row[partition_col] is not None:
-                    kwargs["partition"] = int(row[partition_col])
+            for key, value, headers, partition in rows:
+                kwargs: dict = {"value": value.encode("utf-8")
+                                if isinstance(value, str) else value}
+                if key is not None:
+                    kwargs["key"] = key.encode("utf-8") if isinstance(key, str) else key
+                if headers is not None:
+                    kwargs["headers"] = headers
+                if partition is not None:
+                    kwargs["partition"] = partition
                 futures.append(producer.send(topic, **kwargs))
-                n += 1
             producer.flush()
             failed = [f for f in futures
                       if f is not None and getattr(f, "failed", lambda: False)()]
             if failed:
                 raise RuntimeError(
-                    f"kafka sink: {len(failed)}/{n} sends failed "
+                    f"kafka sink: {len(failed)}/{len(futures)} sends failed "
                     f"(first: {getattr(failed[0], 'exception', None)})")
             if in_txn:
                 producer.commit_transaction()
                 in_txn = False
+            return len(futures)
         except BaseException:
             if in_txn:
                 try:
@@ -186,7 +214,8 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
             if close:
                 close()
 
-    plan.foreachPartition(send_partition)
+    return _deliver(batch_df, send_task, key_col, value_col, headers_col,
+                    partition_col)
 
 
 def kafka_direct_sink(df: DataFrame, bootstrap_servers: str, topic: str,
@@ -201,14 +230,12 @@ def kafka_direct_sink(df: DataFrame, bootstrap_servers: str, topic: str,
     `batch_transform` (optional) maps each micro-batch frame before the
     write — the hook the engine's hot-key cap uses."""
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_transform is not None:
-            batch_df = batch_transform(batch_df)
-        kafka_write_batch(batch_df, bootstrap_servers, topic,
-                          producer_factory, producer_configs,
-                          transactional=transactional)
+    def deliver(batch_df: DataFrame, batch_id: int) -> int:
+        return kafka_write_batch(batch_df, bootstrap_servers, topic,
+                                 producer_factory, producer_configs,
+                                 transactional=transactional)
 
-    return df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(df, checkpoint_dir, deliver, cap=batch_transform)
 
 
 def write_batch_sized(batch_df: DataFrame, path: str, fmt: str = "parquet",
@@ -441,7 +468,7 @@ def compact_dataset(spark, path: str, target_file_mb: float = 256,
 def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
                            fmt: str = "parquet",
                            max_file_size_mb: float | None = None,
-                           value_col: str = "value") -> None:
+                           value_col: str = "value") -> int:
     """Replay-safe micro-batch append: each batch writes (mode=overwrite)
     into its own `batch=<id>` subdirectory, so a foreachBatch retry or a
     post-crash replay of the same batch REPLACES its previous partial output
@@ -449,11 +476,15 @@ def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
     on top of the streaming engine's deterministic batch ids, where a plain
     append is only at-least-once.  Readers just scan `path` (the batch dirs
     read as a partition column `batch`).  Size rollover as in
-    :func:`write_batch_sized`."""
-    target = f"{path}/batch={int(batch_id)}"
+    :func:`write_batch_sized`.  Returns the rows written, observed on the
+    write itself (no separate count job)."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    writer = batch_df.write.mode("overwrite").format(fmt)
+    target = f"{path}/batch={int(batch_id)}"
+    written = Observation()
+    writer = (batch_df.observe(written, F.count(F.lit(1)).alias("n"))
+              .write.mode("overwrite").format(fmt))
     if max_file_size_mb and value_col in batch_df.columns:
         n, total = batch_df.agg(
             F.count("*"), F.sum(F.octet_length(F.col(value_col).cast("binary")))
@@ -464,6 +495,7 @@ def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
                 "maxRecordsPerFile",
                 max(int(max_file_size_mb * 1024 * 1024 / per_row), 1))
     writer.save(target)
+    return written.get["n"]
 
 
 _TOKEN_RE = re.compile(r"\{\{(UUID|TIMESTAMP|HOST|LOGNAME|S)\}\}|%\{([A-Za-z_][A-Za-z0-9_]*)\}")
@@ -529,11 +561,11 @@ def _default_pulsar_client(service_url: str):
 def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
                        client_factory: Callable | None = None,
                        key_col: str = "key", value_col: str = "value",
-                       partition_col: str = "partition") -> None:
-    """Write one (micro-)batch to Pulsar: per partition, open a client,
-    async-send every row, then flush once — the PulsarWriter protocol
-    (send batch + flush + await futures).  Errors raise and fail the task,
-    so Spark's retry/at-least-once semantics apply.
+                       partition_col: str = "partition") -> int:
+    """Write one (micro-)batch to Pulsar and return the number of messages
+    sent: per task, open a client, async-send every row, then flush once —
+    the PulsarWriter protocol (send batch + flush + await futures).  Errors
+    raise and fail the task, so Spark's retry/at-least-once semantics apply.
 
     Custom routing (P11): when the DataFrame carries a `partition` column
     (computed by any PARTITIONER_REGISTRY plugin, the analog of the
@@ -545,23 +577,10 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
     writer/pulsar/PulsarWriter.java:104,152).  Without the column the
     producer's default routing applies (key-hash / round-robin)."""
     factory = client_factory or _default_pulsar_client
-    cols = [c for c in (key_col, value_col, partition_col) if c in batch_df.columns]
-    plan = batch_df.select(*cols)
-    has_key = key_col in plan.columns
-    has_partition = partition_col in plan.columns
 
-    def send_partition(rows) -> None:
+    def send_task(rows) -> int:
         client = factory(service_url)
         producers: dict[str, object] = {}
-
-        def producer_for(row):
-            sub = topic
-            if has_partition and row[partition_col] is not None:
-                sub = f"{topic}-partition-{int(row[partition_col])}"
-            p = producers.get(sub)
-            if p is None:
-                p = producers[sub] = client.create_producer(sub)
-            return p
 
         # pulsar reports per-message failures ONLY through the send callback;
         # flush() returns without raising on failed sends, so a None callback
@@ -576,15 +595,17 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
 
         try:
             n_sent = 0
-            for row in rows:
-                payload = row[value_col]
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
+            for key, value, _headers, partition in rows:
+                sub = topic if partition is None else f"{topic}-partition-{partition}"
+                p = producers.get(sub)
+                if p is None:
+                    p = producers[sub] = client.create_producer(sub)
                 kwargs = {}
-                if has_key and row[key_col] is not None:
-                    k = row[key_col]
-                    kwargs["partition_key"] = k if isinstance(k, str) else bytes(k).decode("utf-8", "replace")
-                producer_for(row).send_async(bytes(payload), on_send, **kwargs)
+                if key is not None:
+                    kwargs["partition_key"] = (key if isinstance(key, str)
+                                               else key.decode("utf-8", "replace"))
+                p.send_async(value.encode("utf-8") if isinstance(value, str) else value,
+                             on_send, **kwargs)
                 n_sent += 1
             for p in producers.values():
                 p.flush()
@@ -592,12 +613,14 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
                 raise RuntimeError(
                     f"pulsar sink: {len(failures)}/{n_sent} sends failed "
                     f"(first: {failures[0]})")
+            return n_sent
         finally:
             close = getattr(client, "close", None)
             if close:
                 close()
 
-    plan.foreachPartition(send_partition)
+    return _deliver(batch_df, send_task, key_col, value_col,
+                    partition_col=partition_col)
 
 
 def pulsar_sink(df: DataFrame, service_url: str, topic: str, checkpoint_dir: str,
@@ -607,13 +630,11 @@ def pulsar_sink(df: DataFrame, service_url: str, topic: str, checkpoint_dir: str
                 ) -> DataStreamWriter:
     """Streaming Pulsar sink via foreachBatch + :func:`pulsar_write_batch`."""
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_transform is not None:
-            batch_df = batch_transform(batch_df)
-        pulsar_write_batch(batch_df, service_url, topic, client_factory,
-                           key_col, value_col)
+    def deliver(batch_df: DataFrame, batch_id: int) -> int:
+        return pulsar_write_batch(batch_df, service_url, topic, client_factory,
+                                  key_col, value_col)
 
-    return df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
+    return foreach_batch_sink(df, checkpoint_dir, deliver, cap=batch_transform)
 
 
 # ---------------------------------------------------------------------------
@@ -631,34 +652,60 @@ def memory_sink(df: DataFrame, name: str, checkpoint_dir: str | None = None) -> 
 
 
 # ---------------------------------------------------------------------------
-# Audit wrapper (B5): foreachBatch = write, then account.
+# foreachBatch writers (B5): cap? → deliver → audit?.
 # ---------------------------------------------------------------------------
+def foreach_batch_sink(df: DataFrame, checkpoint_dir: str,
+                       deliver: Callable[[DataFrame, int], int],
+                       cap: Callable[[DataFrame], DataFrame] | None = None,
+                       audit: Callable[[SparkSession, int, int], None] | None = None,
+                       ) -> DataStreamWriter:
+    """foreachBatch writer composed from hooks: `cap` maps each micro-batch
+    frame before delivery (the engine's hot-key cap), `deliver(batch_df,
+    batch_id)` writes it and returns the messages written, and
+    `audit(spark, n, batch_id)` accounts for them once the write has
+    succeeded (see :func:`auditor`)."""
+
+    def handle(batch_df: DataFrame, batch_id: int) -> None:
+        if cap is not None:
+            batch_df = cap(batch_df)
+        n = deliver(batch_df, batch_id)
+        if audit is not None:
+            audit(batch_df.sparkSession, n, batch_id)
+
+    return df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
+
+
+def auditor(topic: str,
+            audit_sink: AuditCollector | Callable[[DataFrame], None],
+            hostname: str | None = None) -> Callable[[SparkSession, int, int], None]:
+    """Audit hook for :func:`foreach_batch_sink`: one AuditMessage
+    (numMessages = the count the delivery returned) per batch.  An
+    AuditCollector takes the row as a tuple, with no Spark job; any other
+    sink gets it as a one-row DataFrame (:func:`make_audit_df`)."""
+
+    def emit(spark: SparkSession, n: int, batch_id: int) -> None:
+        if isinstance(audit_sink, AuditCollector):
+            audit_sink.append(audit_row(topic, n, batch_id, hostname))
+        else:
+            audit_sink(make_audit_df(spark, topic, n, batch_id, hostname))
+
+    return emit
+
+
 def with_audit(df: DataFrame, topic: str, checkpoint_dir: str,
-               write_batch: Callable[[DataFrame, int], None],
+               write_batch: Callable[[DataFrame, int], int],
                audit_sink: AuditCollector | Callable[[DataFrame], None] | None = None,
                hostname: str | None = None,
                batch_transform: Callable[[DataFrame], DataFrame] | None = None,
                ) -> DataStreamWriter:
-    """writeStream.foreachBatch: run `write_batch`, then emit one
-    AuditMessage(numMessages=batch count) — count-after-successful-write, the
-    reference's accounting point (writer/KafkaWriter.java:641-693).
-    `batch_transform` (the hot-key cap hook) applies BEFORE the write and
-    the count, so the audit reflects delivered rows."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_transform is not None:
-            batch_df = batch_transform(batch_df)
-        batch_df = batch_df.persist()
-        try:
-            n = batch_df.count()
-            write_batch(batch_df, batch_id)
-            if audit_sink is not None:
-                audit_df = make_audit_df(batch_df.sparkSession, topic, n, batch_id, hostname)
-                if isinstance(audit_sink, AuditCollector):
-                    audit_sink.append(audit_df)
-                else:
-                    audit_sink(audit_df)
-        finally:
-            batch_df.unpersist()
-
-    return df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
+    """writeStream.foreachBatch: run `write_batch`, which returns the
+    messages it delivered, then emit one AuditMessage(numMessages=that
+    count).  For the producer writers the count is the sum of the
+    successful tasks' counts, collected after the delivery job succeeds —
+    count-after-successful-write, the reference's accounting point
+    (writer/KafkaWriter.java:641-693); a failed task attempt is never
+    counted.  `batch_transform` (the hot-key cap hook) applies BEFORE the
+    write, so the audit reflects delivered rows."""
+    audit = auditor(topic, audit_sink, hostname) if audit_sink is not None else None
+    return foreach_batch_sink(df, checkpoint_dir, write_batch,
+                              cap=batch_transform, audit=audit)

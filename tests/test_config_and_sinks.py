@@ -9,7 +9,7 @@ import time
 
 from pyspark.sql import functions as F
 
-from singer_spark.audit import AuditCollector, make_audit_df
+from singer_spark.audit import AuditCollector, audit_row, make_audit_df
 from singer_spark.config import (
     LogConfig,
     load_log_config,
@@ -88,8 +88,22 @@ def test_audit_collector_counts(spark):
     audit.append(make_audit_df(spark, "topicA", 10, 0, hostname="h"))
     audit.append(make_audit_df(spark, "topicA", 5, 1, hostname="h"))
     audit.append(make_audit_df(spark, "topicB", 7, 0, hostname="h"))
+    audit.append(audit_row("topicB", 3, 1, hostname="h"))  # no Spark job
     assert audit.total("topicA") == 15
-    assert audit.total() == 22
+    assert audit.total() == 25
+
+
+def test_local_sizing_defaults_to_host_cores(monkeypatch):
+    import os
+
+    from singer_spark.session import local_sizing
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    cores = os.cpu_count()
+    assert local_sizing() == (str(cores), max(2 * cores, 8))
+    assert local_sizing(shuffle_partitions=5) == (str(cores), 5)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert local_sizing() == ("6", 12)
 
 
 def test_write_batch_sized_rolls_over_on_bytes(spark, tmp_path):

@@ -64,10 +64,10 @@ def test_pulsar_write_batch_delivers_all(spark, tmp_path):
         F.col("id").cast("string").alias("key"),
         F.concat(F.lit("msg-"), F.col("id")).alias("value"),
     )
-    pulsar_write_batch(df, "pulsar://fake:6650", "topic-a",
-                       client_factory=make_fake_factory(out_dir))
+    sent = pulsar_write_batch(df, "pulsar://fake:6650", "topic-a",
+                              client_factory=make_fake_factory(out_dir))
     delivered = _read_delivered(out_dir)
-    assert len(delivered) == 100
+    assert sent == len(delivered) == 100
     assert ("7", "msg-7") in delivered
 
 
