@@ -428,7 +428,10 @@ class PipelineManager:
     def run_cycle(self, cfg: LogConfig, audit_sink=None) -> int:
         """One drain-everything-available cycle (Trigger.AvailableNow against
         the log's checkpoint — resumes where the last cycle stopped).
-        Returns the number of input rows processed."""
+        Returns the query's summed `numInputRows`: source rows, which is
+        messages for the line-per-message text and tail readers but FILES
+        for the `binaryFile`-backed readers (`thrift`, multi-line text: one
+        row per file blob)."""
         ckpt = cfg.checkpoint_dir or os.path.join(self.checkpoint_root, cfg.name)
         df = build_transforms(build_source(self.spark, cfg), cfg,
                               pod_fetcher=self._pod_fetcher_for(cfg))

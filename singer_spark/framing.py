@@ -400,35 +400,6 @@ def decode_thrift_blobs(df: DataFrame, content_col: str = "content",
     return df.mapInPandas(gen, LOG_MESSAGE_SCHEMA)
 
 
-def scan_frame_chunks(path: str, chunk_bytes: int) -> list[tuple[int, int]]:
-    """Split a framed-thrift file into ~chunk_bytes slices aligned to frame
-    boundaries, by walking the 4-byte length prefixes (no frame bodies are
-    parsed — the walk is I/O-bound, ~memchr speed, while decode is CPU-bound
-    ~70 MB/s/core; splitting lets a single multi-GB rotated log decode on
-    many cores instead of one).  A truncated tail frame is excluded, same as
-    `decode_frames`."""
-    import mmap
-    import os as _os
-
-    size = _os.path.getsize(path)
-    if size == 0:
-        return [(0, 0)]
-    chunks: list[tuple[int, int]] = []
-    with open(path, "rb") as f, mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ) as mm:
-        start = pos = 0
-        while pos + 4 <= size:
-            (n,) = struct.unpack_from(">I", mm, pos)
-            if pos + 4 + n > size:
-                break  # truncated tail frame
-            pos += 4 + n
-            if pos - start >= chunk_bytes:
-                chunks.append((start, pos))
-                start = pos
-        if pos > start:
-            chunks.append((start, pos))
-    return chunks or [(0, 0)]
-
-
 def decode_file_tolerant(blob: bytes, path: str,
                          max_message_size: int | None = None,
                          base_offset: int = 0) -> list[tuple]:

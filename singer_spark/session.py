@@ -11,13 +11,31 @@ Tested on local[N]; the conf is chosen so the same code runs unchanged on a
   nation, supplier at any SF; customer/part at test SFs) broadcast
   automatically, and query code additionally hints `broadcast()` where the
   dimension is guaranteed small.
+- Python workers run under `singer_spark.worker_daemon` on Python < 3.13.
+  Each Python task starts with `importlib.invalidate_caches()`, which
+  before 3.13 re-reads the central directory of every zip on the worker's
+  `sys.path` (pyspark.zip, the spark-core jar, py4j: ~27k entries,
+  0.16-0.23 s of CPU per task on a 4-vCPU host).  The daemon re-reads an
+  archive only when its mtime or size changed.  3.13 made that call lazy,
+  so there the stock `pyspark.daemon` runs.  Deployment condition:
+  executors' Python must import `singer_spark`, which every UDF that
+  references it already requires; `spark.executorEnv.PYTHONPATH` carries
+  the directory this package was imported from, so a driver started
+  outside the checkout still works on a single host.  A caller-provided
+  session (e.g. the verification driver's own in `__spark_entry__.py`)
+  does not go through `get_spark` and keeps the stock daemon.
 """
 
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
+
+# the directory `singer_spark` is imported from: executors' Python must
+# import it to start the worker daemon (and every UDF that references it)
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def local_sizing(shuffle_partitions: int | None = None) -> tuple[str, int]:
@@ -64,7 +82,11 @@ def get_spark(app_name: str = "singer_spark", shuffle_partitions: int | None = N
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
+    if sys.version_info < (3, 13):
+        builder = builder.config("spark.python.daemon.module",
+                                 "singer_spark.worker_daemon")
     return builder.getOrCreate()
 
 

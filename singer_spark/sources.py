@@ -118,75 +118,6 @@ def thrift_batch(spark: SparkSession, log_dir: str, glob: str = "*",
     return decode_thrift_blobs(df, max_message_size=max_message_size)
 
 
-def thrift_batch_local(spark: SparkSession, log_dir: str, glob: str = "*",
-                       max_message_size: int | None = None,
-                       chunk_bytes: int = 64 * 1024 * 1024) -> DataFrame:
-    """Fast path for agent-local log files (the reference's actual scenario:
-    readers tail files on the host's own disk).
-
-    `thrift_batch` ships whole file blobs JVM→Arrow→Python before decoding —
-    the dominant cost end-to-end.  Here only the *listing* (path slices)
-    crosses into Python; each worker opens its slice directly, so Arrow
-    carries decoded rows once.  ~2-3× higher throughput; requires the path
-    to be readable from the worker (file:// on the same host — true for the
-    log-agent deployment; use `thrift_batch` for object stores).
-
-    Files larger than `chunk_bytes` are split at frame boundaries
-    (`framing.scan_frame_chunks`, run ON the executors) so one multi-GB
-    rotated log decodes across many cores instead of pinning a single task
-    — decode parallelism follows total bytes, not file count."""
-    import fnmatch
-    import os as _os
-
-    import pandas as pd
-
-    from singer_spark.framing import (
-        LOG_MESSAGE_SCHEMA,
-        decode_file_tolerant,
-        scan_frame_chunks,
-    )
-
-    root = log_dir[len("file:"):] if log_dir.startswith("file:") else log_dir
-    paths = sorted(
-        _os.path.join(root, f) for f in _os.listdir(root)
-        if fnmatch.fnmatch(f, glob) and _os.path.isfile(_os.path.join(root, f))
-    )
-    slices: list[tuple[str, int, int]] = []
-    big = [p for p in paths if _os.path.getsize(p) > chunk_bytes]
-    for p in paths:
-        if p not in big:
-            slices.append((p, 0, _os.path.getsize(p)))
-    if big:
-        # boundary scan distributed to executors (length-prefix walk, no
-        # decode); the chunk list coming back is tiny (offsets only)
-        chunk_lists = (
-            spark.sparkContext.parallelize(big, numSlices=len(big))
-            .map(lambda p: [(p, s, e) for s, e in scan_frame_chunks(p, chunk_bytes)])
-            .collect()
-        )
-        for cl in chunk_lists:
-            slices.extend(cl)
-    # one slice per task: decode parallelism follows the slice count exactly
-    # (an RDD with explicit numSlices — AQE cannot coalesce it the way it
-    # collapses a tiny row-count shuffle, which would serialize the decode)
-    listing = spark.createDataFrame(
-        spark.sparkContext.parallelize(slices, numSlices=max(len(slices), 1)),
-        "path string, start long, end long",
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            for path, start, end in zip(pdf["path"], pdf["start"], pdf["end"]):
-                with open(path, "rb") as f:
-                    f.seek(int(start))
-                    blob = f.read(int(end) - int(start))
-                rows = decode_file_tolerant(blob, path, max_message_size,
-                                            base_offset=int(start))
-                yield pd.DataFrame(rows, columns=[f.name for f in LOG_MESSAGE_SCHEMA.fields])
-
-    return listing.mapInPandas(gen, LOG_MESSAGE_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # Kubernetes-style multi-dir discovery (D8): glob over pod log dirs and
 # derive pod metadata from the kubelet path convention, replacing

@@ -18,7 +18,11 @@ would wait for rotation.  This module closes that gap with a
 - **Driver I/O is O(changed files) per trigger.**  A per-inode
   (size, mtime_ns) cache skips the open entirely for files that didn't
   change; only files that grew/shrank are opened (one open computes both
-  the committed end and the fingerprint).
+  the committed end and the fingerprint).  That open's `fstat`, not the
+  listing's stat, names the inode the offset is filed under, so a
+  rename-rotation landing between the two cannot mix two files; a
+  tracked inode missing from the listing costs one more listing, so a
+  file renamed mid-scan keeps its offset.
 - **Truncation is detected by content, not just size.**  Each offset
   carries a CRC-32 of the first min(4 KiB, committed end) bytes; a
   mismatch (copytruncate that regrew PAST the old offset within one
@@ -55,6 +59,7 @@ files are fine; millions of hot files in one dir are not the target shape.
 from __future__ import annotations
 
 import os
+import stat
 import zlib
 from typing import Iterator
 
@@ -80,6 +85,12 @@ def _committed_end_text(f, size: int) -> int:
             return lo + idx + 1
         pos = lo
     return 0
+
+
+def _empty_entry(st: os.stat_result) -> dict:
+    """A scan-cache entry committing nothing yet for the file `st`."""
+    return {"sig": (st.st_size, st.st_mtime_ns), "off": 0, "fp": None,
+            "fplen": 0, "bounds": [], "caught_up": True}
 
 
 class TailPartition(InputPartition):
@@ -404,66 +415,77 @@ class TailStreamReader(DataSourceStreamReader):
                 last_bound = pos
         return pos, bounds
 
-    def _scan_file(self, path: str, st: os.stat_result) -> dict:
-        """(committed end, fingerprint) for one file, via the (size, mtime)
-        cache: an unchanged, caught-up file costs zero opens; a changed (or
-        still-pacing) one costs one open that computes everything.  With
-        `max_bytes_per_trigger` the scan is bounded to the pace budget past
-        the last reported offset, snapped to a line/frame boundary."""
-        ino = str(st.st_ino)
-        sig = (st.st_size, st.st_mtime_ns)
-        cached = self._cache.get(ino)
-        if cached is not None and cached["sig"] == sig and cached.get("caught_up", True):
+    def _cached(self, st: os.stat_result) -> dict | None:
+        """The scan entry for `st`'s inode if its (size, mtime) is unchanged
+        and it is caught up: nothing to open."""
+        cached = self._cache.get(str(st.st_ino))
+        if cached is not None and cached["sig"] == (st.st_size, st.st_mtime_ns) \
+                and cached["caught_up"]:
             return cached
+        return None
+
+    def _scan_file(self, path: str, st: os.stat_result) -> tuple[str, dict]:
+        """(inode, committed end + fingerprint) for one listed file, via the
+        (size, mtime) cache: an unchanged, caught-up file costs zero opens;
+        a changed (or still-pacing) one costs one open that computes
+        everything.  The open comes FIRST and everything is keyed by the
+        handle's `fstat`, never by the listing's stat: a rename-rotation
+        landing between the two must not file the new file's offset and
+        fingerprint under the old inode.  With `max_bytes_per_trigger` the
+        scan is bounded to the pace budget past the last reported offset,
+        snapped to a line/frame boundary."""
+        hit = self._cached(st)
+        if hit is not None:
+            return str(st.st_ino), hit
+        if st.st_size == 0:  # nothing to commit: no open
+            entry = self._cache[str(st.st_ino)] = _empty_entry(st)
+            return str(st.st_ino), entry
+        self.opens += 1
+        with open(path, "rb") as f:
+            st = os.fstat(f.fileno())
+            ino = str(st.st_ino)
+            entry = self._cached(st) or self._scan_open(f, ino, st)
+        self._cache[ino] = entry
+        return ino, entry
+
+    def _scan_open(self, f, ino: str, st: os.stat_result) -> dict:
+        cached = self._cache.get(ino)
         cap = self.max_bytes_per_trigger
         base = self._reported.get(ino, 0)
-        entry = {"sig": sig, "off": 0, "fp": None, "fplen": 0, "bounds": [],
-                 "caught_up": True}
-        if st.st_size > 0:
-            self.opens += 1
-            with open(path, "rb") as f:
-                limit = st.st_size
-                if cap and base + cap < limit:
-                    limit, entry["caught_up"] = base + cap, False
-                start = 0
-                if self.mode != "text" and cached is not None \
-                        and cached["off"] and cached["fp"] is not None:
-                    # resume the walk iff the old prefix is still there
-                    f.seek(0)
-                    head = zlib.crc32(f.read(cached["fplen"])) & 0xFFFFFFFF
-                    if head == cached["fp"] and st.st_size >= cached["off"]:
-                        start = cached["off"]
+        entry = _empty_entry(st)
+        limit = st.st_size
+        if cap and base + cap < limit:
+            limit, entry["caught_up"] = base + cap, False
+        start = 0
+        if self.mode != "text" and cached is not None \
+                and cached["off"] and cached["fp"] is not None:
+            # resume the walk iff the old prefix is still there
+            f.seek(0)
+            head = zlib.crc32(f.read(cached["fplen"])) & 0xFFFFFFFF
+            if head == cached["fp"] and st.st_size >= cached["off"]:
+                start = cached["off"]
 
-                def scan(lim: int) -> None:
-                    if self.mode == "text":
-                        entry["off"] = _committed_end_text(f, lim)
-                    else:
-                        entry["off"], entry["bounds"] = self._walk_frames(f, lim, start)
+        def scan(lim: int) -> None:
+            if self.mode == "text":
+                entry["off"] = _committed_end_text(f, lim)
+            else:
+                entry["off"], entry["bounds"] = self._walk_frames(f, lim, start)
 
-                scan(limit)
-                if not entry["caught_up"] and entry["off"] <= base:
-                    # a single line/frame larger than the pace budget must
-                    # still go through — retry unbounded rather than stall
-                    entry["caught_up"] = True
-                    scan(st.st_size)
-                entry["fp"], entry["fplen"] = self._fingerprint(f, entry["off"])
-        self._cache[ino] = entry
+        scan(limit)
+        if not entry["caught_up"] and entry["off"] <= base:
+            # a single line/frame larger than the pace budget must
+            # still go through — retry unbounded rather than stall
+            entry["caught_up"] = True
+            scan(st.st_size)
+        entry["fp"], entry["fplen"] = self._fingerprint(f, entry["off"])
         return entry
 
-    # -- offsets ----------------------------------------------------------
-    def initialOffset(self) -> dict:
-        return {"files": {}}
-
-    def latestOffset(self) -> dict:
-        """Snapshot the directory: inode → (current path, committed end,
-        prefix fingerprint).  Absolute, not delta — Spark diffs consecutive
-        offsets itself, so a restart needs no reader-side state."""
+    def _list(self) -> dict[str, tuple[str, dict]]:
+        """ino -> (path, scan entry) for every regular file matching the
+        glob."""
         import fnmatch
 
-        files: dict[str, dict] = {}
-        paths: dict[str, str] = {}
-        truncated: dict[str, int] = {}          # ino -> committed bytes lost
-        copies: list[tuple[str, int]] = []      # (source ino, window bytes)
+        listed: dict[str, tuple[str, dict]] = {}
         try:
             names = os.listdir(self.log_dir)
         except FileNotFoundError:
@@ -474,12 +496,36 @@ class TailStreamReader(DataSourceStreamReader):
             p = os.path.join(self.log_dir, name)
             try:
                 st = os.stat(p)
+                if not stat.S_ISREG(st.st_mode):
+                    continue
+                ino, entry = self._scan_file(p, st)
             except OSError:
                 continue  # raced a delete/rotation — next trigger sees truth
-            if not os.path.isfile(p):
-                continue
-            entry = self._scan_file(p, st)
-            ino = str(st.st_ino)
+            listed[ino] = (p, entry)
+        return listed
+
+    # -- offsets ----------------------------------------------------------
+    def initialOffset(self) -> dict:
+        return {"files": {}}
+
+    def latestOffset(self) -> dict:
+        """Snapshot the directory: inode → (current path, committed end,
+        prefix fingerprint).  Absolute, not delta — Spark diffs consecutive
+        offsets itself, so a restart needs no reader-side state."""
+        files: dict[str, dict] = {}
+        paths: dict[str, str] = {}
+        truncated: dict[str, int] = {}          # ino -> committed bytes lost
+        copies: list[tuple[str, int]] = []      # (source ino, window bytes)
+        listed = self._list()
+        if not self._last_files.keys() <= listed.keys():
+            # a tracked file left the listing: deleted, or renamed between
+            # listdir and stat/open (then its old name now holds another
+            # inode).  List once more so a renamed file shows up under its
+            # new name with its offset, instead of vanishing for a trigger
+            # and re-reading from 0 after.  Files already scanned this
+            # trigger cost no second open.
+            listed = self._list()
+        for ino, (p, entry) in listed.items():
             paths[ino] = p
             rec = {"path": p, "off": entry["off"],
                    "fp": entry["fp"], "fplen": entry["fplen"]}
@@ -489,7 +535,7 @@ class TailStreamReader(DataSourceStreamReader):
                 # re-read from 0 (_same_content: equal-length prefixes
                 # compare for free; a differing-length prefix costs one
                 # read of a file this trigger ALREADY opened to scan)
-                if not self._same_content(p, prev, rec):
+                if not self._same_content(ino, p, prev, rec):
                     truncated[ino] = int(prev["off"])
             elif prev is None and rec["off"] > 0:
                 # NEW inode whose prefix equals a tracked stream's committed
@@ -584,12 +630,12 @@ class TailStreamReader(DataSourceStreamReader):
                     best = (ino, window)
         return best
 
-    def _same_content(self, path: str, prev: dict, cur: dict) -> bool:
-        """Is the file at `path` still the one `prev` committed through?
-        Fingerprints compare for free when both prefixes have the same
-        length (the steady state: both ≥ 4 KiB).  A small file that grew
-        past the old prefix needs one driver read of that prefix — only on
-        the trigger where it grew."""
+    def _same_content(self, ino: str, path: str, prev: dict, cur: dict) -> bool:
+        """Is inode `ino` (last listed at `path`) still the file `prev`
+        committed through?  Fingerprints compare for free when both
+        prefixes have the same length (the steady state: both ≥ 4 KiB).  A
+        small file that grew past the old prefix needs one driver read of
+        that prefix — only on the trigger where it grew."""
         if not prev.get("fplen"):
             return True  # nothing was committed — offset 0 either way
         if prev.get("fp") is None:
@@ -597,7 +643,8 @@ class TailStreamReader(DataSourceStreamReader):
         if cur.get("fplen") == prev["fplen"]:
             return cur.get("fp") == prev["fp"]
         try:
-            with open(path, "rb") as f:
+            f, _ = self._open_inode(path, int(ino))
+            with f:
                 head = zlib.crc32(f.read(prev["fplen"])) & 0xFFFFFFFF
             return head == prev["fp"]
         except OSError:
@@ -611,7 +658,7 @@ class TailStreamReader(DataSourceStreamReader):
             s = int(p.get("off", 0))
             e = int(cur["off"])
             path = self._current_path(ino, cur["path"])
-            if s > 0 and not self._same_content(path, p, cur):
+            if s > 0 and not self._same_content(ino, path, p, cur):
                 s = 0  # truncated / truncate-regrown / inode reused: re-read
             if e <= s:
                 # nothing new — including a rate-limited latestOffset that
@@ -636,23 +683,23 @@ class TailStreamReader(DataSourceStreamReader):
         return parts
 
     # -- execution (runs on executors) --------------------------------------
-    def _open_partition(self, partition: TailPartition):
-        """Open the partition's FILE, not just its recorded path: a rotation
-        between planning and execution can rename the file away (recorded
-        path missing) or — worse — put a brand-new file at the recorded
-        name, whose bytes at [start, end) are a different stream.  Verify
-        the inode after open; on mismatch rescan the watched dir for the
-        planned inode (the soak tool reproduces this race within seconds
-        of rename churn).  Inode truly gone (deleted, not rotated): the
-        planned bytes no longer exist anywhere — surface the error rather
-        than silently dropping a committed range."""
+    def _open_inode(self, path: str, want: int):
+        """Open the FILE `want` (an inode; 0 = whatever is at `path`), not
+        just its last known path: a rotation between planning and
+        execution can rename the file away (path missing) or — worse — put
+        a brand-new file at the name, whose bytes at [start, end) are a
+        different stream.  Verify the inode after open; on mismatch rescan
+        the watched dir for the wanted inode (the soak tool reproduces this
+        race within seconds of rename churn).  Inode truly gone (deleted,
+        not rotated): the planned bytes no longer exist anywhere — surface
+        the error rather than silently dropping a committed range.
+        Returns (file, path it was opened at)."""
         import fnmatch
 
-        want = partition.ino
         try:
-            f = open(partition.path, "rb")
+            f = open(path, "rb")
             if not want or os.fstat(f.fileno()).st_ino == want:
-                return f, partition.path
+                return f, path
             f.close()
         except FileNotFoundError:
             if not want:
@@ -674,7 +721,7 @@ class TailStreamReader(DataSourceStreamReader):
             g.close()
         raise FileNotFoundError(
             f"tail partition lost: inode {want} (recorded at "
-            f"{partition.path}) is no longer in {self.log_dir} — file "
+            f"{path}) is no longer in {self.log_dir} — file "
             "deleted between planning and read")
 
     def read(self, partition: TailPartition) -> Iterator[tuple]:
@@ -686,7 +733,7 @@ class TailStreamReader(DataSourceStreamReader):
         if self.mode == "thrift":
             from singer_spark.framing import AUDIT_HEADERS_SCHEMA, decode_file_tolerant
 
-            f, path = self._open_partition(partition)
+            f, path = self._open_inode(partition.path, partition.ino)
             with f:
                 f.seek(start)
                 blob = f.read(end - start)
@@ -696,7 +743,7 @@ class TailStreamReader(DataSourceStreamReader):
                              if audit is not None else None)
                 yield (key, msg, ts, crc, audit_row, path, off)
             return
-        f, path = self._open_partition(partition)
+        f, path = self._open_inode(partition.path, partition.ino)
         with f:
             pos = start
             if start > partition.batch_start:

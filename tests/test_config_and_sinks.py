@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import sys
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from singer_spark.audit import AuditCollector, audit_row, make_audit_df
@@ -104,6 +106,91 @@ def test_local_sizing_defaults_to_host_cores(monkeypatch):
     assert local_sizing(shuffle_partitions=5) == (str(cores), 5)
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
     assert local_sizing() == ("6", 12)
+
+
+def _zip_modules(path, *names):
+    import zipfile
+
+    with zipfile.ZipFile(path, "w") as z:
+        for name in names:
+            z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+def _patched_zip_on_path(monkeypatch, tmp_path):
+    """An archive on sys.path with one imported module, under the worker
+    daemon's `zipimporter.invalidate_caches`."""
+    import importlib
+    import sys
+    import zipimport
+
+    from singer_spark import worker_daemon
+
+    archive = str(tmp_path / "mods.zip")
+    _zip_modules(archive, "zd_mod_a")
+    monkeypatch.syspath_prepend(archive)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        worker_daemon._invalidate_if_changed)
+    for name in ("zd_mod_a", "zd_mod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("zd_mod_a").NAME == "zd_mod_a"
+    return archive
+
+
+def test_worker_daemon_rereads_a_changed_archive(monkeypatch, tmp_path):
+    import importlib
+
+    archive = _patched_zip_on_path(monkeypatch, tmp_path)
+    importlib.invalidate_caches()
+    with pytest.raises(ModuleNotFoundError):
+        importlib.import_module("zd_mod_b")
+    _zip_modules(archive, "zd_mod_a", "zd_mod_b")  # rewritten, one more module
+    importlib.invalidate_caches()
+    assert importlib.import_module("zd_mod_b").NAME == "zd_mod_b"
+
+
+def test_worker_daemon_skips_unchanged_archives(monkeypatch, tmp_path):
+    import importlib
+    import zipimport
+
+    _patched_zip_on_path(monkeypatch, tmp_path)
+    importlib.invalidate_caches()  # first call records the signatures
+    reads = []
+    real = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda archive: reads.append(archive) or real(archive))
+    importlib.invalidate_caches()
+    assert reads == []
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13),
+                    reason="Python 3.13+ runs plain pyspark.daemon")
+def test_python_tasks_run_under_the_worker_daemon(spark):
+    def probe(_):
+        import zipimport
+
+        yield zipimport.zipimporter.invalidate_caches.__name__
+
+    names = spark.sparkContext.parallelize(range(2), 2).mapPartitions(probe)
+    assert names.collect() == ["_invalidate_if_changed"] * 2
+
+
+def test_session_runs_python_tasks_outside_the_checkout(tmp_path):
+    """Executors find `singer_spark` (the worker daemon) without the
+    driver's cwd or a PYTHONPATH."""
+    import os
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    driver = (
+        "import sys; sys.path.insert(0, {repo!r});"
+        "from singer_spark.session import get_spark;"
+        "sc = get_spark('outside_checkout').sparkContext;"
+        "print('SUM', sc.parallelize(range(4), 2).map(lambda x: x + 1).sum())"
+    ).format(repo=repo)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", driver], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert "SUM 10" in out.stdout, out.stderr[-3000:]
 
 
 def test_write_batch_sized_rolls_over_on_bytes(spark, tmp_path):

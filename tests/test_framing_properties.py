@@ -83,38 +83,6 @@ def test_frame_text_lossless_partition(lines):
     assert "".join(framed) == blob
 
 
-@settings(max_examples=100, deadline=None)
-@given(st.lists(st.tuples(message, key, ts), max_size=30),
-       st.integers(min_value=1, max_value=4096))
-def test_chunked_scan_partitions_exactly_and_decodes_identically(msgs, chunk_bytes):
-    """scan_frame_chunks must tile the file exactly (contiguous, boundary-
-    aligned) for ANY frame sizes and chunk size, and per-chunk decoding with
-    base offsets must reproduce the whole-file decode bit-for-bit."""
-    import os
-    import tempfile
-
-    from singer_spark.framing import decode_file_tolerant, scan_frame_chunks
-
-    blob = encode_log_messages([(m, k, t, None) for m, k, t in msgs])
-    with tempfile.NamedTemporaryFile(suffix=".log", delete=False) as f:
-        f.write(blob)
-        path = f.name
-    try:
-        chunks = scan_frame_chunks(path, chunk_bytes)
-        # exact tiling
-        assert chunks[0][0] == 0
-        assert all(a[1] == b[0] for a, b in zip(chunks, chunks[1:]))
-        assert chunks[-1][1] == len(blob)
-        # chunked decode == whole decode (same rows, same absolute offsets)
-        whole = decode_file_tolerant(blob, path)
-        pieces = []
-        for s, e in chunks:
-            pieces.extend(decode_file_tolerant(blob[s:e], path, base_offset=s))
-        assert pieces == whole
-    finally:
-        os.unlink(path)
-
-
 def test_corrupt_string_length_stays_frame_local():
     """A corrupted string-length prefix must never leak the NEXT frame's
     bytes into a message nor copy past the frame end (review r9 #1): the

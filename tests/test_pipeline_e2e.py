@@ -169,42 +169,6 @@ def test_instance_decider_gates_start(spark, tmp_path):
     assert mgr.start_log(cfg) is None  # decider off → query not started
 
 
-def test_thrift_batch_local_matches_blob_path(spark, tmp_path):
-    log_dir = str(tmp_path / "tlogs_local")
-    n = write_thrift_log(log_dir)
-    from singer_spark.sources import thrift_batch_local
-
-    blob_rows = {(bytes(r.key), bytes(r.value), r.timestampInNanos, r.offset)
-                 for r in thrift_batch(spark, log_dir, glob="*.log").collect()}
-    local_rows = {(bytes(r.key), bytes(r.value), r.timestampInNanos, r.offset)
-                  for r in thrift_batch_local(spark, log_dir, glob="*.log").collect()}
-    assert len(local_rows) == n
-    assert blob_rows == local_rows
-
-
-def test_thrift_batch_local_chunked_matches_whole_file(spark, tmp_path):
-    """A file above chunk_bytes must split at frame boundaries and decode
-    identically (same rows, same ABSOLUTE offsets) to the unchunked path."""
-    log_dir = str(tmp_path / "tlogs_chunked")
-    n = write_thrift_log(log_dir, n=400)
-    from singer_spark.framing import scan_frame_chunks
-    from singer_spark.sources import thrift_batch_local
-
-    path = os.path.join(log_dir, "thrift.log")
-    chunks = scan_frame_chunks(path, chunk_bytes=512)
-    assert len(chunks) > 4                       # actually split
-    assert chunks[0][0] == 0
-    assert all(a[1] == b[0] for a, b in zip(chunks, chunks[1:]))  # contiguous
-    assert chunks[-1][1] == os.path.getsize(path)
-
-    whole = {(bytes(r.key), bytes(r.value), r.offset)
-             for r in thrift_batch_local(spark, log_dir).collect()}
-    chunked = {(bytes(r.key), bytes(r.value), r.offset)
-               for r in thrift_batch_local(spark, log_dir, chunk_bytes=512).collect()}
-    assert len(chunked) == n
-    assert whole == chunked
-
-
 def test_max_bytes_per_trigger_bounds_batches(spark, tmp_path):
     """B1 byte-denominated batch cap: 4×10 KB files with a 15 KB cap must
     process as multiple micro-batches, never one 40 KB gulp."""

@@ -306,6 +306,47 @@ def test_tail_replay_reresolves_renamed_path(tmp_path):
     assert [t[0] for t in fresh.read(p)] == ["m1", "m2"]
 
 
+def test_tail_rotation_between_stat_and_open_reads_each_line_once(
+        tmp_path, monkeypatch):
+    """A rename-rotation landing between the listing's stat and the scan's
+    open (app.log -> app.log.1, then a new app.log) must not file the new
+    file's offset and fingerprint under the old inode: two triggers across
+    the race read every line exactly once."""
+    from singer_spark.streaming import tail
+
+    d = str(tmp_path)
+    log = f"{d}/app.log"
+    _append(log, "a1\na2\n")
+    r = _reader(d)
+
+    def trigger(start):
+        end = r.latestOffset()
+        return end, [t[0] for p in r.partitions(start, end) for t in r.read(p)]
+
+    off, lines = trigger(r.initialOffset())
+    _append(log, "a3\na4\n")
+
+    real_stat, rotated = os.stat, []
+
+    def stat_then_rotate(path, *args, **kwargs):
+        st = real_stat(path, *args, **kwargs)
+        if path == log and not rotated:
+            rotated.append(path)
+            os.rename(log, f"{log}.1")
+            _append(log, "b1\n")
+        return st
+
+    monkeypatch.setattr(tail.os, "stat", stat_then_rotate)
+    off, got = trigger(off)
+    monkeypatch.undo()
+    assert rotated
+    lines += got
+    _append(log, "b2\n")
+    off, got = trigger(off)
+    lines += got
+    assert sorted(lines) == ["a1", "a2", "a3", "a4", "b1", "b2"]
+
+
 def test_tail_thrift_mode_exactly_once_across_restart(spark, tmp_path):
     """S2 parity: framed-thrift messages appended to a GROWING file deliver
     incrementally with byte-offset resume; a partial tail frame is held; a
