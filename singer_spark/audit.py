@@ -91,8 +91,8 @@ def audit_events_for_tracked(df: DataFrame, log_name: str | None = None,
 
 class AuditCollector:
     """In-process audit sink for tests / local runs (stands in for the audit
-    Kafka topic).  The production path writes the same rows to a second
-    Kafka sink (sinks.with_audit)."""
+    Kafka topic).  In production the same rows go to any callable audit
+    sink through the writer's audit hook (sinks.auditor)."""
 
     def __init__(self) -> None:
         self.rows: list[tuple] = []

@@ -17,13 +17,16 @@ from pathlib import Path
 @dataclass
 class ReaderConfig:
     # config.thrift:32-88 (LogStreamReaderConfig / Text+ThriftReaderConfig)
-    type: str = "text"                      # text | thrift | tail | tail_thrift
+    # text ≡ tail: lines from the tail reader (per-inode byte offsets,
+    # growing and rotating files); tail_thrift: framed LogMessages from the
+    # same reader; thrift: whole files via binaryFile (sources module doc)
+    type: str = "text"                      # text | tail | tail_thrift | thrift
     message_start_regex: str | None = None  # multi-line framing (S3/S4)
     filter_message_regex: str | None = None # T1
     max_message_size: int = 102400          # common/SingerConfigDef.java:106-107
     # tail readers: per-file per-trigger catch-up budget (0/None = unlimited)
     max_bytes_per_trigger: int | None = None
-    prepend_timestamp: bool = False         # T3
+    prepend_timestamp: bool = False         # T3: the read time
     prepend_hostname: bool = False
     prepend_field_delimiter: str = " "
     # D8: kubernetes pod log streams — parse <ns>_<pod>_<uid> from the
@@ -42,8 +45,6 @@ class TransformerConfig:
     type: str | None = None                 # None | regex
     regex: str | None = None
     modified_message_format: str | None = None
-    append_new_line: bool = False
-    encoding: str = "utf-8"
 
 
 @dataclass
@@ -63,13 +64,11 @@ class WriterConfig:
     local_partitions: list[int] | None = None
     producer_configs: dict[str, str] = field(default_factory=dict)
     # W2: wrap each task's sends in a Kafka transaction
-    # (common.thrift:29-30 transactionEnabled/transactionTimeoutMs)
+    # (common.thrift:29 transactionEnabled)
     transaction_enabled: bool = False
-    transaction_timeout_ms: int = 6000
     # S3/file writer (config.thrift:149-185)
     path: str | None = None
     format: str = "parquet"
-    key_format: str | None = None           # S3 key template
     max_file_size_mb: int = 50
     min_upload_seconds: int = 30
     # audit (loggingaudit_config.thrift)
@@ -88,7 +87,6 @@ class ProcessorConfig:
     max_processing_interval_secs: int = 60  # adaptive backoff ceiling (B3)
     sample_percent: int = 100               # T9 decider percentage
     log_retention_seconds: int = -1         # O5
-    time_slice_ms: int = 864_000_000
     # hot-key guard: per micro-batch, keep at most this many messages per
     # key (queries.cap_events_per_key on the message key, payload value as
     # the fallback key) — the per-record-bound discipline of the
@@ -118,7 +116,6 @@ class SingerConfig:
     logs: list[LogConfig] = field(default_factory=list)
     heartbeat_enabled: bool = True
     heartbeat_interval_secs: int = 60
-    heartbeat_topic: str | None = None
     # instance-level decider sampling (T10): None → always on
     instance_sample_percent: int = 100
     # O4: how often the live config watcher re-checks singer.properties +

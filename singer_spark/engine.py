@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from singer_spark import sinks, sources
-from singer_spark.config import LogConfig, SingerConfig
+from singer_spark.config import LogConfig, ReaderConfig, SingerConfig
 from singer_spark.partitioners import get_partitioner
 from singer_spark.transforms import TransformConfig, apply_transforms, inject_headers
 
@@ -100,40 +100,34 @@ def enforce_retention(log_dir: str, retention_seconds: int,
     return removed
 
 
-def build_source(spark: SparkSession, cfg: LogConfig, streaming: bool = True) -> DataFrame:
-    r = cfg.reader
-    if r.type in ("tail", "tail_thrift"):
-        # sub-file tailing (S7/S2): delivers appended lines (or framed-
-        # thrift LogMessages, type 'tail_thrift') from GROWING files with
-        # per-inode byte offsets — the file source below only sees a file
-        # once it is fully listed
-        from singer_spark.streaming.tail import tail_stream
+def _multiline(r: ReaderConfig) -> bool:
+    """Multi-line framing (S3/S4) still reads whole files through
+    binaryFile; see the sources module docstring."""
+    return r.type == "text" and bool(r.message_start_regex)
 
-        if not streaming:
-            raise ValueError(f"reader type {r.type!r} is streaming-only")
-        if r.type == "tail_thrift":
-            return tail_stream(spark, cfg.log_dir, glob=cfg.log_stream_regex,
-                               mode="thrift", max_message_size=r.max_message_size,
-                               max_bytes_per_trigger=r.max_bytes_per_trigger)
-        return tail_stream(spark, cfg.log_dir, glob=cfg.log_stream_regex,
-                           max_bytes_per_trigger=r.max_bytes_per_trigger)
+
+def build_source(spark: SparkSession, cfg: LogConfig) -> DataFrame:
+    r = cfg.reader
     if r.type == "thrift":
-        fn = sources.thrift_stream if streaming else sources.thrift_batch
-        kwargs = {"max_message_size": r.max_message_size}
-        if streaming:
-            kwargs["max_files_per_trigger"] = cfg.processor.batch_size
-        return fn(spark, cfg.log_dir, glob=cfg.log_stream_regex, **kwargs)
-    if r.message_start_regex:
-        fn = sources.multiline_text_stream if streaming else sources.multiline_text_batch
-        return fn(spark, cfg.log_dir, glob=cfg.log_stream_regex,
-                  message_start_regex=r.message_start_regex)
+        return sources.thrift_stream(spark, cfg.log_dir, glob=cfg.log_stream_regex,
+                                     max_message_size=r.max_message_size,
+                                     max_files_per_trigger=cfg.processor.batch_size)
+    if _multiline(r):
+        return sources.multiline_text_stream(spark, cfg.log_dir, glob=cfg.log_stream_regex,
+                                             message_start_regex=r.message_start_regex)
+    # text, tail and tail_thrift: the tail reader — per-inode byte offsets
+    # over growing and rotating files (S7/S2)
+    from singer_spark.streaming.tail import tail_stream
+
+    mode = "thrift" if r.type == "tail_thrift" else "text"
+    # D8: log_dir is the pods root, one <ns>_<pod>_<uid>/ directory per pod
+    glob = f"*/{cfg.log_stream_regex}" if r.pod_metadata else cfg.log_stream_regex
+    df = tail_stream(spark, cfg.log_dir, glob=glob, mode=mode,
+                     max_message_size=r.max_message_size,
+                     max_bytes_per_trigger=r.max_bytes_per_trigger)
     if r.pod_metadata:
-        # D8: log_dir is the pods root (<ns>_<pod>_<uid>/ convention);
-        # namespace/name/uid columns parse from the path
-        fn = sources.pod_text_stream if streaming else sources.pod_text_batch
-        return fn(spark, cfg.log_dir, log_glob=cfg.log_stream_regex)
-    fn = sources.text_stream if streaming else sources.text_batch
-    return fn(spark, cfg.log_dir, glob=cfg.log_stream_regex)
+        df = sources.with_pod_metadata(df, "file" if mode == "thrift" else "path")
+    return df
 
 
 def build_transforms(df: DataFrame, cfg: LogConfig,
@@ -146,7 +140,8 @@ def build_transforms(df: DataFrame, cfg: LogConfig,
         prepend_hostname=r.prepend_hostname,
         prepend_timestamp_format="yyyy-MM-dd HH:mm:ss" if r.prepend_timestamp else None,
         delimiter=r.prepend_field_delimiter,
-        trim_newline=r.type == "text",
+        # only the multi-line framer keeps line ends; tail rows carry none
+        trim_newline=_multiline(r),
         sample_percent=p.sample_percent,
         max_message_bytes=r.max_message_size,
     )
@@ -429,9 +424,9 @@ class PipelineManager:
         """One drain-everything-available cycle (Trigger.AvailableNow against
         the log's checkpoint — resumes where the last cycle stopped).
         Returns the query's summed `numInputRows`: source rows, which is
-        messages for the line-per-message text and tail readers but FILES
-        for the `binaryFile`-backed readers (`thrift`, multi-line text: one
-        row per file blob)."""
+        messages for the tail reader (`text`, `tail`, `tail_thrift`) but
+        FILES for the `binaryFile`-backed readers (`thrift`, multi-line
+        text: one row per file blob)."""
         ckpt = cfg.checkpoint_dir or os.path.join(self.checkpoint_root, cfg.name)
         df = build_transforms(build_source(self.spark, cfg), cfg,
                               pod_fetcher=self._pod_fetcher_for(cfg))
@@ -639,20 +634,6 @@ class PipelineManager:
                 continue
             actions["restarted"].append(base)
         return actions
-
-    def run_watchers(self, stop_event, interval_secs: float | None = None,
-                     sleep_fn=time.sleep) -> None:
-        """One maintenance loop standing in for the reference's three daemon
-        threads (SingerDirectoryWatcher + MissingDirChecker + restart
-        monitor): poll config changes, start parked logs, restart failed
-        queries — until `stop_event` is set.  Run it in a caller-owned
-        thread; every step is also callable directly (tests do)."""
-        interval = interval_secs or self.config.log_config_poll_interval_secs
-        while not stop_event.is_set():
-            self.poll_config_changes()
-            self.check_missing_dirs()
-            self.supervise_once()
-            sleep_fn(interval)
 
     # -- drain / stop (O3 admin `stop`) -----------------------------------
     def drain(self, timeout_secs: int = 120) -> None:

@@ -24,8 +24,7 @@ Field parity (SingerStatus.java:108-149):
   source's counters-file side channel (fingerprint-mismatch reopens; see
   streaming/tail.py — offsets stay position-only since r8, and the
   reader runs in its own Python worker, so a file under the tempdir is
-  the channel that crosses that boundary; counter-bearing pre-r8
-  checkpointed offsets are still parsed for compat): the measurable
+  the channel that crosses that boundary): the measurable
   width of the at-least-once duplicate window under copytruncate
   rotation, matching the reference's per-stream metric discipline.
 """
@@ -80,27 +79,6 @@ def stuck_threshold(stuck_seconds: float,
     return max(stuck_seconds, 2.0 * statistics.median(gaps) if gaps else 0.0)
 
 
-def _dupes_from_progress(p: dict) -> dict | None:
-    """{reopens, bytes} summed over a progress dict's sources whose
-    endOffset carries the tail reader's duplicate counters; None when no
-    source does.  endOffset arrives as the offset dict's JSON string in
-    progress events (and as a dict in tests)."""
-    reopens = total_bytes = 0
-    found = False
-    for src in p.get("sources") or []:
-        eo = src.get("endOffset")
-        if isinstance(eo, str):
-            try:
-                eo = json.loads(eo)
-            except ValueError:
-                continue
-        if isinstance(eo, dict) and "dupes_suspected" in eo:
-            found = True
-            reopens += int(eo.get("dupes_suspected", 0) or 0)
-            total_bytes += int(eo.get("dupe_bytes", 0) or 0)
-    return {"reopens": reopens, "bytes": total_bytes} if found else None
-
-
 def build_status(spark: SparkSession, started_at: float,
                  hostname: str | None = None,
                  stuck_seconds: float = 300.0,
@@ -133,11 +111,6 @@ def build_status(spark: SparkSession, started_at: float,
             first_seen.pop(str(q.id), None)
         num = int(p.get("numInputRows", 0) or 0)
         kafka_writes[name] = kafka_writes.get(name, 0) + num
-        # compat path: checkpoints written before r8 carry the counters
-        # inside the offset dict; live readers report via READER_COUNTERS
-        dupes = _dupes_from_progress(p)
-        if dupes is not None:
-            duplicates[name] = dupes
         # ONE recentProgress fetch per query per beat — each access is a
         # py4j round-trip materializing up to ~100 progress JSON blobs,
         # and both the latency and the cadence loops read it
@@ -178,21 +151,19 @@ def build_status(spark: SparkSession, started_at: float,
                     stuck += 1
             except ValueError:
                 pass
-    # primary path since r8: tail readers (which run in their own Python
-    # worker process) publish per-stream counters through the
-    # counters-file side channel, keeping streaming offsets
-    # position-only (ADVICE r7 #2); recently-updated entries only, so a
-    # long-lived tempdir doesn't resurrect dead streams, and filtered
-    # to THIS application's namespace so another Spark app run by the
-    # same user doesn't leak its streams into this heartbeat (ADVICE
-    # r8 #2 — readers constructed outside tail_stream carry no ns and
-    # still match)
+    # tail readers (which run in their own Python worker process)
+    # publish per-stream counters through the counters-file side
+    # channel, keeping streaming offsets position-only (ADVICE r7 #2);
+    # recently-updated entries only, so a long-lived tempdir doesn't
+    # resurrect dead streams, and filtered to THIS application's
+    # namespace so another Spark app run by the same user doesn't leak
+    # its streams into this heartbeat (ADVICE r8 #2)
     try:
         from singer_spark.streaming.tail import list_counters
 
         for c in list_counters(ns=spark.sparkContext.applicationId):
-            duplicates.setdefault(c["stream"], {"reopens": c["reopens"],
-                                                "bytes": c["bytes"]})
+            duplicates[c["stream"]] = {"reopens": c["reopens"],
+                                       "bytes": c["bytes"]}
     except ImportError:  # pragma: no cover - tail source always ships
         pass
     return {

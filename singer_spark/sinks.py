@@ -131,8 +131,9 @@ def _deliver(batch_df: DataFrame, send_task: Callable[[Iterator[tuple]], int],
 # `producer_factory(bootstrap_servers, configs)` must return an object with
 # `send(topic, value=, key=, headers=, partition=) -> future-like` and
 # `flush()` — kafka-python's KafkaProducer satisfies this; tests inject a
-# protocol-level fake.  The connector-based `kafka_sink` above remains the
-# preferred path on clusters that ship spark-sql-kafka.
+# protocol-level fake.  The engine runs it as writer.type=kafka_direct; the
+# connector-based `kafka_sink` above remains the preferred path on clusters
+# that ship spark-sql-kafka.
 # ---------------------------------------------------------------------------
 def _default_kafka_producer(bootstrap_servers: str, configs: dict):
     try:
@@ -218,51 +219,20 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
                     partition_col)
 
 
-def kafka_direct_sink(df: DataFrame, bootstrap_servers: str, topic: str,
-                      checkpoint_dir: str,
-                      producer_factory: Callable | None = None,
-                      producer_configs: dict | None = None,
-                      transactional: bool = False,
-                      batch_transform: Callable[[DataFrame], DataFrame] | None = None,
-                      ) -> DataStreamWriter:
-    """Streaming Kafka sink via foreachBatch + :func:`kafka_write_batch` —
-    for environments without the spark-sql-kafka connector JAR.
-    `batch_transform` (optional) maps each micro-batch frame before the
-    write — the hook the engine's hot-key cap uses."""
-
-    def deliver(batch_df: DataFrame, batch_id: int) -> int:
-        return kafka_write_batch(batch_df, bootstrap_servers, topic,
-                                 producer_factory, producer_configs,
-                                 transactional=transactional)
-
-    return foreach_batch_sink(df, checkpoint_dir, deliver, cap=batch_transform)
-
-
-def write_batch_sized(batch_df: DataFrame, path: str, fmt: str = "parquet",
-                      max_file_size_mb: float | None = None,
-                      value_col: str = "value") -> None:
-    """Append one micro-batch with BYTE-based file rollover — fidelity with
-    the reference's maxFileSizeMB (writer/s3/S3Writer.java:371-399), which
-    rolls on accumulated bytes, not row count.
-
-    Spark's only rollover knob is maxRecordsPerFile (rows), so estimate
-    bytes/row from THIS batch's payload column and convert: records =
-    maxFileSizeMB / avg_row_bytes.  With variable message sizes the
+def _records_per_file(df: DataFrame, col: str, max_file_mb: float) -> int | None:
+    """maxRecordsPerFile for files of about `max_file_mb`: Spark's only
+    rollover knob counts rows, so estimate bytes/row from THIS frame's `col`
+    payload — fidelity with the reference's byte-based maxFileSizeMB
+    (writer/s3/S3Writer.java:371-399).  With variable message sizes the
     per-batch estimate tracks the actual payload instead of drifting the way
-    a fixed row count does."""
+    a fixed row count does.  None for an empty frame."""
     from pyspark.sql import functions as F
 
-    if max_file_size_mb and value_col in batch_df.columns:
-        n, total = batch_df.agg(
-            F.count("*"), F.sum(F.octet_length(F.col(value_col).cast("binary")))
-        ).first()
-        if n and total:
-            per_row = max(total / n, 1.0)
-            records = max(int(max_file_size_mb * 1024 * 1024 / per_row), 1)
-            (batch_df.write.option("maxRecordsPerFile", records)
-             .mode("append").format(fmt).save(path))
-            return
-    batch_df.write.mode("append").format(fmt).save(path)
+    n, total = df.agg(F.count("*"),
+                      F.sum(F.octet_length(F.col(col).cast("binary")))).first()
+    if not (n and total):
+        return None
+    return max(int(max_file_mb * 1024 * 1024 / max(total / n, 1.0)), 1)
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 16):
@@ -324,10 +294,10 @@ def write_dataset(df: DataFrame, path: str,
       binary search over files.  Range partitioning samples the data for
       balanced splits (skew-resistant where hash partitioning on a hot
       sort key is not).
-    - `target_file_mb` (+ optional `size_col` payload estimator, same
-      estimate-from-data approach as :func:`write_batch_sized`): converts
-      to maxRecordsPerFile so one misconfigured writer can't emit a
-      10 GB file or a million 1 KB files.
+    - `target_file_mb` (+ optional `size_col` payload estimator, see
+      :func:`_records_per_file`): converts to maxRecordsPerFile so one
+      misconfigured writer can't emit a 10 GB file or a million 1 KB
+      files.
 
     `sort_by` without `partition_by` lays out the whole dataset as one
     range-ordered sequence; with both, the range shuffle is keyed on
@@ -362,18 +332,12 @@ def write_dataset(df: DataFrame, path: str,
         if zcol:  # derived key orders the layout but is not published
             out = out.drop(zcol)
     writer = out.write.mode(mode).format(fmt)
-    if target_file_mb:
-        est_col = size_col or next(
-            (c for c, t in df.dtypes if t in ("string", "binary")), None)
-        if est_col is not None:
-            n, total = df.agg(
-                F.count("*"),
-                F.sum(F.octet_length(F.col(est_col).cast("binary")))).first()
-            if n and total:
-                per_row = max(total / n, 1.0)
-                writer = writer.option(
-                    "maxRecordsPerFile",
-                    max(int(target_file_mb * 1024 * 1024 / per_row), 1))
+    est_col = size_col or next(
+        (c for c, t in df.dtypes if t in ("string", "binary")), None)
+    if target_file_mb and est_col is not None:
+        records = _records_per_file(df, est_col, target_file_mb)
+        if records:
+            writer = writer.option("maxRecordsPerFile", records)
     if parts:
         writer = writer.partitionBy(*parts)
     writer.save(path)
@@ -475,9 +439,9 @@ def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
     instead of appending a duplicate copy — effectively-once file delivery
     on top of the streaming engine's deterministic batch ids, where a plain
     append is only at-least-once.  Readers just scan `path` (the batch dirs
-    read as a partition column `batch`).  Size rollover as in
-    :func:`write_batch_sized`.  Returns the rows written, observed on the
-    write itself (no separate count job)."""
+    read as a partition column `batch`).  `max_file_size_mb` rolls files
+    over on payload bytes (:func:`_records_per_file`).  Returns the rows
+    written, observed on the write itself (no separate count job)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -486,14 +450,9 @@ def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
     writer = (batch_df.observe(written, F.count(F.lit(1)).alias("n"))
               .write.mode("overwrite").format(fmt))
     if max_file_size_mb and value_col in batch_df.columns:
-        n, total = batch_df.agg(
-            F.count("*"), F.sum(F.octet_length(F.col(value_col).cast("binary")))
-        ).first()
-        if n and total:
-            per_row = max(total / n, 1.0)
-            writer = writer.option(
-                "maxRecordsPerFile",
-                max(int(max_file_size_mb * 1024 * 1024 / per_row), 1))
+        records = _records_per_file(batch_df, value_col, max_file_size_mb)
+        if records:
+            writer = writer.option("maxRecordsPerFile", records)
     writer.save(target)
     return written.get["n"]
 
@@ -542,7 +501,7 @@ def render_key_template(template: str, log_name: str = "", filename: str = "",
 # ---------------------------------------------------------------------------
 # Pulsar sink (W4) — parity with the reference's PulsarWriter (async send
 # batch → flush → await; producer reuse per task).  OSS Spark has no Pulsar
-# connector, so this is a foreachBatch sink over the pulsar-client library
+# connector, so this is a foreachBatch writer over the pulsar-client library
 # (import-gated); `client_factory(service_url)` must return an object with
 # `create_producer(topic)` → producer exposing `send_async(data, callback,
 # partition_key=...)` and `flush()` — the real pulsar.Client satisfies this.
@@ -623,20 +582,6 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
                     partition_col=partition_col)
 
 
-def pulsar_sink(df: DataFrame, service_url: str, topic: str, checkpoint_dir: str,
-                client_factory: Callable | None = None,
-                key_col: str = "key", value_col: str = "value",
-                batch_transform: Callable[[DataFrame], DataFrame] | None = None,
-                ) -> DataStreamWriter:
-    """Streaming Pulsar sink via foreachBatch + :func:`pulsar_write_batch`."""
-
-    def deliver(batch_df: DataFrame, batch_id: int) -> int:
-        return pulsar_write_batch(batch_df, service_url, topic, client_factory,
-                                  key_col, value_col)
-
-    return foreach_batch_sink(df, checkpoint_dir, deliver, cap=batch_transform)
-
-
 # ---------------------------------------------------------------------------
 # NoOp (W6) and memory (test) sinks.
 # ---------------------------------------------------------------------------
@@ -690,22 +635,3 @@ def auditor(topic: str,
             audit_sink(make_audit_df(spark, topic, n, batch_id, hostname))
 
     return emit
-
-
-def with_audit(df: DataFrame, topic: str, checkpoint_dir: str,
-               write_batch: Callable[[DataFrame, int], int],
-               audit_sink: AuditCollector | Callable[[DataFrame], None] | None = None,
-               hostname: str | None = None,
-               batch_transform: Callable[[DataFrame], DataFrame] | None = None,
-               ) -> DataStreamWriter:
-    """writeStream.foreachBatch: run `write_batch`, which returns the
-    messages it delivered, then emit one AuditMessage(numMessages=that
-    count).  For the producer writers the count is the sum of the
-    successful tasks' counts, collected after the delivery job succeeds —
-    count-after-successful-write, the reference's accounting point
-    (writer/KafkaWriter.java:641-693); a failed task attempt is never
-    counted.  `batch_transform` (the hot-key cap hook) applies BEFORE the
-    write, so the audit reflects delivered rows."""
-    audit = auditor(topic, audit_sink, hostname) if audit_sink is not None else None
-    return foreach_batch_sink(df, checkpoint_dir, write_batch,
-                              cap=batch_transform, audit=audit)

@@ -1,25 +1,27 @@
 """Sources — reference parity for SURVEY.md §2.1 (S1-S9) and §2.2 discovery.
 
-The reference's ~2.5 kLoC of readers + inotify discovery collapses onto
-Spark's file sources: the streaming file source re-lists the directory every
-micro-batch (replacing FileSystemMonitor/WatchService, D3-D7), tracks seen
-files in the checkpoint (replacing inode watermark files), and new/rotated
-files appear as new inputs (replacing DefaultLogStreamReader's rotation
-handling, S7).
+One file-reading model: the tail reader (`streaming.tail`), which keys each
+file position by inode and byte offset like the reference's LogPosition.
+`reader.type` text and tail (lines) and tail_thrift (framed LogMessages) all
+run on it, and so does `reader.pod_metadata` (a ``*/<glob>`` over the pod
+log directories, pod columns parsed from `path`).  It delivers lines
+appended to a growing file and keeps its offset across rename rotation and
+restart.
 
-Two source families, each in batch and streaming form:
+Two readers still ship whole files through Spark's `binaryFile` source,
+each seeing a file once, when it is first listed:
 
-- text    — newline or messageStartRegex framed (S3/S4)
-- thrift  — TFramedTransport+TBinaryProtocol LogMessage files (S1/S2),
-            decoded by singer_spark.framing
+- `thrift_stream` (``reader.type=thrift``, S1/S2) — `engine.run_cycle`
+  counts its input rows as files, and the benchmark pins that count, so it
+  moves to the tail reader together with that pin;
+- `multiline_text_stream` (``message_start_regex``, S3/S4) — the tail
+  reader has no rule yet for ending the last message of a rotated file.
 
 `pathGlobFilter` plays the role of the reference's logStreamRegex
-(common/LogStream.java); `input_file_name()` / binaryFile's `path` column
-carries file identity for headers + message ids.
-
-Scale notes: maxFilesPerTrigger bounds a micro-batch like the reference's
-batchSize (B1); `latestFirst=false` keeps oldest-first ordering, matching
-LogStream's (mtime, reversed-name) sort (common/LogStream.java:179-184).
+(common/LogStream.java); `maxFilesPerTrigger` bounds a micro-batch like the
+reference's batchSize (B1); `latestFirst=false` keeps oldest-first
+ordering, matching LogStream's (mtime, reversed-name) sort
+(common/LogStream.java:179-184).
 """
 
 from __future__ import annotations
@@ -33,109 +35,53 @@ from singer_spark.framing import decode_thrift_blobs, frame_text_blobs
 _BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
 
 
-# ---------------------------------------------------------------------------
-# Text sources (S3/S4)
-# ---------------------------------------------------------------------------
-def text_stream(spark: SparkSession, log_dir: str, glob: str = "*",
-                max_files_per_trigger: int | None = None,
-                max_bytes_per_trigger: int | None = None) -> DataFrame:
-    """Streaming line-per-message text source. Columns: value, file."""
+def _binary_file_stream(spark: SparkSession, log_dir: str, glob: str,
+                        max_files_per_trigger: int | None = None) -> DataFrame:
     reader = (
-        spark.readStream.format("text")
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_SCHEMA)
         .option("pathGlobFilter", glob)
         .option("latestFirst", "false")
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if max_bytes_per_trigger:
-        # byte-denominated batch cap (B1's batchSize in bytes): keeps a
-        # micro-batch's memory bounded when file sizes vary wildly
-        reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
-    return reader.load(log_dir).withColumn("file", F.input_file_name())
-
-
-def text_batch(spark: SparkSession, log_dir: str, glob: str = "*") -> DataFrame:
-    return (
-        spark.read.format("text").option("pathGlobFilter", glob).load(log_dir)
-        .withColumn("file", F.input_file_name())
-    )
+    return reader.load(log_dir)
 
 
 def multiline_text_stream(spark: SparkSession, log_dir: str, glob: str = "*",
-                          message_start_regex: str | None = None,
-                          max_files_per_trigger: int | None = None,
-                          max_bytes_per_trigger: int | None = None) -> DataFrame:
+                          message_start_regex: str | None = None) -> DataFrame:
     """Streaming multi-line framed text source: whole files via binaryFile,
     framed by messageStartRegex inside each file so messages never straddle
     batch boundaries. Columns: value, file, offset."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", glob)
-        .option("latestFirst", "false")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if max_bytes_per_trigger:
-        # byte-denominated batch cap (B1's batchSize in bytes): keeps a
-        # micro-batch's memory bounded when file sizes vary wildly
-        reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
-    return frame_text_blobs(reader.load(log_dir), message_start_regex=message_start_regex)
+    return frame_text_blobs(_binary_file_stream(spark, log_dir, glob),
+                            message_start_regex=message_start_regex)
 
 
-def multiline_text_batch(spark: SparkSession, log_dir: str, glob: str = "*",
-                         message_start_regex: str | None = None) -> DataFrame:
-    df = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(log_dir)
-    return frame_text_blobs(df, message_start_regex=message_start_regex)
-
-
-# ---------------------------------------------------------------------------
-# Thrift sources (S1/S2)
-# ---------------------------------------------------------------------------
 def thrift_stream(spark: SparkSession, log_dir: str, glob: str = "*",
                   max_message_size: int | None = None,
-                  max_files_per_trigger: int | None = None,
-                  max_bytes_per_trigger: int | None = None) -> DataFrame:
+                  max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming framed-thrift LogMessage source. Columns: LOG_MESSAGE_SCHEMA."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", glob)
-        .option("latestFirst", "false")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if max_bytes_per_trigger:
-        # byte-denominated batch cap (B1's batchSize in bytes): keeps a
-        # micro-batch's memory bounded when file sizes vary wildly
-        reader = reader.option("maxBytesPerTrigger", str(max_bytes_per_trigger))
-    return decode_thrift_blobs(reader.load(log_dir), max_message_size=max_message_size)
-
-
-def thrift_batch(spark: SparkSession, log_dir: str, glob: str = "*",
-                 max_message_size: int | None = None) -> DataFrame:
-    df = spark.read.format("binaryFile").option("pathGlobFilter", glob).load(log_dir)
-    return decode_thrift_blobs(df, max_message_size=max_message_size)
+    return decode_thrift_blobs(
+        _binary_file_stream(spark, log_dir, glob, max_files_per_trigger),
+        max_message_size=max_message_size)
 
 
 # ---------------------------------------------------------------------------
-# Kubernetes-style multi-dir discovery (D8): glob over pod log dirs and
-# derive pod metadata from the kubelet path convention, replacing
-# KubeService+PodWatcher.  The kubelet names each pod's log directory
-# `<namespace>_<pod-name>_<pod-uid>` (underscores are safe separators —
-# DNS-1123 names cannot contain them), which is exactly the metadata the
-# reference fetches from the kubelet API and injects as message headers.
+# Kubernetes-style multi-dir discovery (D8): the tail reader globs over pod
+# log dirs (``*/<glob>``) and the pod metadata comes from the kubelet path
+# convention, replacing KubeService+PodWatcher.  The kubelet names each
+# pod's log directory `<namespace>_<pod-name>_<pod-uid>` (underscores are
+# safe separators — DNS-1123 names cannot contain them), which is exactly
+# the metadata the reference fetches from the kubelet API and injects as
+# message headers.
 # Reference: kubernetes/KubeService.java:232-289, PodMetadataFetcher.java.
 # ---------------------------------------------------------------------------
-_POD_DIR_PATTERN = r".*/pods/([^/]+)/.*"
-
-
-def with_pod_metadata(df: DataFrame,
-                      pod_dir_pattern: str = _POD_DIR_PATTERN) -> DataFrame:
-    """Add pod_namespace / pod_name / pod_uid columns parsed from the file
-    path.  A directory without the 3-part convention yields null namespace/
-    name and the whole directory name as uid (bare-uid layouts)."""
-    dirpart = F.regexp_extract(F.col("file"), pod_dir_pattern, 1)
+def with_pod_metadata(df: DataFrame, path_col: str = "path") -> DataFrame:
+    """Add pod_namespace / pod_name / pod_uid columns parsed from the name
+    of the directory holding each row's file.  A directory without the
+    3-part convention yields null namespace/name and the whole directory
+    name as uid (bare-uid layouts)."""
+    dirpart = F.regexp_extract(F.col(path_col), r"([^/]+)/[^/]+$", 1)
     parts = F.split(dirpart, "_")
     has3 = F.size(parts) >= 3
     return (
@@ -157,20 +103,6 @@ def pod_headers():
         "podName": F.col("pod_name").cast("binary"),
         "podUid": F.col("pod_uid").cast("binary"),
     }
-
-
-def pod_text_stream(spark: SparkSession, pods_root: str, log_glob: str = "*.log",
-                    pod_dir_pattern: str = _POD_DIR_PATTERN) -> DataFrame:
-    """Tail `<pods_root>/<ns>_<pod>_<uid>/*.log` for all pods at once with
-    namespace/name/uid columns derived from the path."""
-    return with_pod_metadata(text_stream(spark, f"{pods_root}/*", glob=log_glob),
-                             pod_dir_pattern)
-
-
-def pod_text_batch(spark: SparkSession, pods_root: str, log_glob: str = "*.log",
-                   pod_dir_pattern: str = _POD_DIR_PATTERN) -> DataFrame:
-    return with_pod_metadata(text_batch(spark, f"{pods_root}/*", glob=log_glob),
-                             pod_dir_pattern)
 
 
 # ---------------------------------------------------------------------------

@@ -47,17 +47,22 @@ Modes: ``mode=text`` (default) yields (value string, path, pos);
 (reader/ThriftLogFileReader.java:91-175) and yields the LOG_MESSAGE columns
 (key, value, timestampInNanos, checksum, auditHeaders, file, offset).
 
+Globs match file names with fnmatch in `log_dir`, or one directory level
+down (``*/app.log``, the pod-log layout).  Bytes are read as written, so
+the glob must not match compressed (``.gz``) rotations — as in Singer.
+
 Deployment envelope (matches the reference's log-agent model): the log
 directory must be readable by driver AND executors — a single-host
-`local[*]` agent or a shared filesystem.  On a multi-node cluster over
-node-local disks the executor opens fail; use the batch sources over
-rotated files instead.  Per-trigger driver cost is one listdir + one stat
-per matching file + one open per CHANGED file — thousands of mostly-idle
-files are fine; millions of hot files in one dir are not the target shape.
+`local[*]` agent or a shared filesystem; over node-local disks on a
+multi-node cluster the executor opens fail.  Per-trigger driver cost is
+one listdir (per subdirectory with a ``*/`` glob) + one stat per matching
+file + one open per CHANGED file — thousands of mostly-idle files are
+fine; millions of hot files in one dir are not the target shape.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import os
 import stat
 import zlib
@@ -91,6 +96,24 @@ def _empty_entry(st: os.stat_result) -> dict:
     """A scan-cache entry committing nothing yet for the file `st`."""
     return {"sig": (st.st_size, st.st_mtime_ns), "off": 0, "fp": None,
             "fplen": 0, "bounds": [], "caught_up": True}
+
+
+def _names(d: str, pattern: str) -> list[str]:
+    try:
+        return [n for n in os.listdir(d) if fnmatch.fnmatch(n, pattern)]
+    except (FileNotFoundError, NotADirectoryError):
+        return []
+
+
+def _matching(log_dir: str, glob: str) -> list[str]:
+    """Sorted paths in `log_dir` whose names match `glob` (fnmatch, hidden
+    names included).  One directory level is allowed: ``*/app.log``
+    matches ``app.log`` in every subdirectory — the pod-log layout
+    ``<pods_root>/<ns>_<pod>_<uid>/<file>``."""
+    dirs_glob, _, names_glob = glob.rpartition("/")
+    dirs = ([os.path.join(log_dir, d) for d in _names(log_dir, dirs_glob)]
+            if dirs_glob else [log_dir])
+    return sorted(os.path.join(d, n) for d in dirs for n in _names(d, names_glob))
 
 
 class TailPartition(InputPartition):
@@ -220,13 +243,9 @@ def _gc_counters(max_age_secs: float = 3600.0,
 
 def _scan_counters(max_age_secs: float, ns: "str | None") -> "list[dict]":
     """All recent counter records, newest-mtime first.  ns=None matches
-    everything; a concrete ns matches that namespace PLUS empty-ns
-    records.  DEPRECATED back-compat, scheduled for removal: since r10
-    every reader emits a non-empty ns (tail_stream passes the app id;
-    direct readStream.format users get a private `_local:` namespace),
-    so the empty-ns match only fires for counter files written by
-    pre-r10 readers still on disk — it ages out with them (GC hard-cap
-    7 days) and the `""` arm can then be dropped."""
+    everything; a concrete ns matches that namespace only (every reader
+    writes one: tail_stream passes the app id, direct readStream.format
+    users get a private `_local:` namespace)."""
     import json
     import time
 
@@ -246,7 +265,7 @@ def _scan_counters(max_age_secs: float, ns: "str | None") -> "list[dict]":
             with open(p) as f:
                 c = json.load(f)
             c_ns = str(c.get("ns", ""))
-            if ns is not None and c_ns not in (ns, ""):
+            if ns is not None and c_ns != ns:
                 continue
             recs.append({"stream": str(c.get("stream", name)), "ns": c_ns,
                          "reopens": int(c.get("reopens", 0)),
@@ -279,10 +298,8 @@ def list_counters(max_age_secs: float = 900.0,
     record per stream, entries idle past max_age_secs skipped (a
     tempdir outlives the queries that wrote it).  Pass the Spark
     application id as `ns` to exclude OTHER applications' streams
-    (ADVICE r8 #2) — since r10 ALL readers emit a namespace, so the
-    exclusion covers direct readStream.format users too (they get a
-    private `_local:` ns; only deprecated pre-r10 empty-ns files still
-    match every app until the GC hard-cap ages them out)."""
+    (ADVICE r8 #2) — direct readStream.format users included (they get a
+    private `_local:` ns)."""
     out, seen = [], set()
     for c in _scan_counters(max_age_secs, ns):
         if c["stream"] in seen:
@@ -299,6 +316,8 @@ class TailStreamReader(DataSourceStreamReader):
         if not self.log_dir:
             raise ValueError("singer_tail requires option 'path' (the log dir)")
         self.glob = options.get("glob", "*")
+        if self.glob.count("/") > 1:
+            raise ValueError(f"singer_tail glob allows one directory level, got {self.glob}")
         self.mode = options.get("mode", "text")
         if self.mode not in ("text", "thrift"):
             raise ValueError(f"singer_tail mode must be text|thrift, got {self.mode}")
@@ -356,9 +375,8 @@ class TailStreamReader(DataSourceStreamReader):
         self._counters_token = uuid.uuid4().hex[:12]
         # ns is ALWAYS emitted (r9 task #7): a reader constructed without
         # `counters_ns` (direct readStream.format user) gets a private
-        # `_local:<token>` namespace instead of the old empty string, so
-        # it can never leak into ANOTHER application's heartbeat via the
-        # empty-ns back-compat match.  Its counters stay reachable with
+        # `_local:<token>` namespace, so it never appears in ANOTHER
+        # application's heartbeat.  Its counters stay reachable with
         # ns=None (match-everything) or read_counters on its stream key;
         # pass counters_ns=<applicationId> to appear in an app's status.
         self._counters_ns = (options.get("counters_ns")
@@ -483,17 +501,8 @@ class TailStreamReader(DataSourceStreamReader):
     def _list(self) -> dict[str, tuple[str, dict]]:
         """ino -> (path, scan entry) for every regular file matching the
         glob."""
-        import fnmatch
-
         listed: dict[str, tuple[str, dict]] = {}
-        try:
-            names = os.listdir(self.log_dir)
-        except FileNotFoundError:
-            names = []
-        for name in sorted(names):
-            if not fnmatch.fnmatch(name, self.glob):
-                continue
-            p = os.path.join(self.log_dir, name)
+        for p in _matching(self.log_dir, self.glob):
             try:
                 st = os.stat(p)
                 if not stat.S_ISREG(st.st_mode):
@@ -580,19 +589,11 @@ class TailStreamReader(DataSourceStreamReader):
         if p is not None:
             return p
         if not self._paths:  # replay before any latestOffset: scan once
-            import fnmatch
-
-            try:
-                for name in os.listdir(self.log_dir):
-                    if not fnmatch.fnmatch(name, self.glob):
-                        continue
-                    q = os.path.join(self.log_dir, name)
-                    try:
-                        self._paths[str(os.stat(q).st_ino)] = q
-                    except OSError:
-                        continue
-            except FileNotFoundError:
-                pass
+            for q in _matching(self.log_dir, self.glob):
+                try:
+                    self._paths[str(os.stat(q).st_ino)] = q
+                except OSError:
+                    continue
             p = self._paths.get(ino)
         return p or recorded
 
@@ -651,6 +652,17 @@ class TailStreamReader(DataSourceStreamReader):
             return True  # gone between plan and read — executor sees truth
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
+        if "files" not in start:
+            # a checkpoint written by another source — Spark's text file
+            # source (`reader.type=text` before it ran on this reader)
+            # stores {"logOffset": N}.  Reading it as "nothing committed"
+            # would re-deliver every retained file from offset 0.
+            raise ValueError(
+                f"singer_tail cannot resume this query's checkpoint: its "
+                f"offset {start} was written by another source (Spark's "
+                f"file source) and holds no per-inode positions for "
+                f"{self.log_dir}. Start the query on a fresh checkpoint "
+                f"directory (move or delete the old checkpointLocation).")
         parts: list[InputPartition] = []
         prev = start.get("files", {})
         for ino, cur in end.get("files", {}).items():
@@ -694,8 +706,6 @@ class TailStreamReader(DataSourceStreamReader):
         not rotated): the planned bytes no longer exist anywhere — surface
         the error rather than silently dropping a committed range.
         Returns (file, path it was opened at)."""
-        import fnmatch
-
         try:
             f = open(path, "rb")
             if not want or os.fstat(f.fileno()).st_ino == want:
@@ -704,14 +714,7 @@ class TailStreamReader(DataSourceStreamReader):
         except FileNotFoundError:
             if not want:
                 raise
-        try:
-            names = os.listdir(self.log_dir)
-        except FileNotFoundError:
-            names = []
-        for name in names:
-            if not fnmatch.fnmatch(name, self.glob):
-                continue
-            q = os.path.join(self.log_dir, name)
+        for q in _matching(self.log_dir, self.glob):
             try:
                 g = open(q, "rb")
             except OSError:

@@ -167,17 +167,19 @@ class TransformConfig:
 
 
 def apply_transforms(df: DataFrame, cfg: TransformConfig, text_col: str = "value",
-                     ts_col: str | None = None, key_col: str | None = None) -> DataFrame:
+                     key_col: str | None = None) -> DataFrame:
     """Compose the full T1-T11 chain in reference order:
-    filter → transform → prepend → trim → sample → oversize-drop → headers."""
+    filter → transform → prepend → trim → sample → oversize-drop → headers.
+    The prepended timestamp is the read time: the micro-batch's
+    current_timestamp."""
     out = df
     if cfg.filter_regex:
         out = filter_message_regex(out, text_col, cfg.filter_regex)
     if cfg.modifier_regex and cfg.modifier_template is not None:
         out = out.withColumn(text_col, regex_based_modifier(text_col, cfg.modifier_regex, cfg.modifier_template))
     prefixes: list[Column] = []
-    if cfg.prepend_timestamp_format and ts_col:
-        prefixes.append(F.date_format(F.col(ts_col), cfg.prepend_timestamp_format))
+    if cfg.prepend_timestamp_format:
+        prefixes.append(F.date_format(F.current_timestamp(), cfg.prepend_timestamp_format))
     if cfg.prepend_hostname:
         prefixes.append(F.lit(cfg.hostname))
     if prefixes:

@@ -199,17 +199,17 @@ def test_write_batch_sized_rolls_over_on_bytes(spark, tmp_path):
     generous cap writes few."""
     import glob
 
-    from singer_spark.sinks import write_batch_sized
+    from singer_spark.sinks import write_batch_idempotent
 
     df = spark.range(100).select(
         F.rpad(F.col("id").cast("string"), 1024, "x").alias("value")).coalesce(1)
     small = str(tmp_path / "small")
     # ~100 KiB of payload with a cap ~10 KiB → ≥ 5 files
-    write_batch_sized(df, small, "parquet", max_file_size_mb=0.01)
-    assert len(glob.glob(f"{small}/part-*")) >= 5
+    assert write_batch_idempotent(df, small, 0, "parquet", max_file_size_mb=0.01) == 100
+    assert len(glob.glob(f"{small}/batch=0/part-*")) >= 5
     big = str(tmp_path / "big")
-    write_batch_sized(df, big, "parquet", max_file_size_mb=100)
-    assert len(glob.glob(f"{big}/part-*")) == 1
+    write_batch_idempotent(df, big, 0, "parquet", max_file_size_mb=100)
+    assert len(glob.glob(f"{big}/batch=0/part-*")) == 1
 
 
 def test_heartbeat_status_shape(spark):

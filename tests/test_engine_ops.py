@@ -389,15 +389,18 @@ def test_metrics_listener_emits_opentsdb_lines(spark, tmp_path):
 # D8 — pod metadata from the kubelet path convention
 # ---------------------------------------------------------------------------
 def test_pod_metadata_parsed_and_injectable_as_headers(spark, tmp_path):
-    from singer_spark.sources import pod_headers, pod_text_batch
-    from singer_spark.transforms import inject_headers
+    from singer_spark.config import ReaderConfig
 
     pods = tmp_path / "pods"
     for pod_dir in ("team-a_web-1_uid-111", "team-b_job-2_uid-222"):
         os.makedirs(pods / pod_dir)
         _write_lines(str(pods / pod_dir / "app.log"), 2, prefix=pod_dir)
-    df = pod_text_batch(spark, str(pods), log_glob="*.log")
-    rows = inject_headers(df, pod_headers()).collect()
+    cfg = LogConfig(name="pods_drain", log_dir=str(pods), log_stream_regex="*.log",
+                    reader=ReaderConfig(pod_metadata=True),
+                    writer=WriterConfig(type="memory"),
+                    checkpoint_dir=str(tmp_path / "ck"))
+    assert PipelineManager(spark).run_cycle(cfg) == 4
+    rows = spark.table("pods_drain").collect()
     assert len(rows) == 4
     by_ns = {r.pod_namespace: r for r in rows}
     assert set(by_ns) == {"team-a", "team-b"}
@@ -538,21 +541,22 @@ def test_pod_spec_metadata_injected_as_headers(spark, tmp_path):
     from singer_spark.sources import (
         PodMetadataFetcher,
         pod_spec_headers,
-        pod_text_batch,
+        with_pod_metadata,
         with_pod_spec_metadata,
     )
     from singer_spark.transforms import inject_headers
 
     pods = tmp_path / "pods"
-    for pod_dir in ("team-a_web-1_uid-111", "team-b_job-2_uid-222"):
-        os.makedirs(pods / pod_dir)
-        _write_lines(str(pods / pod_dir / "app.log"), 1, prefix=pod_dir)
+    logs = spark.createDataFrame(
+        [(pod_dir, f"{pods}/{pod_dir}/app.log")
+         for pod_dir in ("team-a_web-1_uid-111", "team-b_job-2_uid-222")],
+        "value string, path string")
     items = [{"metadata": {"uid": "uid-111", "namespace": "team-a",
                            "name": "web-1", "labels": {"app": "web"}}}]
     srv, url = _fake_kubelet(items)
     try:
         fetcher = PodMetadataFetcher(pods_url=url, fields=("labels:app",))
-        df = with_pod_spec_metadata(pod_text_batch(spark, str(pods)), fetcher)
+        df = with_pod_spec_metadata(with_pod_metadata(logs), fetcher)
         rows = {r.pod_uid: r for r in
                 inject_headers(df, pod_spec_headers(("app",))).collect()}
         assert bytes(rows["uid-111"].headers["app"]) == b"web"

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from singer_spark.audit import AuditCollector
 from singer_spark.config import LogConfig, ReaderConfig, WriterConfig
 from singer_spark.engine import PipelineManager
-from singer_spark.sinks import kafka_direct_sink, kafka_write_batch
+from singer_spark.sinks import foreach_batch_sink, kafka_write_batch
 from tests.test_pipeline_e2e import write_thrift_log
 
 
@@ -142,8 +142,12 @@ def test_kafka_streaming_sink_without_audit(spark, tmp_path):
     spark.range(30).select(F.concat(F.lit("m"), F.col("id")).alias("value")) \
         .coalesce(1).write.parquet(src)
     stream = spark.readStream.schema("value string").parquet(src)
-    q = kafka_direct_sink(stream, "broker:9092", "topic-s", str(tmp_path / "ck"),
-                          producer_factory=make_fake_producer_factory(out_dir)).start()
+    factory = make_fake_producer_factory(out_dir)
+
+    def deliver(batch_df, batch_id):
+        return kafka_write_batch(batch_df, "broker:9092", "topic-s", factory)
+
+    q = foreach_batch_sink(stream, str(tmp_path / "ck"), deliver).start()
     try:
         q.processAllAvailable()
     finally:

@@ -6,7 +6,7 @@ refresh / filter / fallback behavior with a faked broker-metadata feed
 from __future__ import annotations
 
 from singer_spark.config import LogConfig, WriterConfig
-from singer_spark.engine import build_source, build_transforms
+from singer_spark.engine import build_transforms
 from singer_spark.partitioners import LocalityProvider
 
 
@@ -75,13 +75,13 @@ def test_engine_wires_local_partitions_into_partition_column(spark, tmp_path):
                             local_partitions=provider.local_partitions()),
     )
     parts = {r.partition for r in
-             build_transforms(build_source(spark, cfg, streaming=False), cfg)
+             build_transforms(spark.read.text(log_dir), cfg)
              .select("partition").collect()}
     assert parts <= {2, 5} and parts  # only rack-local partitions used
 
     # fallback-to-all: provider yields None → uniform random over all 8
     cfg.writer.local_partitions = None
     parts_all = {r.partition for r in
-                 build_transforms(build_source(spark, cfg, streaming=False), cfg)
+                 build_transforms(spark.read.text(log_dir), cfg)
                  .select("partition").collect()}
     assert parts_all <= set(range(8)) and len(parts_all) > 2

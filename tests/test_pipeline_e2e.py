@@ -15,9 +15,8 @@ from pyspark.sql import functions as F
 
 from singer_spark.audit import AuditCollector
 from singer_spark.config import LogConfig, ReaderConfig, WriterConfig
-from singer_spark.engine import PipelineManager, build_source, build_transforms
-from singer_spark.framing import encode_log_messages
-from singer_spark.sources import text_batch, thrift_batch
+from singer_spark.engine import PipelineManager, build_transforms
+from singer_spark.framing import decode_thrift_blobs, encode_log_messages
 
 
 def write_rotated_text_logs(log_dir: str, n_files: int = 3, lines_per_file: int = 40) -> int:
@@ -43,18 +42,23 @@ def write_thrift_log(log_dir: str, n: int = 25) -> int:
     return n
 
 
-def test_text_batch_reads_all_rotated_files(spark, tmp_path):
+def test_text_drain_reads_all_rotated_files(spark, tmp_path):
     log_dir = str(tmp_path / "logs")
     total = write_rotated_text_logs(log_dir)
-    df = text_batch(spark, log_dir, glob="app.log*")
+    cfg = LogConfig(name="rotated_drain", log_dir=log_dir, log_stream_regex="app.log*",
+                    writer=WriterConfig(type="memory"),
+                    checkpoint_dir=str(tmp_path / "ck"))
+    assert PipelineManager(spark).run_cycle(cfg) == total
+    df = spark.table("rotated_drain")
     assert df.count() == total
-    assert df.filter(F.col("file").contains("app.log")).count() == total
+    assert df.filter(F.col("path").contains("app.log")).count() == total
 
 
-def test_thrift_batch_decodes_logmessages(spark, tmp_path):
+def test_decode_thrift_blobs_decodes_logmessages(spark, tmp_path):
     log_dir = str(tmp_path / "tlogs")
     n = write_thrift_log(log_dir)
-    df = thrift_batch(spark, log_dir, glob="*.log")
+    df = decode_thrift_blobs(
+        spark.read.format("binaryFile").option("pathGlobFilter", "*.log").load(log_dir))
     rows = df.orderBy("offset").collect()
     assert len(rows) == n
     assert bytes(rows[0].value) == b"payload-0"
@@ -152,7 +156,7 @@ def test_build_transforms_adds_partition_column(spark, tmp_path):
     cfg = LogConfig(name="pt", log_dir=log_dir, log_stream_regex="*",
                     writer=WriterConfig(type="kafka", topic="t", partitioner="crc32",
                                         num_partitions=8))
-    df = build_transforms(build_source(spark, cfg, streaming=False), cfg)
+    df = build_transforms(spark.read.text(log_dir), cfg)
     parts = [r.partition for r in df.select("partition").collect()]
     assert parts and all(0 <= p < 8 for p in parts)
 
@@ -170,18 +174,17 @@ def test_instance_decider_gates_start(spark, tmp_path):
 
 
 def test_max_bytes_per_trigger_bounds_batches(spark, tmp_path):
-    """B1 byte-denominated batch cap: 4×10 KB files with a 15 KB cap must
+    """B1 byte-denominated batch cap: a 40 KB file with a 15 KB cap must
     process as multiple micro-batches, never one 40 KB gulp."""
     import json
 
-    from singer_spark.sources import text_stream
+    from singer_spark.streaming.tail import tail_stream
 
     d = str(tmp_path / "mbt")
     os.makedirs(d)
-    for i in range(4):
-        with open(f"{d}/f{i}.log", "w") as fh:
-            fh.write(("x" * 99 + "\n") * 100)
-    q = (text_stream(spark, d, max_bytes_per_trigger=15_000)
+    with open(f"{d}/f.log", "w") as fh:
+        fh.write(("x" * 99 + "\n") * 400)
+    q = (tail_stream(spark, d, max_bytes_per_trigger=15_000)
          .writeStream.format("memory").queryName("mbt_out")
          .option("checkpointLocation", str(tmp_path / "ck")).start())
     try:
@@ -192,3 +195,76 @@ def test_max_bytes_per_trigger_bounds_batches(spark, tmp_path):
     sizes = [b.get("numInputRows") for b in batches if b.get("numInputRows")]
     assert sum(sizes) == 400
     assert len(sizes) >= 3 and max(sizes) < 400
+
+
+def _append(path: str, data: str) -> None:
+    with open(path, "a") as f:
+        f.write(data)
+
+
+def test_text_reader_delivers_growth_and_rename_rotation_once(spark, tmp_path):
+    """reader.type=text tails: lines appended to a file already read are
+    delivered, and a rename rotation (app.log -> app.log.1 plus a new
+    app.log) delivers the rotated file's new lines and the new file's
+    lines — every line exactly once."""
+    log_dir = str(tmp_path / "in")
+    os.makedirs(log_dir)
+    cfg = LogConfig(name="text_rotation", log_dir=log_dir, log_stream_regex="app.log*",
+                    reader=ReaderConfig(type="text"),
+                    writer=WriterConfig(type="memory"),
+                    checkpoint_dir=str(tmp_path / "ck"))
+    mgr = PipelineManager(spark)
+    _append(f"{log_dir}/app.log", "a1\na2\n")
+    q = mgr.start_log(cfg)
+    try:
+        q.processAllAvailable()
+        _append(f"{log_dir}/app.log", "a3\n")
+        q.processAllAvailable()
+        _append(f"{log_dir}/app.log", "a4\n")
+        os.rename(f"{log_dir}/app.log", f"{log_dir}/app.log.1")
+        _append(f"{log_dir}/app.log", "b1\nb2\n")
+        q.processAllAvailable()
+        got = sorted(r.value for r in spark.table("text_rotation").collect())
+    finally:
+        mgr.stop_all()
+    assert got == ["a1", "a2", "a3", "a4", "b1", "b2"]
+
+
+def test_text_reader_refuses_a_spark_file_source_checkpoint(spark, tmp_path):
+    """A checkpoint written by Spark's text file source holds
+    {"logOffset": N}, not per-inode offsets; resuming it under the tail
+    reader must fail with an error naming the fix, delivering nothing,
+    instead of re-reading every retained file from offset 0."""
+    from pyspark.errors import StreamingQueryException
+
+    log_dir = str(tmp_path / "in")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ck")
+    os.makedirs(log_dir)
+    _append(f"{log_dir}/app.log", "old1\nold2\n")
+    old = (spark.readStream.format("text").load(log_dir)
+           .writeStream.format("noop").option("checkpointLocation", ckpt)
+           .trigger(availableNow=True).start())
+    old.awaitTermination()
+    _append(f"{log_dir}/app.log", "new1\n")
+    cfg = LogConfig(name="migrated", log_dir=log_dir, log_stream_regex="*.log",
+                    reader=ReaderConfig(type="text"),
+                    writer=WriterConfig(type="file", path=out, format="parquet",
+                                        min_upload_seconds=0),
+                    checkpoint_dir=ckpt)
+    with pytest.raises(StreamingQueryException, match="fresh checkpoint"):
+        PipelineManager(spark).run_cycle(cfg)
+    assert not glob.glob(f"{out}/*.parquet")
+
+
+def test_prepend_timestamp_prefixes_the_read_time(spark, tmp_path):
+    """reader.prepend_timestamp prepends the read time, then the delimiter
+    (T3)."""
+    import re
+
+    cfg = LogConfig(name="ts", log_dir=str(tmp_path),
+                    reader=ReaderConfig(prepend_timestamp=True),
+                    writer=WriterConfig(type="noop"))
+    df = spark.createDataFrame([("hello",)], "value string")
+    (value,) = build_transforms(df, cfg).first()
+    assert re.fullmatch(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2} hello", value), value

@@ -11,7 +11,7 @@ import uuid
 import pytest
 from pyspark.sql import functions as F
 
-from singer_spark.sinks import pulsar_sink, pulsar_write_batch
+from singer_spark.sinks import foreach_batch_sink, pulsar_write_batch
 
 
 def make_fake_factory(out_dir: str):
@@ -79,8 +79,13 @@ def test_pulsar_streaming_sink(spark, tmp_path):
     spark.range(50).select(F.col("id"), F.concat(F.lit("m"), F.col("id")).alias("value")) \
         .coalesce(1).write.parquet(src)
     stream = spark.readStream.schema("id bigint, value string").parquet(src)
-    q = pulsar_sink(stream, "pulsar://fake:6650", "topic-b", ckpt,
-                    client_factory=make_fake_factory(out_dir)).start()
+    factory = make_fake_factory(out_dir)
+
+    def deliver(batch_df, batch_id):
+        return pulsar_write_batch(batch_df, "pulsar://fake:6650", "topic-b",
+                                  client_factory=factory)
+
+    q = foreach_batch_sink(stream, ckpt, deliver).start()
     try:
         q.processAllAvailable()
     finally:

@@ -261,24 +261,6 @@ def test_tail_copytruncate_copy_counts_exact_windows(tmp_path):
         "reopens": len(expected_windows), "bytes": sum(expected_windows)}
 
 
-def test_heartbeat_surfaces_duplicates_suspected():
-    """The compat path: build_status's helper still reads counters out
-    of a pre-r8 progress dict's counter-bearing endOffset (JSON string,
-    as Spark reports it); live readers publish via READER_COUNTERS."""
-    import json as json_mod
-
-    from singer_spark.heartbeat import _dupes_from_progress
-
-    p = {"sources": [
-        {"endOffset": json_mod.dumps(
-            {"files": {}, "dupes_suspected": 3, "dupe_bytes": 4096})},
-        {"endOffset": json_mod.dumps({"files": {}})},  # no counters: ignored
-    ]}
-    assert _dupes_from_progress(p) == {"reopens": 3, "bytes": 4096}
-    assert _dupes_from_progress({"sources": [{"endOffset": "{}"}]}) is None
-    assert _dupes_from_progress({}) is None
-
-
 def test_tail_plain_growth_keeps_offset(tmp_path):
     d = str(tmp_path)
     log = f"{d}/g.log"
@@ -610,8 +592,7 @@ def test_counters_file_channel_roundtrip_and_age_cutoff(tmp_path):
 
 def test_counters_namespace_and_overlap_isolation(tmp_path):
     """ADVICE r8 #2, both halves: (1) list_counters(ns=...) excludes
-    OTHER applications' namespaced streams while unnamespaced writers
-    still match; (2) two readers on the same (log_dir, glob) — a
+    OTHER applications' streams, unnamespaced writers included; (2) two readers on the same (log_dir, glob) — a
     restarted query overlapping the old one — write SEPARATE files, so
     the new reader's zeroed init can't clobber the live one's counts,
     and the most recently reporting reader wins the listing."""
@@ -633,7 +614,7 @@ def test_counters_namespace_and_overlap_isolation(tmp_path):
     mine = {c["stream"]: c for c in list_counters(ns="app-A")}
     assert mine[key]["reopens"] == 7
     assert f"{tmp_path / 'other'}::*" not in mine        # foreign app out
-    assert f"{tmp_path / 'legacy'}::*" in mine           # legacy matches
+    assert f"{tmp_path / 'legacy'}::*" not in mine       # legacy out too
     assert f"{tmp_path / 'other'}::*" in {               # ns=None sees all
         c["stream"] for c in list_counters()}
 

@@ -79,10 +79,13 @@ def render_block(fname: str, p: dict) -> str:
     ]
     drift = p.get("drift")
     if drift:
+        # still_slow: the query names, or only their count in the line
+        # bench._compact_drift shortens
+        still = drift.get("still_slow", [])
         lines.append(
             f"In-bench drift gate: {drift.get('reran', 0)} re-ran of "
             f"{drift.get('vs', '?')} compared, "
-            f"{len(drift.get('still_slow', []))} still slow.")
+            f"{still if isinstance(still, int) else len(still)} still slow.")
     return "\n".join(lines)
 
 
