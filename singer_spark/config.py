@@ -50,7 +50,8 @@ class TransformerConfig:
 @dataclass
 class WriterConfig:
     # config.thrift:121-225 (enum + Kafka/S3/Pulsar writer configs)
-    type: str = "kafka"                     # kafka | s3 | file | noop | memory | pulsar
+    # kafka ≡ kafka_direct: sinks.kafka_write_batch under foreachBatch
+    type: str = "kafka"                     # kafka | kafka_direct | s3 | file | noop | memory | pulsar
     topic: str | None = None
     bootstrap_servers: str | None = None
     # partitioners.PARTITIONER_REGISTRY key.  None = writer-type default:
@@ -62,6 +63,8 @@ class WriterConfig:
     num_partitions: int = 16
     # P8-P10: rack-local partition ids from a LocalityProvider (None → all)
     local_partitions: list[int] | None = None
+    # kwargs for the producer factory (kafka-python names for the default
+    # KafkaProducer; they override the reference defaults)
     producer_configs: dict[str, str] = field(default_factory=dict)
     # W2: wrap each task's sends in a Kafka transaction
     # (common.thrift:29 transactionEnabled)
@@ -83,7 +86,7 @@ class WriterConfig:
 class ProcessorConfig:
     # config.thrift:23-26 + DefaultLogStreamProcessor defaults
     batch_size: int = 200                   # maxFilesPerTrigger analog
-    processing_interval_secs: int = 1       # trigger interval
+    processing_interval_secs: int = 1       # run_adaptive's base poll interval (B3)
     max_processing_interval_secs: int = 60  # adaptive backoff ceiling (B3)
     sample_percent: int = 100               # T9 decider percentage
     log_retention_seconds: int = -1         # O5

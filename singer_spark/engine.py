@@ -17,9 +17,11 @@ live decider check per cycle (O2, config/Decider.java:50-148).
 
 from __future__ import annotations
 
+import atexit
 import hashlib
 import json
 import os
+import shutil
 import tempfile
 import time
 from pathlib import Path
@@ -106,6 +108,13 @@ def _multiline(r: ReaderConfig) -> bool:
     return r.type == "text" and bool(r.message_start_regex)
 
 
+def _source_glob(cfg: LogConfig) -> str:
+    """The glob under `log_dir` that the tail reader reads, and so the files
+    retention may delete.  D8: with `reader.pod_metadata` log_dir is the
+    pods root, one <ns>_<pod>_<uid>/ directory per pod."""
+    return f"*/{cfg.log_stream_regex}" if cfg.reader.pod_metadata else cfg.log_stream_regex
+
+
 def build_source(spark: SparkSession, cfg: LogConfig) -> DataFrame:
     r = cfg.reader
     if r.type == "thrift":
@@ -120,9 +129,7 @@ def build_source(spark: SparkSession, cfg: LogConfig) -> DataFrame:
     from singer_spark.streaming.tail import tail_stream
 
     mode = "thrift" if r.type == "tail_thrift" else "text"
-    # D8: log_dir is the pods root, one <ns>_<pod>_<uid>/ directory per pod
-    glob = f"*/{cfg.log_stream_regex}" if r.pod_metadata else cfg.log_stream_regex
-    df = tail_stream(spark, cfg.log_dir, glob=glob, mode=mode,
+    df = tail_stream(spark, cfg.log_dir, glob=_source_glob(cfg), mode=mode,
                      max_message_size=r.max_message_size,
                      max_bytes_per_trigger=r.max_bytes_per_trigger)
     if r.pod_metadata:
@@ -214,7 +221,12 @@ class PipelineManager:
         self.pod_fetcher = pod_fetcher
         # lazily-built kubelet fetchers, one per (pods_url, fields)
         self._pod_fetchers: dict[tuple, object] = {}
-        self.checkpoint_root = checkpoint_root or tempfile.mkdtemp(prefix="singer_ckpt_")
+        if checkpoint_root is None:
+            # no other process can resume from a made-up root: remove it
+            # when this interpreter exits
+            checkpoint_root = tempfile.mkdtemp(prefix="singer_ckpt_")
+            atexit.register(shutil.rmtree, checkpoint_root, ignore_errors=True)
+        self.checkpoint_root = checkpoint_root
         self.queries: dict[str, StreamingQuery] = {}
         self.decider = decider or Decider(None)
         self.kafka_producer_factory = kafka_producer_factory
@@ -292,19 +304,23 @@ class PipelineManager:
             self.pending_dirs[cfg.name] = cfg
             return None
         self.pending_dirs.pop(cfg.name, None)
+        query = self._start_query(cfg, audit_sink)
+        shadow_cfg = self._shadow_config(cfg)
+        if shadow_cfg is not None:
+            self._start_query(shadow_cfg)
+        return query
+
+    def _start_query(self, cfg: LogConfig, audit_sink=None,
+                     available_now: bool = False) -> StreamingQuery:
+        """source → transforms → writer for one LogConfig, started under
+        its name against its checkpoint and registered in `queries`."""
         ckpt = cfg.checkpoint_dir or os.path.join(self.checkpoint_root, cfg.name)
         df = build_transforms(build_source(self.spark, cfg), cfg,
                               pod_fetcher=self._pod_fetcher_for(cfg))
         writer = self._build_writer(cfg, df, ckpt, audit_sink)
-        query = writer.queryName(cfg.name).start()
-        self.queries[cfg.name] = query
-        shadow_cfg = self._shadow_config(cfg)
-        if shadow_cfg is not None:
-            sdf = build_transforms(build_source(self.spark, shadow_cfg), shadow_cfg,
-                                   pod_fetcher=self._pod_fetcher_for(shadow_cfg))
-            sckpt = os.path.join(self.checkpoint_root, shadow_cfg.name)
-            swriter = self._build_writer(shadow_cfg, sdf, sckpt, None)
-            self.queries[shadow_cfg.name] = swriter.queryName(shadow_cfg.name).start()
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        query = self.queries[cfg.name] = writer.queryName(cfg.name).start()
         return query
 
     @staticmethod
@@ -350,8 +366,8 @@ class PipelineManager:
         return cap
 
     def _build_writer(self, cfg: LogConfig, df: DataFrame, ckpt: str, audit_sink=None):
-        """Direct writeStream sinks for kafka/memory/noop and the plain file
-        sink; every other writer is one foreachBatch handler composed as
+        """`memory`, `noop` and the plain file sink are direct writeStream
+        sinks; every other writer is one foreachBatch handler composed as
         cap? → deliver → audit? (sinks.foreach_batch_sink).  The delivery
         returns the messages it wrote, and the audit row carries that count —
         counted after the successful write, the reference's accounting point
@@ -360,25 +376,20 @@ class PipelineManager:
         cap = self._hot_key_cap(cfg)
         audit = (sinks.auditor(w.audit_topic, audit_sink)
                  if w.audit_topic and audit_sink is not None else None)
-        if w.type in ("kafka", "memory", "noop"):
-            if cap is not None:
-                # the cap is a per-micro-batch frame transform, so it needs
-                # a foreachBatch hook; these direct writeStream sinks have
-                # none.  Fail at config time — a guard that silently doesn't
-                # guard is worse than an error the operator sees on deploy.
+        if w.type in ("memory", "noop"):
+            # the cap and the audit are per-micro-batch hooks, and these
+            # direct writeStream sinks have none.  Fail at config time — a
+            # guard that silently doesn't guard is worse than an error the
+            # operator sees on deploy.
+            if cap is not None or audit is not None:
                 raise ValueError(
-                    f"processor.maxEventsPerKey is not supported with "
-                    f"writer.type={w.type}; use kafka_direct, file, or pulsar")
-            if w.type == "kafka":
-                return sinks.kafka_sink(df, w.bootstrap_servers, w.topic, ckpt,
-                                        producer_configs=w.producer_configs,
-                                        trigger_seconds=cfg.processor.processing_interval_secs)
+                    f"processor.maxEventsPerKey and writer.auditTopic are not "
+                    f"supported with writer.type={w.type}; use kafka, file, or pulsar")
             if w.type == "memory":
                 return sinks.memory_sink(df, cfg.name, ckpt)
             return sinks.noop_sink(df, ckpt)
         trigger_seconds = None
-        if w.type == "kafka_direct":
-            # connector-free Kafka path (W1 twin)
+        if w.type in ("kafka", "kafka_direct"):
             factory = self.kafka_producer_factory
 
             def deliver(batch_df: DataFrame, batch_id: int) -> int:
@@ -427,12 +438,7 @@ class PipelineManager:
         messages for the tail reader (`text`, `tail`, `tail_thrift`) but
         FILES for the `binaryFile`-backed readers (`thrift`, multi-line
         text: one row per file blob)."""
-        ckpt = cfg.checkpoint_dir or os.path.join(self.checkpoint_root, cfg.name)
-        df = build_transforms(build_source(self.spark, cfg), cfg,
-                              pod_fetcher=self._pod_fetcher_for(cfg))
-        writer = self._build_writer(cfg, df, ckpt, audit_sink).trigger(availableNow=True)
-        query = writer.queryName(cfg.name).start()
-        self.queries[cfg.name] = query
+        query = self._start_query(cfg, audit_sink, available_now=True)
         query.awaitTermination()
         rows = 0
         for p in query.recentProgress:
@@ -485,7 +491,7 @@ class PipelineManager:
             # ... and never after a FAILED cycle — the drained-implies-
             # processed invariant doesn't hold for it
             deleted = (enforce_retention(cfg.log_dir, p.log_retention_seconds,
-                                         glob=cfg.log_stream_regex)
+                                         glob=_source_glob(cfg))
                        if enabled and not failed else [])
             history.append({"rows": rows, "interval_secs": interval,
                             "deleted": deleted, "enabled": enabled,

@@ -1,9 +1,9 @@
 """Sinks — reference parity for SURVEY.md §2.6 (W1-W9).
 
-- Kafka sink   (W1/W2/W3): Spark's kafka format; producer pooling, batching,
-  and retries are built into the connector.  At-least-once, idempotent
-  producer via kafka.enable.idempotence (the reference's transactional mode
-  has no Spark analog — documented limitation, SURVEY.md §7.3).
+- Kafka writer (W1/W2/W3): `kafka_write_batch`, the reference's producer
+  protocol per task (send every row, flush once, fail the task on a failed
+  send) with the reference's producer defaults; `transactional=True` wraps
+  each task's sends in a Kafka transaction (W2).  No Spark Kafka connector.
 - File/S3 sink (W5): parquet/text writeStream with time-based triggers
   (minUploadTime) and maxRecordsPerFile (size rollover); S3Writer's key
   templating is reproduced by `render_key_template`.
@@ -17,6 +17,8 @@
   (`foreach_batch_sink`).  The delivery pass returns the messages it wrote,
   and the AuditMessage row carries the sum of the successful tasks' counts,
   collected after the job succeeds — a failed task attempt is never counted.
+  `noop` and `memory` have no hook, so the engine refuses an audit or a
+  hot-key cap on them at config time.
 """
 
 from __future__ import annotations
@@ -33,37 +35,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 from singer_spark.audit import AuditCollector, audit_row, make_audit_df
-
-
-# ---------------------------------------------------------------------------
-# Kafka sink (W1): the writer DataFrame carries key/value/headers/partition
-# columns; partitioners.py computes `partition`.
-# ---------------------------------------------------------------------------
-def kafka_sink(df: DataFrame, bootstrap_servers: str, topic: str,
-               checkpoint_dir: str, producer_configs: dict | None = None,
-               trigger_seconds: int | None = None) -> DataStreamWriter:
-    cols = [c for c in ("key", "value", "headers", "partition") if c in df.columns]
-    writer = (
-        df.select(*cols)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    # Reference producer defaults (common.thrift:18-35): acks=1,
-    # maxRequestSize=1MB, lingerMs=10, retries=5, bufferMemory=32MB.
-    defaults = {
-        "kafka.acks": "1",
-        "kafka.max.request.size": "1000000",
-        "kafka.linger.ms": "10",
-        "kafka.retries": "5",
-        "kafka.buffer.memory": str(32 * 1024 * 1024),
-    }
-    for k, v in {**defaults, **(producer_configs or {})}.items():
-        writer = writer.option(k if k.startswith("kafka.") else f"kafka.{k}", v)
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer
 
 
 # ---------------------------------------------------------------------------
@@ -95,18 +66,16 @@ def file_sink(df: DataFrame, path: str, checkpoint_dir: str, fmt: str = "parquet
 # reference's count-after-successful-write point
 # (writer/KafkaWriter.java:641-693).
 # ---------------------------------------------------------------------------
-def _deliver(batch_df: DataFrame, send_task: Callable[[Iterator[tuple]], int],
-             key_col: str | None, value_col: str,
-             headers_col: str | None = None,
-             partition_col: str | None = None) -> int:
+_FIELDS = ("key", "value", "headers", "partition")
+
+
+def _deliver(batch_df: DataFrame, send_task: Callable[[Iterator[tuple]], int]) -> int:
     """Run `send_task` once per partition of `batch_df` over (key, value,
     headers, partition) tuples — None where the column is absent or null —
     and return the messages sent.  Rows cross into Python as Arrow record
     batches, read with one `to_pylist()` per column (map<string,binary>
     headers arrive as [(str, bytes)])."""
-    fields = (key_col, value_col, headers_col, partition_col)
-    cols = [c for c in fields
-            if c is not None and (c == value_col or c in batch_df.columns)]
+    cols = [c for c in _FIELDS if c == "value" or c in batch_df.columns]
 
     def run(batches):
         import pyarrow as pa
@@ -114,7 +83,7 @@ def _deliver(batch_df: DataFrame, send_task: Callable[[Iterator[tuple]], int],
         def rows():
             for b in batches:
                 yield from zip(*(b.column(c).to_pylist() if c in cols
-                                 else repeat(None, b.num_rows) for c in fields))
+                                 else repeat(None, b.num_rows) for c in _FIELDS))
 
         yield pa.RecordBatch.from_pydict({"sent": [send_task(rows())]})
 
@@ -123,18 +92,24 @@ def _deliver(batch_df: DataFrame, send_task: Callable[[Iterator[tuple]], int],
 
 
 # ---------------------------------------------------------------------------
-# Kafka direct writer (W1/W3 twin without the Spark Kafka connector) — a
-# producer protocol over the delivery pass, mirroring the reference's
-# writeLogMessagesInBatch: per task create/borrow one producer, send every
-# row (key/value/headers/partition), flush once, surface per-message
-# failures so Spark retries the task (writer/KafkaWriter.java:509-622).
-# `producer_factory(bootstrap_servers, configs)` must return an object with
-# `send(topic, value=, key=, headers=, partition=) -> future-like` and
-# `flush()` — kafka-python's KafkaProducer satisfies this; tests inject a
-# protocol-level fake.  The engine runs it as writer.type=kafka_direct; the
-# connector-based `kafka_sink` above remains the preferred path on clusters
-# that ship spark-sql-kafka.
+# Kafka writer (W1/W3) — a producer protocol over the delivery pass,
+# mirroring the reference's writeLogMessagesInBatch: per task create/borrow
+# one producer, send every row (key/value/headers/partition), flush once,
+# surface per-message failures so Spark retries the task
+# (writer/KafkaWriter.java:509-622).  `producer_factory(bootstrap_servers,
+# configs)` must return an object with `send(topic, value=, key=, headers=,
+# partition=) -> future-like` and `flush()` — kafka-python's KafkaProducer
+# satisfies this; tests inject a protocol-level fake.  The engine runs it for
+# writer.type=kafka (≡ kafka_direct).
 # ---------------------------------------------------------------------------
+# Reference producer defaults (common.thrift:18-35) under kafka-python's
+# names: acks=1, maxRequestSize=1MB, lingerMs=10, retries=5,
+# bufferMemory=32MB.
+_KAFKA_PRODUCER_DEFAULTS = {"acks": 1, "max_request_size": 1000000,
+                            "linger_ms": 10, "retries": 5,
+                            "buffer_memory": 32 * 1024 * 1024}
+
+
 def _default_kafka_producer(bootstrap_servers: str, configs: dict):
     try:
         from kafka import KafkaProducer  # type: ignore
@@ -143,15 +118,13 @@ def _default_kafka_producer(bootstrap_servers: str, configs: dict):
             "kafka-python is not installed; pass producer_factory= for a "
             "custom transport or install kafka-python"
         ) from e
-    return KafkaProducer(bootstrap_servers=bootstrap_servers, **configs)
+    return KafkaProducer(bootstrap_servers=bootstrap_servers,
+                         **{**_KAFKA_PRODUCER_DEFAULTS, **configs})
 
 
 def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
                       producer_factory: Callable | None = None,
                       producer_configs: dict | None = None,
-                      key_col: str = "key", value_col: str = "value",
-                      headers_col: str = "headers",
-                      partition_col: str = "partition",
                       transactional: bool = False) -> int:
     """Write one micro-batch through the producer protocol and return the
     number of messages sent.  Key, headers (map<string,binary> →
@@ -215,8 +188,7 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
             if close:
                 close()
 
-    return _deliver(batch_df, send_task, key_col, value_col, headers_col,
-                    partition_col)
+    return _deliver(batch_df, send_task)
 
 
 def _records_per_file(df: DataFrame, col: str, max_file_mb: float) -> int | None:
@@ -431,8 +403,7 @@ def compact_dataset(spark, path: str, target_file_mb: float = 256,
 
 def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
                            fmt: str = "parquet",
-                           max_file_size_mb: float | None = None,
-                           value_col: str = "value") -> int:
+                           max_file_size_mb: float | None = None) -> int:
     """Replay-safe micro-batch append: each batch writes (mode=overwrite)
     into its own `batch=<id>` subdirectory, so a foreachBatch retry or a
     post-crash replay of the same batch REPLACES its previous partial output
@@ -449,8 +420,8 @@ def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
     written = Observation()
     writer = (batch_df.observe(written, F.count(F.lit(1)).alias("n"))
               .write.mode("overwrite").format(fmt))
-    if max_file_size_mb and value_col in batch_df.columns:
-        records = _records_per_file(batch_df, value_col, max_file_size_mb)
+    if max_file_size_mb and "value" in batch_df.columns:
+        records = _records_per_file(batch_df, "value", max_file_size_mb)
         if records:
             writer = writer.option("maxRecordsPerFile", records)
     writer.save(target)
@@ -518,9 +489,7 @@ def _default_pulsar_client(service_url: str):
 
 
 def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
-                       client_factory: Callable | None = None,
-                       key_col: str = "key", value_col: str = "value",
-                       partition_col: str = "partition") -> int:
+                       client_factory: Callable | None = None) -> int:
     """Write one (micro-)batch to Pulsar and return the number of messages
     sent: per task, open a client, async-send every row, then flush once —
     the PulsarWriter protocol (send batch + flush + await futures).  Errors
@@ -578,8 +547,7 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
             if close:
                 close()
 
-    return _deliver(batch_df, send_task, key_col, value_col,
-                    partition_col=partition_col)
+    return _deliver(batch_df, send_task)
 
 
 # ---------------------------------------------------------------------------

@@ -143,7 +143,7 @@ def sample_messages(df: DataFrame, key_col: str, percent: int) -> DataFrame:
 # reader/TextMessageReader.java:164-177 (skip over-long lines).
 # ---------------------------------------------------------------------------
 def drop_oversize(df: DataFrame, column: str, max_bytes: int) -> DataFrame:
-    return df.filter(F.length(F.col(column)) <= max_bytes)
+    return df.filter(F.octet_length(F.col(column)) <= max_bytes)
 
 
 # ---------------------------------------------------------------------------

@@ -105,6 +105,41 @@ def test_run_adaptive_applies_retention_after_drain(spark, tmp_path):
     assert os.listdir(cfg.log_dir) == ["other.txt"]
 
 
+def test_run_adaptive_retention_deletes_pod_logs(spark, tmp_path):
+    """With reader.pod_metadata the source reads <pods_root>/*/<glob>, and
+    retention deletes under the same glob."""
+    from singer_spark.config import ReaderConfig
+
+    cfg = _cfg(tmp_path, "pod_ret", log_retention_seconds=600)
+    cfg.reader = ReaderConfig(pod_metadata=True)
+    pod_log = os.path.join(cfg.log_dir, "ns_pod_uid", "app.log")
+    os.makedirs(os.path.dirname(pod_log))
+    _write_lines(pod_log, 3)
+    os.utime(pod_log, (0, 0))
+    hist = PipelineManager(spark).run_adaptive(cfg, cycles=1, sleep_fn=lambda s: None)
+    assert hist[0]["rows"] == 3
+    assert hist[0]["deleted"] == [pod_log]
+    assert not os.path.exists(pod_log)
+
+
+def test_made_up_checkpoint_root_is_removed_at_exit(tmp_path):
+    """A manager built without checkpoint_root makes a temp root that no
+    other process can resume from; it is gone once the interpreter exits."""
+    import subprocess
+    import sys
+
+    code = ("import os; from singer_spark.engine import PipelineManager; "
+            "root = PipelineManager(None).checkpoint_root; "
+            "print(root, os.path.isdir(root))")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, check=True,
+                         capture_output=True, text=True,
+                         env={**os.environ, "TMPDIR": str(tmp_path)}).stdout
+    root, existed = out.split()
+    assert root.startswith(str(tmp_path)) and existed == "True"
+    assert not os.path.exists(root)
+
+
 # ---------------------------------------------------------------------------
 # O2 — decider live reload
 # ---------------------------------------------------------------------------
@@ -177,13 +212,23 @@ def test_max_events_per_key_caps_hot_key_e2e(spark, tmp_path):
 
 
 def test_max_events_per_key_rejected_for_hookless_sinks(spark, tmp_path):
-    """Sinks without a foreachBatch hook must refuse the cap at config
-    time — a guard that silently doesn't guard is worse than an error."""
+    """Sinks without a foreachBatch hook must refuse the cap and the audit
+    at config time — a guard that silently doesn't guard is worse than an
+    error."""
+    from singer_spark.audit import AuditCollector
+
     cfg = _cfg(tmp_path, "hotmem", sink="memory", max_events_per_key=3)
     _write_lines(f"{cfg.log_dir}/a.log", 2)
     mgr = PipelineManager(spark)
     with pytest.raises(ValueError, match="maxEventsPerKey"):
         mgr.start_log(cfg)
+    for sink in ("memory", "noop"):
+        cfg = _cfg(tmp_path, f"audited_{sink}", sink=sink)
+        cfg.writer.audit_topic = f"audit.{sink}"
+        _write_lines(f"{cfg.log_dir}/a.log", 2)
+        with pytest.raises(ValueError, match="auditTopic"):
+            mgr.start_log(cfg, audit_sink=AuditCollector())
+    assert not mgr.queries
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from singer_spark.audit import AuditCollector
-from singer_spark.config import LogConfig, ReaderConfig, WriterConfig
+from singer_spark.config import LogConfig, ProcessorConfig, ReaderConfig, WriterConfig
 from singer_spark.engine import PipelineManager
 from singer_spark.sinks import foreach_batch_sink, kafka_write_batch
 from tests.test_pipeline_e2e import write_thrift_log
@@ -101,10 +101,12 @@ def test_kafka_failed_sends_fail_the_task(spark, tmp_path):
     assert "sends failed" in str(exc_info.value)
 
 
-def test_kafka_e2e_thrift_logs_to_topic_with_audit(spark, tmp_path):
+@pytest.mark.parametrize("writer_type", ["kafka", "kafka_direct"])
+def test_kafka_e2e_thrift_logs_to_topic_with_audit(spark, tmp_path, writer_type):
     """The SingerEndToEndTest shape: N framed-thrift messages on disk →
     engine pipeline (decode → transforms → partitioner → kafka sink) →
-    every message lands with its key/partition and audit count == N."""
+    every message lands with its key/partition and audit count == N.  The
+    default writer type (`kafka`) runs the same audited writer."""
     log_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "topic")
     os.makedirs(out_dir)
@@ -113,7 +115,7 @@ def test_kafka_e2e_thrift_logs_to_topic_with_audit(spark, tmp_path):
     cfg = LogConfig(
         name="kafka_e2e", log_dir=log_dir, log_stream_regex="*.log",
         reader=ReaderConfig(type="thrift"),
-        writer=WriterConfig(type="kafka_direct", topic="logs.app",
+        writer=WriterConfig(type=writer_type, topic="logs.app",
                             bootstrap_servers="broker:9092",
                             partitioner="crc32", num_partitions=8,
                             audit_topic="audit.kafka_e2e"),
@@ -133,6 +135,47 @@ def test_kafka_e2e_thrift_logs_to_topic_with_audit(spark, tmp_path):
     assert all(0 <= r["partition"] < 8 for r in delivered)
     # count-after-successful-write accounting (W9/B5)
     assert audit.total("audit.kafka_e2e") == n
+
+
+def test_max_events_per_key_caps_the_kafka_writer(spark, tmp_path):
+    """The hot-key cap is a foreachBatch hook, so the default Kafka writer
+    takes it: a payload repeated 10x delivers 3 times per trigger."""
+    log_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "topic")
+    os.makedirs(log_dir)
+    os.makedirs(out_dir)
+    with open(os.path.join(log_dir, "a.log"), "w") as f:
+        f.write("hot-line\n" * 10 + "cold-one\ncold-two\n")
+    cfg = LogConfig(
+        name="kafka_capped", log_dir=log_dir, log_stream_regex="*.log",
+        writer=WriterConfig(type="kafka", topic="logs.app",
+                            bootstrap_servers="broker:9092"),
+        processor=ProcessorConfig(max_events_per_key=3),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    mgr = PipelineManager(spark,
+                          kafka_producer_factory=make_fake_producer_factory(out_dir))
+    assert mgr.run_cycle(cfg) == 12
+    values = sorted(r["value"] for r in _read_delivered(out_dir))
+    assert values == ["cold-one", "cold-two"] + ["hot-line"] * 3
+
+
+def test_default_producer_keeps_reference_defaults(monkeypatch):
+    """kafka-python's KafkaProducer gets the reference producer defaults
+    (common.thrift:18-35), and producer_configs override them."""
+    import sys
+    import types
+
+    from singer_spark.sinks import _default_kafka_producer
+
+    made = []
+    monkeypatch.setitem(sys.modules, "kafka", types.SimpleNamespace(
+        KafkaProducer=lambda **kw: made.append(kw)))
+    _default_kafka_producer("b:9092", {"linger_ms": 50, "compression_type": "gzip"})
+    assert made == [{"bootstrap_servers": "b:9092", "acks": 1,
+                     "max_request_size": 1000000, "linger_ms": 50, "retries": 5,
+                     "buffer_memory": 32 * 1024 * 1024,
+                     "compression_type": "gzip"}]
 
 
 def test_kafka_streaming_sink_without_audit(spark, tmp_path):

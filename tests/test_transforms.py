@@ -76,8 +76,9 @@ def test_sampling_deterministic_and_proportional(spark):
 
 
 def test_oversize_drop(spark):
-    df = _df(spark, [("short",), ("x" * 50,)], ["value"])
-    assert drop_oversize(df, "value", 10).count() == 1
+    # maxMessageSize is a byte limit: 6 two-byte characters are 12 bytes
+    df = _df(spark, [("short",), ("x" * 50,), ("é" * 6,)], ["value"])
+    assert [r.value for r in drop_oversize(df, "value", 10).collect()] == ["short"]
 
 
 def test_headers_map(spark):
