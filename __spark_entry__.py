@@ -1810,8 +1810,10 @@ def _quality_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins the agreement booleans true and re-derives the exact
     doc count; float64 lw round-trips parquet exactly, so the match is
     equality, not tolerance."""
+    import atexit
     import hashlib
     import os
+    import shutil
     import tempfile
 
     from singer_spark.operators.text_analysis import (load_nb_model,
@@ -1830,6 +1832,9 @@ def _quality_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"singer_nb_model_{uid}_{os.getpid()}_"
         f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}")
     save_nb_model(nb_quality_model(docs, seed, max_vocab=1000), path)
+    # the returned frame reads the model lazily, when it is collected: the
+    # directory can only go when this interpreter exits
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
     applied = nb_quality_apply(docs, load_nb_model(spark, path))
     fused = nb_quality_scores(docs, seed, max_vocab=1000)
     a = applied.select(F.col("doc_id"), F.col("n_tokens").alias("a_nt"),

@@ -17,11 +17,11 @@ from pathlib import Path
 @dataclass
 class ReaderConfig:
     # config.thrift:32-88 (LogStreamReaderConfig / Text+ThriftReaderConfig)
-    # text ≡ tail: lines from the tail reader (per-inode byte offsets,
-    # growing and rotating files); tail_thrift: framed LogMessages from the
-    # same reader; thrift: whole files via binaryFile (sources module doc)
+    # text ≡ tail: lines or multi-line messages from the tail reader;
+    # tail_thrift: framed LogMessages from it; thrift: whole files via
+    # binaryFile, or the tail reader with pod_metadata (sources module doc)
     type: str = "text"                      # text | tail | tail_thrift | thrift
-    message_start_regex: str | None = None  # multi-line framing (S3/S4)
+    message_start_regex: str | None = None  # text/tail: starts a message (S3/S4)
     filter_message_regex: str | None = None # T1
     max_message_size: int = 102400          # common/SingerConfigDef.java:106-107
     # tail readers: per-file per-trigger catch-up budget (0/None = unlimited)

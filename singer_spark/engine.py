@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from singer_spark import sinks, sources
-from singer_spark.config import LogConfig, ReaderConfig, SingerConfig
+from singer_spark.config import LogConfig, SingerConfig
 from singer_spark.partitioners import get_partitioner
 from singer_spark.transforms import TransformConfig, apply_transforms, inject_headers
 
@@ -102,12 +102,6 @@ def enforce_retention(log_dir: str, retention_seconds: int,
     return removed
 
 
-def _multiline(r: ReaderConfig) -> bool:
-    """Multi-line framing (S3/S4) still reads whole files through
-    binaryFile; see the sources module docstring."""
-    return r.type == "text" and bool(r.message_start_regex)
-
-
 def _source_glob(cfg: LogConfig) -> str:
     """The glob under `log_dir` that the tail reader reads, and so the files
     retention may delete.  D8: with `reader.pod_metadata` log_dir is the
@@ -117,21 +111,21 @@ def _source_glob(cfg: LogConfig) -> str:
 
 def build_source(spark: SparkSession, cfg: LogConfig) -> DataFrame:
     r = cfg.reader
-    if r.type == "thrift":
+    if r.type not in ("text", "tail", "tail_thrift", "thrift"):
+        raise ValueError(f"unsupported reader type: {r.type} "
+                         f"(expected text, tail, tail_thrift or thrift)")
+    if r.type == "thrift" and not r.pod_metadata:
         return sources.thrift_stream(spark, cfg.log_dir, glob=cfg.log_stream_regex,
                                      max_message_size=r.max_message_size,
                                      max_files_per_trigger=cfg.processor.batch_size)
-    if _multiline(r):
-        return sources.multiline_text_stream(spark, cfg.log_dir, glob=cfg.log_stream_regex,
-                                             message_start_regex=r.message_start_regex)
-    # text, tail and tail_thrift: the tail reader — per-inode byte offsets
-    # over growing and rotating files (S7/S2)
+    # the rest, pod logs of thrift included: the tail reader (per-inode offsets, S7/S2)
     from singer_spark.streaming.tail import tail_stream
 
-    mode = "thrift" if r.type == "tail_thrift" else "text"
+    mode = "thrift" if r.type in ("thrift", "tail_thrift") else "text"
     df = tail_stream(spark, cfg.log_dir, glob=_source_glob(cfg), mode=mode,
                      max_message_size=r.max_message_size,
-                     max_bytes_per_trigger=r.max_bytes_per_trigger)
+                     max_bytes_per_trigger=r.max_bytes_per_trigger,
+                     message_start_regex=r.message_start_regex)
     if r.pod_metadata:
         df = sources.with_pod_metadata(df, "file" if mode == "thrift" else "path")
     return df
@@ -147,8 +141,7 @@ def build_transforms(df: DataFrame, cfg: LogConfig,
         prepend_hostname=r.prepend_hostname,
         prepend_timestamp_format="yyyy-MM-dd HH:mm:ss" if r.prepend_timestamp else None,
         delimiter=r.prepend_field_delimiter,
-        # only the multi-line framer keeps line ends; tail rows carry none
-        trim_newline=_multiline(r),
+        trim_newline=False,  # no reader yields line ends
         sample_percent=p.sample_percent,
         max_message_bytes=r.max_message_size,
     )
@@ -435,9 +428,8 @@ class PipelineManager:
         """One drain-everything-available cycle (Trigger.AvailableNow against
         the log's checkpoint — resumes where the last cycle stopped).
         Returns the query's summed `numInputRows`: source rows, which is
-        messages for the tail reader (`text`, `tail`, `tail_thrift`) but
-        FILES for the `binaryFile`-backed readers (`thrift`, multi-line
-        text: one row per file blob)."""
+        messages for every reader except `thrift` without `pod_metadata`,
+        whose `binaryFile` source yields one row per FILE."""
         query = self._start_query(cfg, audit_sink, available_now=True)
         query.awaitTermination()
         rows = 0

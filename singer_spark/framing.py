@@ -11,9 +11,10 @@
 2. Text framer — multi-line message framing by `messageStartRegex`
    (reference: reader/TextMessageReader.java:88-138, TextLogFileReader.java).
 
-Both codecs run inside Arrow-batched `mapInPandas` at the DataFrame layer:
-whole files (or text blobs) in, LogMessage rows out.  Framing is done within
-a file so messages never straddle Spark partition boundaries — the same
+The thrift codec runs inside Arrow-batched `mapInPandas` over whole files
+(`decode_thrift_blobs`) and inside the tail reader over byte ranges; the
+text framer runs inside the tail reader.  Both frame one file range at a
+time, so messages never straddle Spark partition boundaries — the same
 invariant the reference gets from per-file readers (SURVEY.md §7.3).
 """
 
@@ -452,34 +453,6 @@ def frame_text(blob: str, message_start_regex: str | None,
     if current and eof_as_boundary:
         messages.append("".join(current))
     return messages
-
-
-def frame_text_blobs(df: DataFrame, content_col: str = "content",
-                     path_col: str = "path",
-                     message_start_regex: str | None = None) -> DataFrame:
-    """Whole-file text blobs → framed message rows (value: string).
-    Framing within a file keeps multi-line messages intact across
-    micro-batches (SURVEY.md §7.3 hard-parts)."""
-    import pandas as pd
-
-    schema = StructType([
-        StructField("value", StringType(), False),
-        StructField("file", StringType(), True),
-        StructField("offset", LongType(), True),
-    ])
-
-    def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for path, blob in zip(pdf[path_col], pdf[content_col]):
-                text = blob.decode("utf-8") if isinstance(blob, (bytes, bytearray)) else str(blob)
-                off = 0
-                for msg in frame_text(text, message_start_regex):
-                    rows.append((msg, path, off))
-                    off += len(msg.encode("utf-8"))
-            yield pd.DataFrame(rows, columns=["value", "file", "offset"])
-
-    return df.mapInPandas(gen, schema)
 
 
 # ---------------------------------------------------------------------------

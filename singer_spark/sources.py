@@ -2,20 +2,18 @@
 
 One file-reading model: the tail reader (`streaming.tail`), which keys each
 file position by inode and byte offset like the reference's LogPosition.
-`reader.type` text and tail (lines) and tail_thrift (framed LogMessages) all
+`reader.type` text and tail (lines, or multi-line messages framed by
+``message_start_regex``, S3/S4) and tail_thrift (framed LogMessages) all
 run on it, and so does `reader.pod_metadata` (a ``*/<glob>`` over the pod
-log directories, pod columns parsed from `path`).  It delivers lines
-appended to a growing file and keeps its offset across rename rotation and
-restart.
+log directories, pod columns parsed from `path`), for every reader type.
+It delivers what is appended to a growing file and keeps its offset across
+rename rotation and restart.
 
-Two readers still ship whole files through Spark's `binaryFile` source,
-each seeing a file once, when it is first listed:
-
-- `thrift_stream` (``reader.type=thrift``, S1/S2) — `engine.run_cycle`
-  counts its input rows as files, and the benchmark pins that count, so it
-  moves to the tail reader together with that pin;
-- `multiline_text_stream` (``message_start_regex``, S3/S4) — the tail
-  reader has no rule yet for ending the last message of a rotated file.
+One reader still ships whole files through Spark's `binaryFile` source,
+seeing a file once, when it is first listed: `thrift_stream`
+(``reader.type=thrift``, S1/S2).  `engine.run_cycle` counts its input rows
+as files, and the benchmark pins that count, so it moves to the tail
+reader together with that pin.
 
 `pathGlobFilter` plays the role of the reference's logStreamRegex
 (common/LogStream.java); `maxFilesPerTrigger` bounds a micro-batch like the
@@ -29,41 +27,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from singer_spark.framing import decode_thrift_blobs, frame_text_blobs
-
-# Streaming binaryFile sources require an explicit schema (batch infers it).
-_BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
-
-
-def _binary_file_stream(spark: SparkSession, log_dir: str, glob: str,
-                        max_files_per_trigger: int | None = None) -> DataFrame:
-    reader = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", glob)
-        .option("latestFirst", "false")
-    )
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.load(log_dir)
-
-
-def multiline_text_stream(spark: SparkSession, log_dir: str, glob: str = "*",
-                          message_start_regex: str | None = None) -> DataFrame:
-    """Streaming multi-line framed text source: whole files via binaryFile,
-    framed by messageStartRegex inside each file so messages never straddle
-    batch boundaries. Columns: value, file, offset."""
-    return frame_text_blobs(_binary_file_stream(spark, log_dir, glob),
-                            message_start_regex=message_start_regex)
+from singer_spark.framing import decode_thrift_blobs
 
 
 def thrift_stream(spark: SparkSession, log_dir: str, glob: str = "*",
                   max_message_size: int | None = None,
                   max_files_per_trigger: int | None = None) -> DataFrame:
     """Streaming framed-thrift LogMessage source. Columns: LOG_MESSAGE_SCHEMA."""
-    return decode_thrift_blobs(
-        _binary_file_stream(spark, log_dir, glob, max_files_per_trigger),
-        max_message_size=max_message_size)
+    reader = (
+        spark.readStream.format("binaryFile")
+        # a streaming binaryFile source needs an explicit schema
+        .schema("path string, modificationTime timestamp, length long, content binary")
+        .option("pathGlobFilter", glob)
+        .option("latestFirst", "false")
+    )
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return decode_thrift_blobs(reader.load(log_dir), max_message_size=max_message_size)
 
 
 # ---------------------------------------------------------------------------

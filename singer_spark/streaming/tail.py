@@ -47,6 +47,13 @@ Modes: ``mode=text`` (default) yields (value string, path, pos);
 (reader/ThriftLogFileReader.java:91-175) and yields the LOG_MESSAGE columns
 (key, value, timestampInNanos, checksum, auditHeaders, file, offset).
 
+Multi-line text (``message_start_regex``, reader/TextMessageReader.java
+:88-138): `framing.frame_text` frames each read range, one row per message
+at its first byte.  A message ends at the next start line or the end of the
+bytes read, so a range is one partition and a paced end snaps back to a
+start line; continuation lines appended after their message was read form
+their own leading message, as frame_text does for orphan lines.
+
 Globs match file names with fnmatch in `log_dir`, or one directory level
 down (``*/app.log``, the pod-log layout).  Bytes are read as written, so
 the glob must not match compressed (``.gz``) rotations — as in Singer.
@@ -64,6 +71,7 @@ from __future__ import annotations
 
 import fnmatch
 import os
+import re
 import stat
 import zlib
 from typing import Iterator
@@ -90,6 +98,29 @@ def _committed_end_text(f, size: int) -> int:
             return lo + idx + 1
         pos = lo
     return 0
+
+
+def _last_message_start(f, lo: int, hi: int, regex: str) -> int:
+    """Offset of the last line in (lo, hi] that matches `regex` — where a
+    message that may run past `hi` starts (the line at `hi` counts when it
+    is complete); `lo` when there is none.  `lo` and `hi` are line
+    boundaries.  Backward chunked scan from `hi`."""
+    f.seek(hi)
+    line = f.readline(_SCAN_BACK)
+    pos, carry = hi, line if line.endswith(b"\n") else b""
+    while pos > lo:
+        chunk_lo = max(lo, pos - _SCAN_BACK)
+        f.seek(chunk_lo)
+        buf = f.read(pos - chunk_lo) + carry
+        cut = len(buf)  # end of the line under test
+        nl = buf.rfind(b"\n", 0, cut - 1)
+        while nl >= 0:
+            if re.match(regex, buf[nl + 1:cut].decode("utf-8", errors="replace")):
+                return chunk_lo + nl + 1
+            cut = nl + 1
+            nl = buf.rfind(b"\n", 0, cut - 1)
+        carry, pos = buf[:cut], chunk_lo
+    return lo
 
 
 def _empty_entry(st: os.stat_result) -> dict:
@@ -323,6 +354,7 @@ class TailStreamReader(DataSourceStreamReader):
             raise ValueError(f"singer_tail mode must be text|thrift, got {self.mode}")
         self.chunk_bytes = int(options.get("chunk_bytes", 64 * 1024 * 1024))
         self.max_message_size = int(options.get("max_message_size", 0)) or None
+        self.message_start_regex = options.get("message_start_regex") or None  # text
         # catch-up pacing: at most this many NEW bytes per file per trigger,
         # snapped down to a line/frame boundary (0 = unlimited).  The batch
         # analog of the reference's per-batch read limits
@@ -486,6 +518,10 @@ class TailStreamReader(DataSourceStreamReader):
         def scan(lim: int) -> None:
             if self.mode == "text":
                 entry["off"] = _committed_end_text(f, lim)
+                if self.message_start_regex and lim < st.st_size:
+                    # paced: end where the last message that may run on starts
+                    entry["off"] = _last_message_start(
+                        f, base, entry["off"], self.message_start_regex)
             else:
                 entry["off"], entry["bounds"] = self._walk_frames(f, lim, start)
 
@@ -682,16 +718,14 @@ class TailStreamReader(DataSourceStreamReader):
                 # on a fresh reader has no cache and reads the range whole
                 cached = self._cache.get(ino, {})
                 cuts = [b for b in cached.get("bounds", []) if s < b < e]
-                lo = s
-                for hi in cuts + [e]:
-                    parts.append(TailPartition(path, lo, hi, s, int(ino)))
-                    lo = hi
+            elif self.message_start_regex:
+                cuts = []  # one read per range: a message never straddles two
             else:
-                lo = s
-                while lo < e:
-                    hi = min(lo + self.chunk_bytes, e)
-                    parts.append(TailPartition(path, lo, hi, s, int(ino)))
-                    lo = hi
+                cuts = range(s + self.chunk_bytes, e, self.chunk_bytes)
+            lo = s
+            for hi in [*cuts, e]:
+                parts.append(TailPartition(path, lo, hi, s, int(ino)))
+                lo = hi
         return parts
 
     # -- execution (runs on executors) --------------------------------------
@@ -727,24 +761,40 @@ class TailStreamReader(DataSourceStreamReader):
             f"{path}) is no longer in {self.log_dir} — file "
             "deleted between planning and read")
 
+    def _read_range(self, partition: TailPartition) -> tuple[bytes, str]:
+        f, path = self._open_inode(partition.path, partition.ino)
+        with f:
+            f.seek(partition.start)
+            return f.read(partition.end - partition.start), path
+
     def read(self, partition: TailPartition) -> Iterator[tuple]:
         """Text: TextInputFormat semantics over [start, end) — a line belongs
         to the chunk containing its first byte; a non-first chunk seeks one
         byte back to find its first line start.  Thrift: `start` is always a
-        frame boundary, so the slice decodes standalone."""
+        frame boundary, so the slice decodes standalone.  Multi-line text:
+        the partition is the whole range, framed by `frame_text`."""
         start, end = partition.start, partition.end
         if self.mode == "thrift":
             from singer_spark.framing import AUDIT_HEADERS_SCHEMA, decode_file_tolerant
 
-            f, path = self._open_inode(partition.path, partition.ino)
-            with f:
-                f.seek(start)
-                blob = f.read(end - start)
+            blob, path = self._read_range(partition)
             for key, msg, ts, crc, audit, _path, off in decode_file_tolerant(
                     blob, path, self.max_message_size, base_offset=start):
                 audit_row = (tuple(audit.get(fld.name) for fld in AUDIT_HEADERS_SCHEMA.fields)
                              if audit is not None else None)
                 yield (key, msg, ts, crc, audit_row, path, off)
+            return
+        if self.message_start_regex:
+            from singer_spark.framing import frame_text
+
+            blob, path = self._read_range(partition)
+            # surrogateescape round-trips every byte, so `pos` stays exact
+            for msg in frame_text(blob.decode("utf-8", errors="surrogateescape"),
+                                  self.message_start_regex):
+                raw = msg.encode("utf-8", errors="surrogateescape")
+                out = raw[:-1] if raw.endswith(b"\n") else raw
+                yield (out.decode("utf-8", errors="replace"), path, start)
+                start += len(raw)
             return
         f, path = self._open_inode(partition.path, partition.ino)
         with f:
@@ -797,7 +847,8 @@ class TailDataSource(DataSource):
 def tail_stream(spark, log_dir: str, glob: str = "*",
                 chunk_bytes: int = 64 * 1024 * 1024, mode: str = "text",
                 max_message_size: int | None = None,
-                max_bytes_per_trigger: int | None = None):
+                max_bytes_per_trigger: int | None = None,
+                message_start_regex: str | None = None):
     """readStream over growing files in `log_dir` (registers the source)."""
     spark.dataSource.register(TailDataSource)
     reader = (
@@ -815,4 +866,6 @@ def tail_stream(spark, log_dir: str, glob: str = "*",
         reader = reader.option("max_message_size", str(max_message_size))
     if max_bytes_per_trigger:
         reader = reader.option("max_bytes_per_trigger", str(max_bytes_per_trigger))
+    if message_start_regex:
+        reader = reader.option("message_start_regex", message_start_regex)
     return reader.load()

@@ -257,7 +257,9 @@ def test_heartbeat_latency_percentiles_from_progress(spark, tmp_path):
          .writeStream.format("noop")
          .option("checkpointLocation", str(tmp_path / "hb_ckpt"))
          .queryName("hb_healthy")
-         .trigger(availableNow=True).start())
+         # no availableNow: that query may end before build_status lists
+         # the active queries, and this one must still be running
+         .start())
     try:
         q.processAllAvailable()
         status = build_status(spark, started_at=time.time(),

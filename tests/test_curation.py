@@ -486,6 +486,38 @@ def test_curate_learned_gate_pretrained_model(spark, tmp_path):
     assert 102 in kept  # NULL pass-through holds on the apply path
 
 
+def test_quality_model_roundtrip_removes_its_model_at_exit(tmp_path):
+    """quality_model_roundtrip saves an NB model under the temp dir and
+    reads it lazily; the directory is gone once the interpreter exits."""
+    import os
+    import subprocess
+    import sys
+
+    import pandas as pd
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pd.DataFrame({
+        "doc_id": range(8),
+        "text": ["careful structured prose with citations"] * 4
+                + ["click buy spam now free winner"] * 4,
+        "source": ["src0"] * 4 + ["web"] * 4,
+    }).to_parquet(sf / "documents.parquet")
+    code = ("import glob, sys, tempfile; from pyspark.sql import SparkSession; "
+            "import __spark_entry__ as m; "
+            "spark = SparkSession.builder.master('local[1]')"
+            ".config('spark.ui.enabled', 'false').getOrCreate(); "
+            "(row,) = m.queries()['quality_model_roundtrip'](spark, sys.argv[1]).collect(); "
+            "print(row.n_docs, row.llr_match, "
+            "len(glob.glob(tempfile.gettempdir() + '/singer_nb_model_*')))")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code, str(sf)], cwd=repo, check=True,
+                         capture_output=True, text=True,
+                         env={**os.environ, "TMPDIR": str(tmp_path)}).stdout
+    assert out.split()[-3:] == ["8", "True", "1"]  # saved, used, then ...
+    assert not list(tmp_path.glob("singer_nb_model_*"))  # ... removed at exit
+
+
 def test_curate_redact_pii_scrubs_published_text_only(spark):
     """r11: the PII stage — applied LAST, so (a) survivor ids are
     identical with and without it (redaction never changes which docs

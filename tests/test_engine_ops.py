@@ -455,6 +455,48 @@ def test_pod_metadata_parsed_and_injectable_as_headers(spark, tmp_path):
     assert bytes(a.headers["podNamespace"]) == b"team-a"
 
 
+@pytest.mark.parametrize("reader", [
+    {"type": "thrift"},
+    {"type": "text", "message_start_regex": r"^\d{4}-"},
+], ids=["thrift", "multiline_text"])
+def test_framed_pod_logs_carry_pod_headers(spark, tmp_path, reader):
+    """Pod logs of the framed readers (thrift, multi-line text) run on the
+    tail reader like plain lines: one framed message in ns_pod_uid/app.log
+    arrives whole with a podNamespace header."""
+    from singer_spark.config import ReaderConfig
+    from singer_spark.framing import encode_log_message
+
+    pod_log = tmp_path / "pods" / "ns_pod_uid" / "app.log"
+    os.makedirs(pod_log.parent)
+    if reader["type"] == "thrift":
+        want = b"one message"
+        pod_log.write_bytes(encode_log_message(want))
+    else:
+        want = "2024-01-01 one message\n  at a stack line"
+        pod_log.write_text(want + "\n")
+    cfg = LogConfig(name=f"pod_{reader['type']}", log_dir=str(tmp_path / "pods"),
+                    log_stream_regex="app.log",
+                    reader=ReaderConfig(pod_metadata=True, **reader),
+                    writer=WriterConfig(type="memory"),
+                    checkpoint_dir=str(tmp_path / "ck"))
+    assert PipelineManager(spark).run_cycle(cfg) == 1
+    (row,) = spark.table(cfg.name).collect()
+    assert row.value == want
+    assert bytes(row.headers["podNamespace"]) == b"ns"
+
+
+def test_unknown_reader_type_is_rejected(spark, tmp_path):
+    """A typo in reader.type fails at plan build, naming the accepted
+    types, instead of silently tailing text."""
+    from singer_spark.config import ReaderConfig
+    from singer_spark.engine import build_source
+
+    cfg = _cfg(tmp_path, "typo")
+    cfg.reader = ReaderConfig(type="thirft")
+    with pytest.raises(ValueError, match="text, tail, tail_thrift or thrift"):
+        build_source(spark, cfg)
+
+
 # ---------------------------------------------------------------------------
 # D8 completion — pod-SPEC metadata (labels/annotations) from a kubelet
 # /pods endpoint, fake-server tested like the Kafka/Pulsar transports.

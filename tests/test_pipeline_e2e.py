@@ -132,22 +132,51 @@ def test_streaming_resume_from_checkpoint(spark, tmp_path):
 
 
 def test_multiline_framing_stream(spark, tmp_path):
+    """message_start_regex frames multi-line messages on the tail reader:
+    growth, rename rotation and a restart on the same checkpoint deliver
+    every message exactly once and whole."""
     log_dir = str(tmp_path / "ml")
+    out_dir = str(tmp_path / "out")
     os.makedirs(log_dir)
-    with open(f"{log_dir}/app.log", "w") as f:
-        f.write("2024-01-01 ERROR a\n  stack1\n  stack2\n2024-01-02 INFO b\n")
     cfg = LogConfig(
-        name="ml", log_dir=log_dir, log_stream_regex="*.log",
+        name="ml", log_dir=log_dir, log_stream_regex="app.log*",
         reader=ReaderConfig(type="text", message_start_regex=r"^\d{4}-\d{2}-\d{2} "),
-        writer=WriterConfig(type="memory"),
+        writer=WriterConfig(type="file", path=out_dir, format="parquet",
+                            min_upload_seconds=0),
+        checkpoint_dir=str(tmp_path / "ck"),
     )
+    msgs = {
+        "a": "2024-01-01 ERROR a\n  stack1\n  stack2",
+        "b": "2024-01-02 ERROR b\n  at b.1",
+        "c": "2024-01-03 INFO c",
+        "d": "2024-01-04 WARN d\n  at d.1",
+        "e": "2024-01-05 INFO e",
+    }
+    app_log = f"{log_dir}/app.log"
+
+    def write(*names: str) -> None:
+        _append(app_log, "".join(msgs[n] + "\n" for n in names))
+
     mgr = PipelineManager(spark)
     q = mgr.start_log(cfg)
-    q.processAllAvailable()
-    rows = spark.sql("select * from ml").collect()
-    mgr.stop_all()
-    assert len(rows) == 2
-    assert "stack1" in rows[0].value and "stack2" in rows[0].value
+    try:
+        write("a")
+        q.processAllAvailable()
+        write("b", "c")
+        q.processAllAvailable()
+        os.rename(app_log, f"{log_dir}/app.log.1")
+        write("d")
+        q.processAllAvailable()
+    finally:
+        mgr.stop_all()
+    write("e")
+    mgr = PipelineManager(spark)
+    try:
+        mgr.start_log(cfg).processAllAvailable()
+    finally:
+        mgr.stop_all()
+    got = sorted(r.value for r in spark.read.parquet(out_dir).collect())
+    assert got == sorted(msgs.values())
 
 
 def test_build_transforms_adds_partition_column(spark, tmp_path):

@@ -415,6 +415,31 @@ def test_tail_max_bytes_per_trigger_paces_text(tmp_path):
     assert offs == [250, 500, 750, 1000, 1000, 1000]
 
 
+def test_tail_max_bytes_per_trigger_paces_multiline_messages(tmp_path):
+    """Pacing with message_start_regex: each paced end snaps back to a
+    message start, so every multi-line message arrives once and unsplit,
+    and the backlog still drains over several triggers."""
+    d = str(tmp_path)
+    msgs = [f"2024-01-01 m{i:02d}" + "".join(f"\n  at f{j}" for j in range(i % 4))
+            for i in range(40)]
+    _append(f"{d}/m.log", "".join(m + "\n" for m in msgs))
+    size = os.path.getsize(f"{d}/m.log")
+    r = _reader(d, max_bytes_per_trigger=100, message_start_regex=r"^\d{4}-")
+    prev, got, offs = r.initialOffset(), [], []
+    for _ in range(size // 10):  # bounded: a stalled pacer fails, not hangs
+        cur = r.latestOffset()
+        got += [t for p in r.partitions(prev, cur) for t in r.read(p)]
+        (rec,) = cur["files"].values()
+        offs.append(rec["off"])
+        prev = cur
+    assert [v for v, _, _ in got] == msgs
+    with open(f"{d}/m.log", "rb") as f:
+        data = f.read()
+    assert all(data[pos:].startswith(v.encode()) for v, _, pos in got)
+    assert offs[-1] == size and len(set(offs)) > 5
+    assert all(b - a <= 100 for a, b in zip([0] + offs, offs))
+
+
 def test_tail_cap_does_not_stall_on_giant_line(tmp_path):
     d = str(tmp_path)
     _append(f"{d}/g.log", "x" * 500 + "\n")  # one line far above the cap
