@@ -435,7 +435,9 @@ def frame_text(blob: str, message_start_regex: str | None,
     `message_start_regex` begins a new message; preceding non-matching lines
     belong to the previous message (reader/TextMessageReader.java:88-138).
     With no regex, every line is one message.  Without `eof_as_boundary` the
-    trailing partial message is withheld (it may still be growing)."""
+    trailing partial message is withheld (it may still be growing).  Lines
+    end at ``\n`` only, as the tail reader reads them: a ``\r`` or form
+    feed inside a line is content."""
     if message_start_regex is None:
         lines = blob.split("\n")
         if lines and lines[-1] == "":
@@ -444,7 +446,7 @@ def frame_text(blob: str, message_start_regex: str | None,
     start = re.compile(message_start_regex)
     messages: list[str] = []
     current: list[str] = []
-    for line in blob.splitlines(keepends=True):
+    for line in re.findall(r"[^\n]*\n|[^\n]+\Z", blob):
         if start.match(line) and current:
             messages.append("".join(current))
             current = [line]

@@ -123,6 +123,25 @@ def _last_message_start(f, lo: int, hi: int, regex: str) -> int:
     return lo
 
 
+def _record_end(f, base: int, size: int, regex: str | None) -> int:
+    """End of the record that starts at line boundary `base`, within
+    `size`: just after its line end, or with `regex` where the next
+    complete line matching it starts (else the last complete line's end).
+    `base` while the record's first line is incomplete."""
+    f.seek(base)
+    pos = base
+    while pos < size:
+        line = f.readline(size - pos)
+        if not line.endswith(b"\n"):
+            break
+        if regex is None:
+            return pos + len(line)
+        if pos > base and re.match(regex, line.decode("utf-8", errors="replace")):
+            return pos
+        pos += len(line)
+    return pos
+
+
 def _empty_entry(st: os.stat_result) -> dict:
     """A scan-cache entry committing nothing yet for the file `st`."""
     return {"sig": (st.st_size, st.st_mtime_ns), "off": 0, "fp": None,
@@ -425,11 +444,13 @@ class TailStreamReader(DataSourceStreamReader):
         f.seek(0)
         return zlib.crc32(f.read(fplen)) & 0xFFFFFFFF, fplen
 
-    def _walk_frames(self, f, size: int, start: int) -> tuple[int, list[int]]:
+    def _walk_frames(self, f, size: int, start: int,
+                     until: int | None = None) -> tuple[int, list[int]]:
         """Forward walk of TFramedTransport length prefixes from a known
         frame boundary `start`: returns (committed end, chunk boundaries
         every ~chunk_bytes).  Only appended bytes are walked when the cache
-        held the previous end — steady-state cost is O(new frames).
+        held the previous end — steady-state cost is O(new frames).  With
+        `until`, the walk stops after the first frame that ends past it.
 
         A length prefix beyond the 10× max_message_size tolerance (or an
         absolute 1 GiB sanity bound) is corruption, not a pending tail —
@@ -463,6 +484,8 @@ class TailStreamReader(DataSourceStreamReader):
             if pos - last_bound >= self.chunk_bytes:
                 bounds.append(pos)
                 last_bound = pos
+            if until is not None and pos > until:
+                break
         return pos, bounds
 
     def _cached(self, st: os.stat_result) -> dict | None:
@@ -515,22 +538,25 @@ class TailStreamReader(DataSourceStreamReader):
             if head == cached["fp"] and st.st_size >= cached["off"]:
                 start = cached["off"]
 
-        def scan(lim: int) -> None:
-            if self.mode == "text":
-                entry["off"] = _committed_end_text(f, lim)
-                if self.message_start_regex and lim < st.st_size:
-                    # paced: end where the last message that may run on starts
-                    entry["off"] = _last_message_start(
-                        f, base, entry["off"], self.message_start_regex)
-            else:
-                entry["off"], entry["bounds"] = self._walk_frames(f, lim, start)
-
-        scan(limit)
+        if self.mode != "text":
+            entry["off"], entry["bounds"] = self._walk_frames(f, limit, start)
+        else:
+            entry["off"] = _committed_end_text(f, limit)
+            if self.message_start_regex and not entry["caught_up"]:
+                # paced: end where the last message that may run on starts
+                entry["off"] = _last_message_start(
+                    f, base, entry["off"], self.message_start_regex)
         if not entry["caught_up"] and entry["off"] <= base:
-            # a single line/frame larger than the pace budget must
-            # still go through — retry unbounded rather than stall
-            entry["caught_up"] = True
-            scan(st.st_size)
+            # a single record larger than the pace budget must still go
+            # through, alone: pace to its end rather than stall
+            if self.mode != "text":
+                entry["off"], entry["bounds"] = self._walk_frames(
+                    f, st.st_size, start, until=base)
+            else:
+                entry["off"] = _record_end(f, base, st.st_size,
+                                           self.message_start_regex)
+            # caught up only if it is still pending (nothing to reopen for)
+            entry["caught_up"] = entry["off"] <= base
         entry["fp"], entry["fplen"] = self._fingerprint(f, entry["off"])
         return entry
 

@@ -3,11 +3,14 @@
 Every Python task starts with pyspark's `setup_spark_files`, which ends in
 `importlib.invalidate_caches()`.  Before CPython 3.13 that call makes every
 `zipimporter` on the worker's `sys.path` re-read its archive's central
-directory at once (3.13 made it lazy, gh-103200).  A PySpark worker has
-16 of them: the package prefixes inside pyspark.zip, the spark-core jar and
-py4j, about 27k entries together, 0.16-0.23 s of CPU per task on a 4-vCPU
-host.  Every Python crossing pays it (`mapInPandas`, `mapInArrow`,
-`DataSource.read`), on a reused warm worker as much as on a fresh one.
+directory at once (3.13 made it lazy, gh-103200).  Started through
+`session.get_spark`'s launcher, a worker has 2 of them, both on the
+spark-core jar (5,359 entries): 0.04-0.12 s of CPU per task on a 4-vCPU
+host.  Under Spark's own `pythonExec` it has 16, the package prefixes
+inside pyspark.zip, the jar and py4j: 0.11-0.21 s.  The daemon cuts
+either to ~0.1 ms.  Every Python crossing
+pays it (`mapInPandas`, `mapInArrow`, `DataSource.read`), on a reused warm
+worker as much as on a fresh one.
 
 Here `zipimporter.invalidate_caches` re-reads an archive only when its
 `(st_mtime_ns, st_size)` differs from the values at that importer's last

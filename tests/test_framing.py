@@ -201,6 +201,14 @@ def test_frame_text_leading_continuation_attaches_to_first():
     assert msgs[0] == "orphan line\n"
 
 
+def test_frame_text_splits_at_newline_only():
+    """`\r` and form feed are line content, not line ends: the blob holds
+    two lines and only the first starts with a date."""
+    blob = "2024-01-01 a\r2024-01-02 b\n  cont\x0c2024-01-03 c\n"
+    assert frame_text(blob, r"^\d{4}-") == [blob]
+    assert frame_text(blob + "2024-01-04 d\n", r"^\d{4}-") == [blob, "2024-01-04 d\n"]
+
+
 def test_frame_text_eof_boundary_withheld():
     msgs = frame_text("START a\nSTART b-partial", r"^START", eof_as_boundary=False)
     assert msgs == ["START a\n"]  # trailing message may still be growing

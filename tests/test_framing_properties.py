@@ -5,6 +5,7 @@ exactly the property asserted here over arbitrary inputs)."""
 
 from __future__ import annotations
 
+import itertools
 import zlib
 
 from hypothesis import given, settings
@@ -81,6 +82,21 @@ def test_frame_text_lossless_partition(lines):
     # concatenating the messages reproduces the blob byte-for-byte
     framed = frame_text(blob, r"^MSG", eof_as_boundary=True)
     assert "".join(framed) == blob
+
+
+# every character str.splitlines breaks at, plus a start marker
+text_with_breaks = st.text(alphabet=st.sampled_from(
+    "1a \n\r\x0b\x0c\x1c\x1d\x1e\x85\u2028\u2029"), max_size=200)
+
+
+@settings(max_examples=300, deadline=None)
+@given(text_with_breaks)
+def test_frame_text_starts_messages_at_line_starts_only(blob):
+    msgs = frame_text(blob, r"^1")
+    assert "".join(msgs) == blob
+    starts = itertools.accumulate([0] + [len(m) for m in msgs[:-1]])
+    for m, at in zip(msgs, starts):
+        assert at == 0 or (blob[at - 1] == "\n" and m.startswith("1"))
 
 
 def test_corrupt_string_length_stays_frame_local():

@@ -5,7 +5,10 @@ reader/ThriftReader.java:74-151 (seekable offset resume)."""
 
 from __future__ import annotations
 
+import itertools
 import os
+
+import pytest
 
 from singer_spark.streaming.tail import tail_stream
 
@@ -446,6 +449,46 @@ def test_tail_cap_does_not_stall_on_giant_line(tmp_path):
     r = _reader(d, max_bytes_per_trigger=100)
     (rec,) = r.latestOffset()["files"].values()
     assert rec["off"] == 501  # unbounded retry let it through
+
+
+def _records(kind: str) -> tuple[list[bytes], list[bytes], dict]:
+    """60 records of 26-88 bytes (so at most one fits a 50-byte budget),
+    some of them larger than it: (file records, delivered values, reader
+    options)."""
+    from singer_spark.framing import encode_log_message
+
+    bodies = [f"2024-01-01 m{i:02d} " + "x" * (10 + i * 7 % 40) for i in range(60)]
+    if kind == "thrift":
+        return ([encode_log_message(b.encode()) for b in bodies],
+                [b.encode() for b in bodies], {"mode": "thrift"})
+    if kind == "lines":
+        return [f"{b}\n".encode() for b in bodies], [b.encode() for b in bodies], {}
+    msgs = [b + "".join(f"\n  at f{j}" for j in range(i % 3))
+            for i, b in enumerate(bodies)]
+    return ([f"{m}\n".encode() for m in msgs], [m.encode() for m in msgs],
+            {"message_start_regex": r"^\d{4}-"})
+
+
+@pytest.mark.parametrize("kind", ["multiline", "lines", "thrift"])
+def test_tail_record_over_the_budget_goes_through_alone(tmp_path, kind):
+    """A record larger than max_bytes_per_trigger takes a trigger of its
+    own and ends there: the budget still paces every record after it (it
+    used to take the whole rest of the file: offsets 26, 67, then EOF)."""
+    d = str(tmp_path)
+    records, values, opts = _records(kind)
+    with open(f"{d}/m.log", "wb") as f:
+        f.writelines(records)
+    r = _reader(d, max_bytes_per_trigger=50, **opts)
+    prev, got, offs = r.initialOffset(), [], []
+    for _ in records:
+        cur = r.latestOffset()
+        got += [bytes(t[1]) if kind == "thrift" else t[0].encode()
+                for p in r.partitions(prev, cur) for t in r.read(p)]
+        (rec,) = cur["files"].values()
+        offs.append(rec["off"])
+        prev = cur
+    assert offs == list(itertools.accumulate(map(len, records)))
+    assert got == values
 
 
 def test_tail_cap_after_restart_skips_committed_region(tmp_path):
