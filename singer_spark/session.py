@@ -25,6 +25,18 @@ Tested on local[N]; the conf is chosen so the same code runs unchanged on a
   launcher, and only after one probe through it (~0.06 s) finds this
   driver's pyspark version and py4j outside any zip; otherwise Spark's
   `pythonExec` stays.
+- Streaming checkpoints on the local file system (`file:`) are written
+  through Hadoop's `RawLocalFs`, so their offset and commit logs get no
+  `.crc` side files.  Spark's checkpoint manager writes through
+  `FileContext`, which this setting picks for the `file:` scheme only:
+  HDFS and S3 checkpoints, and data files written through the
+  `FileSystem` API, keep their checksums.  Offset and commit files stay
+  atomic (temp file + rename); neither file system fsyncs, so all that is
+  lost is detection of bit rot in checkpoint files.  A checkpoint written
+  with `.crc` files resumes unchanged (the side files are ignored).  Per
+  trigger of a tail query, `walCommit` + `commitOffsets` fell from 61-95
+  to 36-39 ms (`tools/trigger_floor.py`, 4-vCPU host).  Only a
+  SparkContext `get_spark` creates gets this.
 - Python workers run under `singer_spark.worker_daemon` on Python < 3.13.
   Each Python task starts with `importlib.invalidate_caches()`, which
   before 3.13 re-reads the central directory of every zip on the worker's
@@ -113,8 +125,12 @@ def get_spark(app_name: str = "singer_spark", shuffle_partitions: int | None = N
     if sys.version_info < (3, 13):
         builder = builder.config("spark.python.daemon.module",
                                  "singer_spark.worker_daemon")
-    launcher = (_bytecode_python() if SparkContext._active_spark_context is None
-                else None)
+    launcher = None
+    if SparkContext._active_spark_context is None:
+        launcher = _bytecode_python()
+        # checkpoint logs on `file:` without `.crc` side files (module doc)
+        builder = builder.config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+                                 "org.apache.hadoop.fs.local.RawLocalFs")
     with _pyspark_python(launcher):
         return builder.getOrCreate()
 

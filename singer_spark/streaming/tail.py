@@ -41,6 +41,10 @@ would wait for rotation.  This module closes that gap with a
   chunk peeks one byte back to find its first line start; every chunk
   completes its last line past its end); thrift ranges split at the frame
   boundaries collected during the committed-end walk.
+- **A small trigger is one task.**  When a trigger's ranges total at most
+  `_ONE_TASK_BYTES` (and `chunk_bytes`), one partition carries them all,
+  read one after another: a live micro-batch of a few hundred KB over
+  several files pays one task's fixed cost, not one per file.
 
 Modes: ``mode=text`` (default) yields (value string, path, pos);
 ``mode=thrift`` decodes framed-thrift LogMessages
@@ -81,6 +85,19 @@ from pyspark.sql.datasource import DataSource, DataSourceStreamReader, InputPart
 TAIL_SCHEMA = "value string, path string, pos bigint"
 _SCAN_BACK = 65536
 _FP_BYTES = 4096
+# A trigger whose ranges total at most this many bytes (and `chunk_bytes`)
+# is read by ONE task instead of one per range: below it, a task's fixed
+# cost (scheduling, its Python workers, a producer flush) outweighs what
+# reading the files in parallel saves.  Sweep of 4-file text catch-up
+# drains, ~300-byte lines, one task per file vs one task, median addBatch
+# ms (pairs one task won), `tools/trigger_floor.py --drain-mib` on a tree
+# with this constant raised, two runs, 4-vCPU host:
+#   0.5 MiB  319 -> 278 (7/7)   287 -> 237 (8/9)
+#   1 MiB    335 -> 294 (7/7)   314 -> 244 (8/9)
+#   2 MiB    353 -> 327 (4/7)   302 -> 266 (7/9)
+#   4 MiB    364 -> 375 (2/7)   305 -> 324 (3/9)
+# A live trigger of perfbench's `live_tail_text` carries ~0.5 MB.
+_ONE_TASK_BYTES = 2 << 20
 
 
 def _committed_end_text(f, size: int) -> int:
@@ -174,6 +191,14 @@ class TailPartition(InputPartition):
         self.end = end
         self.batch_start = batch_start  # first chunk of the batch starts exact
         self.ino = ino  # identity — the path can rotate away before the read
+
+
+class TailRanges(InputPartition):
+    """A small trigger's ranges, for one task to read one after another, in
+    planning order."""
+
+    def __init__(self, ranges: list[TailPartition]):
+        self.ranges = ranges
 
 
 # ---------------------------------------------------------------------------
@@ -752,6 +777,9 @@ class TailStreamReader(DataSourceStreamReader):
             for hi in [*cuts, e]:
                 parts.append(TailPartition(path, lo, hi, s, int(ino)))
                 lo = hi
+        if len(parts) > 1 and sum(p.end - p.start for p in parts) \
+                <= min(_ONE_TASK_BYTES, self.chunk_bytes):
+            return [TailRanges(parts)]
         return parts
 
     # -- execution (runs on executors) --------------------------------------
@@ -793,7 +821,12 @@ class TailStreamReader(DataSourceStreamReader):
             f.seek(partition.start)
             return f.read(partition.end - partition.start), path
 
-    def read(self, partition: TailPartition) -> Iterator[tuple]:
+    def read(self, partition: TailPartition | TailRanges) -> Iterator[tuple]:
+        ranges = partition.ranges if isinstance(partition, TailRanges) else [partition]
+        for r in ranges:
+            yield from self._read_one(r)
+
+    def _read_one(self, partition: TailPartition) -> Iterator[tuple]:
         """Text: TextInputFormat semantics over [start, end) — a line belongs
         to the chunk containing its first byte; a non-first chunk seeks one
         byte back to find its first line start.  Thrift: `start` is always a

@@ -399,6 +399,91 @@ def test_tail_thrift_chunk_boundaries_align_to_frames(tmp_path):
     assert out == [f"payload-{i:03d}".encode() for i in range(50)]
 
 
+def _append_records(d: str, kind: str, tag: str) -> tuple[list, dict]:
+    """Append 20 records to each of app-0..3.log: (the values read back, in
+    file order; reader options for `kind`)."""
+    from singer_spark.framing import encode_log_message
+
+    values = []
+    for k in range(4):
+        bodies = [f"2024-01-01 {tag}-{k}-{i:02d}" for i in range(20)]
+        if kind == "thrift":
+            data = b"".join(encode_log_message(b.encode(), key=b"k") for b in bodies)
+            values += [b.encode() for b in bodies]
+        else:
+            if kind == "multiline":
+                bodies = [b + "".join(f"\n  at f{j}" for j in range(i % 3))
+                          for i, b in enumerate(bodies)]
+            data = "".join(b + "\n" for b in bodies).encode()
+            values += bodies
+        with open(f"{d}/app-{k}.log", "ab") as f:
+            f.write(data)
+    opts = {"thrift": {"mode": "thrift"}, "lines": {},
+            "multiline": {"message_start_regex": r"^\d{4}-"}}[kind]
+    return values, {"glob": "app-*.log*", **opts}
+
+
+def _value(kind: str, row: tuple):
+    return bytes(row[1]) if kind == "thrift" else row[0]
+
+
+@pytest.mark.parametrize("kind", ["lines", "multiline", "thrift"])
+def test_tail_small_trigger_is_one_partition(tmp_path, kind):
+    """A small trigger over 4 growing files is one partition carrying the
+    4 ranges in order; its rows equal those of the same ranges planned one
+    partition each (a reader whose chunk_bytes sits just under the
+    trigger's bytes), in the same order."""
+    from singer_spark.streaming.tail import TailPartition, TailRanges
+
+    d = str(tmp_path)
+    _, opts = _append_records(d, kind, "a")
+    r = _reader(d, **opts)
+    start = r.latestOffset()  # the files already hold committed bytes
+    values, _ = _append_records(d, kind, "b")
+    end = r.latestOffset()
+    (part,) = r.partitions(start, end)
+    assert isinstance(part, TailRanges) and len(part.ranges) == 4
+    assert all(rng.start > 0 for rng in part.ranges)  # mid-file: they grew
+    rows = list(r.read(part))
+    assert [_value(kind, t) for t in rows] == values
+
+    total = sum(rng.end - rng.start for rng in part.ranges)
+    per = _reader(d, chunk_bytes=total - 1, **opts)
+    per_parts = per.partitions(start, end)
+    assert all(isinstance(p, TailPartition) for p in per_parts)
+    assert [(p.path, p.start, p.end) for p in per_parts] == \
+        [(rng.path, rng.start, rng.end) for rng in part.ranges]
+    assert rows == [t for p in per_parts for t in per.read(p)]
+
+
+def test_tail_trigger_above_the_threshold_keeps_a_partition_per_range(tmp_path):
+    from singer_spark.streaming.tail import _ONE_TASK_BYTES, TailPartition
+
+    d = str(tmp_path)
+    line = "x" * 99 + "\n"
+    for k in range(4):
+        _append(f"{d}/app-{k}.log", line * (_ONE_TASK_BYTES // 400 + 1))
+    r = _reader(d)
+    parts = r.partitions(r.initialOffset(), r.latestOffset())
+    assert len(parts) == 4 and all(isinstance(p, TailPartition) for p in parts)
+    assert sum(p.end - p.start for p in parts) > _ONE_TASK_BYTES
+
+
+def test_tail_one_partition_reads_by_inode_across_a_rename(tmp_path):
+    """A rename-rotation between planning and read: the merged partition
+    still reads every range from its inode, under the file's new name,
+    not the new file that took the old name."""
+    d = str(tmp_path)
+    values, opts = _append_records(d, "lines", "a")
+    r = _reader(d, **opts)
+    (part,) = r.partitions(r.initialOffset(), r.latestOffset())
+    os.rename(f"{d}/app-1.log", f"{d}/app-1.log.1")
+    _append(f"{d}/app-1.log", "2024-01-01 new file\n")
+    rows = list(r.read(part))
+    assert [t[0] for t in rows] == values
+    assert {t[1] for t in rows if "-1-" in t[0]} == {f"{d}/app-1.log.1"}
+
+
 def test_tail_max_bytes_per_trigger_paces_text(tmp_path):
     """Catch-up pacing: a backlog drains ~cap bytes per trigger, each end
     snapped to a line boundary, until caught up; then steady-state."""

@@ -15,9 +15,11 @@ Structured Streaming is a MICRO-BATCH engine; per-message latency is
 bounded below by the trigger cadence plus per-batch overhead, not by the
 per-record hot path the reference's thread-per-stream architecture
 optimizes.  Measured on a 4-vCPU host at 200 msgs/s for 20 s, the
-steady-state p50 is ~130-160 ms (p99 ~230-280 ms); before the worker
-daemon of `singer_spark.session` stopped each Python task re-reading
-every zip on `sys.path`, the same probe read p50 ~220 ms, p99 ~430 ms.
+steady-state p50 is 132 ms (p90 206 ms, p99 266 ms; one run); with the
+`.crc` side files `get_spark` no longer writes for checkpoints it read
+154 ms (p90 232 ms, p99 273 ms), and before the worker daemon of
+`singer_spark.session` stopped each Python task re-reading every zip on
+`sys.path`, p50 ~220 ms, p99 ~430 ms.
 The flip side is the scaling
 story: the same query absorbs thousands of files/partitions without new
 threads.  Latency-sensitive deployments tighten `trigger(processingTime=)`
