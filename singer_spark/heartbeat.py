@@ -21,12 +21,15 @@ Field parity (SingerStatus.java:108-149):
   the micro-batch twin of the reference's per-topic write-latency
   distributions.
 - `duplicatesSuspected` — per-stream {reopens, bytes} read from the tail
-  source's counters-file side channel (fingerprint-mismatch reopens; see
-  streaming/tail.py — offsets stay position-only since r8, and the
-  reader runs in its own Python worker, so a file under the tempdir is
-  the channel that crosses that boundary): the measurable
-  width of the at-least-once duplicate window under copytruncate
-  rotation, matching the reference's per-stream metric discipline.
+  source's counters-file side channel: the measurable width of the
+  at-least-once duplicate window under copytruncate rotation, matching
+  the reference's per-stream metric discipline.  The reader counts
+  fingerprint-mismatch reopens and copytruncate copies when it plans a
+  batch, from the batch's (start, end) offsets (see streaming/tail.py),
+  and writes its file once per planned batch; offsets stay
+  position-only, and the reader runs in its own Python worker, so a file
+  under the tempdir is the channel that crosses that boundary.  A stream
+  with no batch in `list_counters`' 15-minute window is not listed.
 """
 
 from __future__ import annotations

@@ -106,12 +106,9 @@ def get_spark(app_name: str = "singer_spark", shuffle_partitions: int | None = N
         # Scale-adaptive by definition: AQE sizes partitions by bytes
         # (advisoryPartitionSizeInBytes), so a 100 TB cached frame keeps
         # its parallelism; measured interleaved A/B at sf0.1: -26% on
-        # the persist-heavy query set, no query slower.  Parameterised
-        # (r14) so the flag can be A/B'd per-JVM and tuned per
-        # deployment without a code change; default stays on.
+        # the persist-heavy query set, no query slower.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                "false" if os.environ.get("SPARK_GRAFT_CACHE_AQE", "1")
-                in ("0", "false") else "true")
+                "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # TESTDATA events.parquet carries TIMESTAMP(NANOS); Spark has no

@@ -5,8 +5,10 @@
   send) with the reference's producer defaults; `transactional=True` wraps
   each task's sends in a Kafka transaction (W2).  No Spark Kafka connector.
 - File/S3 sink (W5): parquet/text writeStream with time-based triggers
-  (minUploadTime) and maxRecordsPerFile (size rollover); S3Writer's key
-  templating is reproduced by `render_key_template`.
+  (minUploadTime) and maxRecordsPerFile (size rollover); objects get
+  Spark's file names.  `render_key_template` renders S3Writer's key
+  format as a standalone helper (no writer calls it), checked by oracle
+  query `w5_s3_key_template`.
 - Pulsar sink  (W4): no OSS Spark connector — foreachBatch + pulsar-client
   (import-gated), async send + flush per partition, mirroring PulsarWriter's
   send-batch/flush/await-futures protocol.  A `client_factory` injection

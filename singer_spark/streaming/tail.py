@@ -209,10 +209,10 @@ class TailRanges(InputPartition):
 # (python_streaming_source_runner), so an in-process registry never
 # reaches the driver-side heartbeat (measured: the r8 first attempt
 # reported 0 while 33k duplicates were delivered).  The channel that
-# does cross that boundary is a tiny per-stream JSON file under the
-# system tempdir, atomically replaced on each latestOffset; a fresh
-# reader writes a zeroed file (process-lifetime semantics, like the
-# reference's per-stream metrics).
+# does cross that boundary is a tiny per-reader JSON file under the
+# system tempdir, atomically replaced once per planned batch (an idle
+# query writes nothing); a fresh reader writes a zeroed file
+# (process-lifetime semantics, like the reference's per-stream metrics).
 # ---------------------------------------------------------------------------
 def _counters_dir() -> str:
     import tempfile
@@ -418,27 +418,26 @@ class TailStreamReader(DataSourceStreamReader):
         self._paths: dict[str, str] = {}
         self.opens = 0  # observability: file opens performed (tests assert)
         # duplicates-suspected accounting (reference per-stream metric
-        # discipline, common/SingerStatus.java:108-149).  Two signals, both
-        # rate-limited to events a live reader can see:
+        # discipline, common/SingerStatus.java:108-149), decided in
+        # partitions() from the batch's (start, end) offsets alone, where
+        # the reader already decides to re-read:
         #   1. fingerprint-mismatch reopen — the committed prefix is no
         #      longer the file's prefix (truncate-regrow, inode reuse), so
         #      the re-read from 0 MAY re-deliver committed bytes;
-        #   2. a first-seen inode whose prefix equals a tracked stream's
-        #      committed prefix — a copytruncate copy landing in the
+        #   2. an inode new in the batch whose prefix equals a committed
+        #      stream's prefix — a copytruncate copy landing in the
         #      watched glob, whose committed window WILL re-deliver (the
         #      dominant duplicate source under copytruncate).
+        # The start offset is the checkpointed one, so a restarted reader
+        # also sees a copytruncate made while no reader was alive.
         # Counters are per reader lifetime (the reference's process-
-        # lifetime metric semantics).  They are surfaced through the
-        # counters-file side channel (see _write_counters above) — NOT
-        # through the offset dict: offsets must stay a pure function of
-        # source position (ADVICE r7 #2 — a counter-bearing offset
-        # schedules an empty micro-batch on a zero-new-bytes suspicion
-        # event and disagrees with a restarted reader's zeroed
-        # counters).  Duplicates created while NO reader is alive (a
-        # copy made between restarts) are invisible by design — there is
-        # no state to compare against, the same blind spot the reference
-        # has across agent restarts.
-        self._last_files: dict[str, dict] = {}
+        # lifetime metric semantics) and are surfaced through the
+        # counters-file side channel (see _write_counters above), written
+        # once per planned batch — NOT through the offset dict: offsets
+        # must stay a pure function of source position (a counter-bearing
+        # offset schedules an empty micro-batch on a zero-new-bytes
+        # suspicion event and disagrees with a restarted reader's zeroed
+        # counters).
         self._dupes_suspected = 0
         self._dupe_bytes = 0
         # counters namespace (the Spark application id when constructed
@@ -607,13 +606,10 @@ class TailStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         """Snapshot the directory: inode → (current path, committed end,
         prefix fingerprint).  Absolute, not delta — Spark diffs consecutive
-        offsets itself, so a restart needs no reader-side state."""
-        files: dict[str, dict] = {}
-        paths: dict[str, str] = {}
-        truncated: dict[str, int] = {}          # ino -> committed bytes lost
-        copies: list[tuple[str, int]] = []      # (source ino, window bytes)
+        offsets itself, so a restart needs no reader-side state.  Writes no
+        file: an idle query calls this many times a second."""
         listed = self._list()
-        if not self._last_files.keys() <= listed.keys():
+        if not self._paths.keys() <= listed.keys():
             # a tracked file left the listing: deleted, or renamed between
             # listdir and stat/open (then its old name now holds another
             # inode).  List once more so a renamed file shows up under its
@@ -621,49 +617,12 @@ class TailStreamReader(DataSourceStreamReader):
             # and re-reading from 0 after.  Files already scanned this
             # trigger cost no second open.
             listed = self._list()
+        files: dict[str, dict] = {}
         for ino, (p, entry) in listed.items():
-            paths[ino] = p
-            rec = {"path": p, "off": entry["off"],
-                   "fp": entry["fp"], "fplen": entry["fplen"]}
-            prev = self._last_files.get(ino)
-            if prev and prev.get("off", 0) > 0 and prev.get("fp") is not None:
-                # the same comparison partitions() makes before deciding to
-                # re-read from 0 (_same_content: equal-length prefixes
-                # compare for free; a differing-length prefix costs one
-                # read of a file this trigger ALREADY opened to scan)
-                if not self._same_content(ino, p, prev, rec):
-                    truncated[ino] = int(prev["off"])
-            elif prev is None and rec["off"] > 0:
-                # NEW inode whose prefix equals a tracked stream's committed
-                # prefix: a copytruncate copy landing in the watched glob —
-                # its [0, prev_off) bytes were already delivered from the
-                # live inode and will now re-deliver (the dominant
-                # duplicate source under copytruncate).  Equal-length
-                # fingerprints compare for free; otherwise one bounded
-                # (≤4 KiB) read of a file that only just appeared.
-                hit = self._match_copy(p, rec)
-                if hit is not None:
-                    copies.append(hit)
-            files[ino] = rec
+            files[ino] = {"path": p, "off": entry["off"],
+                          "fp": entry["fp"], "fplen": entry["fplen"]}
             self._reported[ino] = entry["off"]  # pacing base advances
-        # Reconcile the two signals: a copytruncate rotation whose copy
-        # lands in the watched glob fires BOTH (the live inode's truncation
-        # reopen and the copy's prefix match) for the SAME committed
-        # window — count it once, preferring the copy (it carries the
-        # bytes that actually re-deliver).
-        counted_src = {src for src, _ in copies}
-        for ino, prev_off in truncated.items():
-            if ino not in counted_src:
-                self._dupes_suspected += 1
-                self._dupe_bytes += prev_off
-        for _src, window in copies:
-            self._dupes_suspected += 1
-            self._dupe_bytes += window
-        self._paths = paths
-        self._last_files = files
-        _write_counters(self.log_dir, self.glob,
-                        self._dupes_suspected, self._dupe_bytes,
-                        self._counters_ns, self._counters_token)
+        self._paths = {ino: rec["path"] for ino, rec in files.items()}
         return {"files": files}
 
     # -- planning ---------------------------------------------------------
@@ -684,14 +643,16 @@ class TailStreamReader(DataSourceStreamReader):
             p = self._paths.get(ino)
         return p or recorded
 
-    def _match_copy(self, path: str, rec: dict) -> tuple[str, int] | None:
-        """Duplicate-suspect check for a first-seen inode: is any tracked
-        stream's committed prefix also a prefix of this file?  Free when fingerprint
-        lengths match; otherwise one ≤4 KiB read amortized over rotations
-        (new inodes only appear when something rotated).  Returns the
-        (source ino, window bytes) of the largest matching committed
+    @staticmethod
+    def _match_copy(path: str, rec: dict,
+                    committed: dict) -> tuple[str, int] | None:
+        """Duplicate-suspect check for an inode new in this batch: is any
+        `committed` stream's prefix also a prefix of this file?  Free when
+        fingerprint lengths match; otherwise one ≤4 KiB read amortized over
+        rotations (new inodes only appear when something rotated).  Returns
+        the (source ino, window bytes) of the largest matching committed
         prefix — the suspected re-delivery window — or None."""
-        candidates = [(ino, v) for ino, v in self._last_files.items()
+        candidates = [(ino, v) for ino, v in committed.items()
                       if v.get("off", 0) > 0 and v.get("fp") is not None
                       and v["fplen"] <= rec["fplen"]]
         if not candidates:
@@ -752,13 +713,25 @@ class TailStreamReader(DataSourceStreamReader):
                 f"directory (move or delete the old checkpointLocation).")
         parts: list[InputPartition] = []
         prev = start.get("files", {})
+        truncated: dict[str, int] = {}          # ino -> committed bytes lost
+        copies: list[tuple[str, int]] = []      # (source ino, window bytes)
         for ino, cur in end.get("files", {}).items():
             p = prev.get(ino, {})
             s = int(p.get("off", 0))
             e = int(cur["off"])
             path = self._current_path(ino, cur["path"])
             if s > 0 and not self._same_content(ino, path, p, cur):
-                s = 0  # truncated / truncate-regrown / inode reused: re-read
+                # truncated / truncate-regrown / inode reused: re-read from
+                # 0, which MAY re-deliver the s committed bytes
+                truncated[ino], s = s, 0
+            elif not p and e > 0:
+                # an inode new in this batch whose prefix equals a committed
+                # stream's prefix: a copytruncate copy landing in the
+                # watched glob — its committed window WILL re-deliver (the
+                # dominant duplicate source under copytruncate)
+                hit = self._match_copy(path, cur, prev)
+                if hit is not None:
+                    copies.append(hit)
             if e <= s:
                 # nothing new — including a rate-limited latestOffset that
                 # still lags a restored checkpoint (content verified above,
@@ -777,10 +750,27 @@ class TailStreamReader(DataSourceStreamReader):
             for hi in [*cuts, e]:
                 parts.append(TailPartition(path, lo, hi, s, int(ino)))
                 lo = hi
+        self._count_dupes(truncated, copies)
         if len(parts) > 1 and sum(p.end - p.start for p in parts) \
                 <= min(_ONE_TASK_BYTES, self.chunk_bytes):
             return [TailRanges(parts)]
         return parts
+
+    def _count_dupes(self, truncated: dict[str, int],
+                     copies: list[tuple[str, int]]) -> None:
+        """Add one planned batch's duplicate suspects to the counters and
+        publish them.  A copytruncate rotation whose copy lands in the
+        watched glob fires BOTH signals (the live inode's truncation and
+        the copy's prefix match) for the SAME committed window — count it
+        once, preferring the copy (it carries the bytes that re-deliver)."""
+        counted_src = {src for src, _ in copies}
+        windows = [b for ino, b in truncated.items() if ino not in counted_src]
+        windows += [b for _src, b in copies]
+        self._dupes_suspected += len(windows)
+        self._dupe_bytes += sum(windows)
+        _write_counters(self.log_dir, self.glob,
+                        self._dupes_suspected, self._dupe_bytes,
+                        self._counters_ns, self._counters_token)
 
     # -- execution (runs on executors) --------------------------------------
     def _open_inode(self, path: str, want: int):

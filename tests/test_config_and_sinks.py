@@ -327,8 +327,9 @@ def test_heartbeat_surfaces_live_tail_duplicates(spark, tmp_path):
     """E2E through the r8 counters-file channel: a LIVE tail query
     observes a copytruncate rotation (the reader runs in its own Python
     worker — this is the boundary the channel exists to cross), and
-    build_status reports the stream under duplicatesSuspected with a
-    non-zero reopen count."""
+    build_status reports the stream under duplicatesSuspected with
+    exactly one reopen for its single rewrite, also a few triggers later
+    (one count per planned batch)."""
     import os
 
     from singer_spark.streaming.tail import tail_stream
@@ -362,7 +363,16 @@ def test_heartbeat_surfaces_live_tail_duplicates(spark, tmp_path):
                 found = got
                 break
             time.sleep(0.5)
+        if found is not None:
+            # more triggers (and the rewritten file's batch) go by: the
+            # one rewrite must not be counted again
+            with open(log, "a") as f:
+                f.write("NEW-5\n")
+            time.sleep(1.5)
+            found = build_status(spark, started_at=time.time() - 1)[
+                "duplicatesSuspected"].get(stream_key)
     finally:
         q.stop()
     assert found is not None, "heartbeat never surfaced the reopen"
+    assert found["reopens"] == 1
     assert found["bytes"] >= len("one\ntwo\nthree\n")

@@ -188,12 +188,13 @@ def test_tail_copytruncate_regrow_detected_by_fingerprint(tmp_path):
 
 def test_tail_duplicates_suspected_counter(tmp_path):
     """Fingerprint-mismatch reopens are COUNTED in the counters-file
-    side channel (VERDICT r6 task #7; side channel since r8 — ADVICE r7
-    #2, and the reader runs in its own Python worker so the channel must
-    cross processes): each suspected-duplicate window increments
-    `reopens` and adds the previously committed bytes to `bytes`; plain
-    growth never counts; the OFFSET dict stays a pure function of source
-    position (no counter keys).  Counters are per reader lifetime (the
+    side channel (the reader runs in its own Python worker, so the
+    channel must cross processes): each suspected-duplicate window
+    increments `reopens` and adds the previously committed bytes to
+    `bytes`; plain growth never counts; the OFFSET dict stays a pure
+    function of source position (no counter keys).  Counting happens
+    where Spark plans each batch, `partitions(start, end)`, which this
+    test calls once per trigger.  Counters are per reader lifetime (the
     reference's process-lifetime metric semantics)."""
     from singer_spark.streaming.tail import read_counters
 
@@ -201,32 +202,41 @@ def test_tail_duplicates_suspected_counter(tmp_path):
     log = f"{d}/t.log"
     _append(log, "old-1\nold-2\n")
     r = _reader(d)
-    start = r.latestOffset()
+    prev = r.initialOffset()
+
+    def trigger(reader):
+        nonlocal prev
+        cur = reader.latestOffset()
+        reader.partitions(prev, cur)
+        prev = cur
+        return cur
+
+    start = trigger(r)
     assert set(start.keys()) == {"files"}  # position-only offsets
     assert read_counters(d) == {"reopens": 0, "bytes": 0}
 
     # plain growth: no suspicion
     _append(log, "old-3\n")
-    r.latestOffset()
+    trigger(r)
     assert read_counters(d)["reopens"] == 0
 
     # copytruncate-regrow: prefix changed → one suspected window of the
     # previously committed 18 bytes
     with open(log, "w") as f:
         f.write("NEW-a\nNEW-b\nNEW-c\nNEW-d\n")
-    end = r.latestOffset()
+    end = trigger(r)
     assert set(end.keys()) == {"files"}
     assert read_counters(d) == {"reopens": 1, "bytes": 18}
 
     # shrink-only truncation also counts (committed bytes vanished)
     with open(log, "w") as f:
         f.write("x\n")
-    r.latestOffset()
+    trigger(r)
     assert read_counters(d) == {"reopens": 2, "bytes": 18 + 24}
 
     # restart: fresh reader re-registers ZEROED process-lifetime counters
     fresh = _reader(d)
-    fresh.latestOffset()
+    trigger(fresh)
     assert read_counters(d) == {"reopens": 0, "bytes": 0}
 
 
@@ -235,33 +245,84 @@ def test_tail_copytruncate_copy_counts_exact_windows(tmp_path):
     stream's committed prefix, landing in the watched glob) is the
     dominant duplicate source — each copy counts exactly one suspected
     window of exactly the bytes committed from the live inode, across
-    several rotations, including the unequal-fingerprint-length case."""
+    several rotations, including the unequal-fingerprint-length case.
+    `partitions(start, end)` is called once per trigger, as Spark does."""
     import shutil
 
     d = str(tmp_path)
     log = f"{d}/ct.log"
     r = _reader(d)
+    prev = r.initialOffset()
     expected_windows = []
     line_no = 0
     for rot in range(3):
         for _ in range(5 + rot):
             _append(log, f"ct:{line_no}\n")
             line_no += 1
-        off = r.latestOffset()["files"]
-        committed = next(v["off"] for v in off.values()
+        cur = r.latestOffset()
+        r.partitions(prev, cur)
+        prev = cur
+        committed = next(v["off"] for v in cur["files"].values()
                          if v["path"] == log)
         # copytruncate: copy out (new inode in the watched dir), truncate
         shutil.copyfile(log, f"{d}/ct.log.r{rot}")
         with open(log, "r+b") as f:
             f.truncate(0)
         expected_windows.append(committed)
-    r.latestOffset()
+    r.partitions(prev, r.latestOffset())
     # ONE window per rotation: the copy's prefix match and the live
     # inode's truncation reopen are the same event and are reconciled
     from singer_spark.streaming.tail import read_counters
 
     assert read_counters(d) == {
         "reopens": len(expected_windows), "bytes": sum(expected_windows)}
+
+
+def test_tail_idle_polls_write_no_counters_file(tmp_path):
+    """An idle query polls latestOffset many times a second; with no new
+    bytes those polls leave the reader's counters file untouched (it is
+    written at construction and once per planned batch)."""
+    from singer_spark.streaming.tail import _counters_file
+
+    d = str(tmp_path)
+    _append(f"{d}/idle.log", "a\nb\n")
+    r = _reader(d)
+    r.partitions(r.initialOffset(), r.latestOffset())
+    path = _counters_file(d, "*", r._counters_ns, r._counters_token)
+    before = os.stat(path)
+    for _ in range(10):
+        r.latestOffset()
+    after = os.stat(path)
+    assert (after.st_ino, after.st_mtime_ns) == (before.st_ino,
+                                                 before.st_mtime_ns)
+
+
+def test_tail_restart_counts_copytruncate_made_while_no_reader_ran(tmp_path):
+    """A copytruncate made between two reader lifetimes is still seen: the
+    fresh reader's first batch starts at the checkpointed offset, so its
+    `partitions(checkpointed_end, latest)` counts exactly one window of
+    the committed bytes (the copy's prefix match and the live inode's
+    truncation are reconciled into one)."""
+    import shutil
+
+    from singer_spark.streaming.tail import read_counters
+
+    d = str(tmp_path)
+    log = f"{d}/app.log"
+    _append(log, "".join(f"line {i:03d}\n" for i in range(15)))
+    old = _reader(d)
+    committed = old.latestOffset()
+    old.partitions(old.initialOffset(), committed)
+    committed_bytes = os.path.getsize(log)
+    # no reader alive: copytruncate, then the writer goes on
+    shutil.copyfile(log, f"{log}.1")
+    with open(log, "r+b") as f:
+        f.truncate(0)
+    _append(log, "after-1\nafter-2\n")
+    fresh = _reader(d)
+    assert read_counters(d) == {"reopens": 0, "bytes": 0}
+    fresh.partitions(committed, fresh.latestOffset())
+    assert read_counters(d) == {"reopens": 1, "bytes": committed_bytes}
 
 
 def test_tail_plain_growth_keeps_offset(tmp_path):

@@ -536,14 +536,14 @@ def run_dupes_metric_soak(spark, root: str, seconds: float,
     processingTime trigger keeps one reader instance alive — the metric
     is per reader lifetime, like the reference's process-lifetime
     SingerStatus counters) consumes a copytruncate-rotated stream, then
-    the reader-reported bytes (from the driver-side READER_COUNTERS
-    registry — offsets are position-only since r8) are compared to the
-    duplicate bytes actually measured in the delivered rows.  Rotation is sized slower than the trigger cadence and past the
-    4 KiB fingerprint window (rotate_every=6000, ~55 KiB) so every
-    rotation's committed window is observable; the kill/restart tail soak
-    above intentionally is NOT this regime — a reader that restarts every
-    cycle has no prior state to suspect duplicates against (the
-    reference's agents share that restart blind spot)."""
+    the reader-reported bytes (from the counters-file side channel —
+    offsets are position-only) are compared to the duplicate bytes
+    actually measured in the delivered rows.  Rotation is sized slower
+    than the trigger cadence and past the 4 KiB fingerprint window
+    (rotate_every=6000, ~55 KiB) so every rotation's committed window is
+    observable.  The kill/restart tail soak above is NOT this regime: its
+    counters restart at zero with every cycle's fresh reader, so they
+    cannot be summed against the whole run's duplicates."""
     from singer_spark.streaming.tail import tail_stream
 
     log_dir = os.path.join(root, "dupes_logs")
