@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from singer_spark import sinks, sources
 from singer_spark.config import LogConfig, SingerConfig
+from singer_spark.fsutil import fs_exists
 from singer_spark.partitioners import get_partitioner
 from singer_spark.transforms import TransformConfig, apply_transforms, inject_headers
 
@@ -237,6 +238,8 @@ class PipelineManager:
         self.pending_dirs: dict[str, LogConfig] = {}
         # O6: per-query failure counters
         self.failures: dict[str, int] = {}
+        # file writers' bytes/row by path, across restarts (sinks.file_deliver)
+        self._bytes_per_row: dict[str, float] = {}
 
     # -- instance-level decider gate (T10/O2) ------------------------------
     def _instance_enabled(self, cfg: LogConfig) -> bool:
@@ -359,11 +362,11 @@ class PipelineManager:
         return cap
 
     def _build_writer(self, cfg: LogConfig, df: DataFrame, ckpt: str, audit_sink=None):
-        """`memory`, `noop` and the plain file sink are direct writeStream
-        sinks; every other writer is one foreachBatch handler composed as
-        cap? → deliver → audit? (sinks.foreach_batch_sink).  The delivery
-        returns the messages it wrote, and the audit row carries that count —
-        counted after the successful write, the reference's accounting point
+        """`memory` and `noop` are direct writeStream sinks; every other
+        writer is one foreachBatch handler composed as cap? → deliver →
+        audit? (sinks.foreach_batch_sink).  The delivery returns the
+        messages it wrote, and the audit row carries that count — counted
+        after the successful write, the reference's accounting point
         (writer/KafkaWriter.java:641-693)."""
         w = cfg.writer
         cap = self._hot_key_cap(cfg)
@@ -399,19 +402,18 @@ class PipelineManager:
                 return sinks.pulsar_write_batch(batch_df, w.bootstrap_servers, w.topic,
                                                 client_factory=client_factory)
         elif w.type in ("file", "s3", "parquet", "text"):
-            if cap is None and audit is None:
-                return sinks.file_sink(df, w.path, ckpt, fmt=w.format,
-                                       min_upload_seconds=w.min_upload_seconds)
-            # audited or capped file delivery keeps the writer config the
-            # plain path gets — byte-based size rollover (maxFileSizeMB
-            # fidelity) and the minUploadTime trigger.  Batches land in
-            # per-batch-id dirs so a replay overwrites instead of
-            # duplicating (effectively-once; see sinks.write_batch_idempotent)
+            # one overwrite per micro-batch into <path>/batch=<id> (a replay
+            # replaces its output), files sized by maxFileSizeMB, on the
+            # minUploadTime trigger (sinks.file_deliver).  Spark's file sink
+            # leaves a _spark_metadata log that readers follow instead of
+            # listing the dir, which would hide the batch dirs: refuse it.
+            if fs_exists(self.spark, f"{w.path}/_spark_metadata"):
+                raise ValueError(
+                    f"writer.path {w.path} holds a _spark_metadata log from "
+                    f"Spark's file sink; point the writer at a new path")
             trigger_seconds = w.min_upload_seconds
-
-            def deliver(batch_df: DataFrame, batch_id: int) -> int:
-                return sinks.write_batch_idempotent(batch_df, w.path, batch_id,
-                                                    w.format, w.max_file_size_mb)
+            deliver = sinks.file_deliver(w.path, w.format, w.max_file_size_mb,
+                                         self._bytes_per_row)
         else:
             raise ValueError(f"unsupported writer type: {w.type}")
         writer = sinks.foreach_batch_sink(df, ckpt, deliver, cap=cap, audit=audit)

@@ -386,7 +386,8 @@ def decode_thrift_blobs(df: DataFrame, content_col: str = "content",
                         max_message_size: int | None = None) -> DataFrame:
     """`binaryFile`-shaped DataFrame → LogMessage rows via Arrow-batched
     mapInPandas (one Python pass per file blob; decoded rows stream out in
-    pandas batches — the only Python hop in the ingest path)."""
+    pandas batches).  The `sources.thrift_stream` path's Python hop; the
+    tail reader and the kafka/pulsar mapInArrow delivery pass are others."""
     import pandas as pd
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

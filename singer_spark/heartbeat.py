@@ -41,6 +41,8 @@ import time
 
 from pyspark.sql import SparkSession
 
+from singer_spark.metrics import progress_epoch
+
 
 def _percentiles(vals: list[float]) -> dict:
     """Nearest-rank percentiles; summary-sized input (recentProgress is
@@ -126,34 +128,15 @@ def build_status(spark: SparkSession, started_at: float,
         if durs:
             latencies.extend(durs)
             query_latency[name] = _percentiles(durs)
-        ts = p.get("timestamp")
-        if ts:
-            try:
-                # progress timestamps are UTC ISO strings; parse as UTC
-                # explicitly (mktime would apply the host timezone and skew
-                # batch_age by the UTC offset on non-UTC hosts)
-                from datetime import datetime, timezone
-
-                def _utc(s: str) -> float:
-                    parsed = datetime.strptime(s[:19], "%Y-%m-%dT%H:%M:%S")
-                    return parsed.replace(tzinfo=timezone.utc).timestamp()
-
-                batch_age = now - _utc(ts)
-                # a healthy idle stream still emits zero-row progress per
-                # trigger; a stale LAST progress means the trigger loop
-                # itself stopped turning (frozen sink, wedged source).
-                prog_ts = []
-                for rpd in recent:
-                    rts = rpd.get("timestamp")
-                    if rts:
-                        try:
-                            prog_ts.append(_utc(rts))
-                        except ValueError:
-                            pass
-                if batch_age > stuck_threshold(stuck_seconds, prog_ts):
-                    stuck += 1
-            except ValueError:
-                pass
+        ts = progress_epoch(p.get("timestamp"))
+        if ts is not None:
+            # a healthy idle stream still emits zero-row progress per
+            # trigger; a stale LAST progress means the trigger loop
+            # itself stopped turning (frozen sink, wedged source).
+            prog_ts = [t for t in (progress_epoch(rpd.get("timestamp"))
+                                   for rpd in recent) if t is not None]
+            if now - ts > stuck_threshold(stuck_seconds, prog_ts):
+                stuck += 1
     # tail readers (which run in their own Python worker process)
     # publish per-stream counters through the counters-file side
     # channel, keeping streaming offsets position-only (ADVICE r7 #2);

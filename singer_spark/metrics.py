@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import socket
 import threading
+from datetime import datetime, timezone
 
 from pyspark.sql.streaming.listener import StreamingQueryListener
 
@@ -26,19 +27,21 @@ _METRICS = {
 }
 
 
+def progress_epoch(ts) -> float | None:
+    """Epoch seconds of a progress event's UTC ISO `timestamp`, parsed as
+    UTC (not the host timezone); None when it does not parse."""
+    try:
+        parsed = datetime.strptime(str(ts)[:19], "%Y-%m-%dT%H:%M:%S")
+    except ValueError:
+        return None
+    return parsed.replace(tzinfo=timezone.utc).timestamp()
+
+
 def progress_to_lines(progress: dict, hostname: str | None = None) -> list[str]:
     """One progress event → OpenTSDB put lines."""
     host = hostname or socket.gethostname()
     name = progress.get("name") or progress.get("id", "unknown")
-    ts_ms = progress.get("timestamp")
-    # progress timestamps are ISO strings; metrics use epoch seconds
-    from datetime import datetime, timezone
-
-    try:
-        epoch = int(datetime.strptime(str(ts_ms)[:19], "%Y-%m-%dT%H:%M:%S")
-                    .replace(tzinfo=timezone.utc).timestamp())
-    except (ValueError, TypeError):
-        epoch = 0
+    epoch = int(progress_epoch(progress.get("timestamp")) or 0)
     values = {
         "num_input_rows": progress.get("numInputRows", 0) or 0,
         "trigger_ms": (progress.get("durationMs") or {}).get("triggerExecution", 0) or 0,

@@ -4,11 +4,15 @@
   protocol per task (send every row, flush once, fail the task on a failed
   send) with the reference's producer defaults; `transactional=True` wraps
   each task's sends in a Kafka transaction (W2).  No Spark Kafka connector.
-- File/S3 sink (W5): parquet/text writeStream with time-based triggers
-  (minUploadTime) and maxRecordsPerFile (size rollover); objects get
-  Spark's file names.  `render_key_template` renders S3Writer's key
-  format as a standalone helper (no writer calls it), checked by oracle
-  query `w5_s3_key_template`.
+- File/S3 writer (W5): `file_deliver` overwrites each micro-batch into its
+  own `<path>/batch=<id>` dir in one write (a replay replaces its output)
+  on the minUploadTime trigger.  maxFileSizeMB rolls files over by bytes
+  (S3Writer.java:371-399) through maxRecordsPerFile, from the bytes/row
+  the last write observed, kept per path across query restarts; a
+  process's first batch to a path is cached and measured first.
+  Objects get Spark's file names; `render_key_template` renders
+  S3Writer's key format as a standalone helper (no writer calls it),
+  checked by oracle query `w5_s3_key_template`.
 - Pulsar sink  (W4): no OSS Spark connector — foreachBatch + pulsar-client
   (import-gated), async send + flush per partition, mirroring PulsarWriter's
   send-batch/flush/await-futures protocol.  A `client_factory` injection
@@ -37,27 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 from singer_spark.audit import AuditCollector, audit_row, make_audit_df
-
-
-# ---------------------------------------------------------------------------
-# File / S3 sink (W5).
-# ---------------------------------------------------------------------------
-def file_sink(df: DataFrame, path: str, checkpoint_dir: str, fmt: str = "parquet",
-              max_records_per_file: int | None = None,
-              min_upload_seconds: int | None = 30) -> DataStreamWriter:
-    """S3Writer parity: time-triggered micro-batches ≈ minUploadTimeInSeconds;
-    maxRecordsPerFile ≈ maxFileSizeMB rollover (writer/s3/S3Writer.java:
-    276-301,371-399).  Point `path` at s3a:// for S3."""
-    writer = (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    if min_upload_seconds:
-        writer = writer.trigger(processingTime=f"{min_upload_seconds} seconds")
-    return writer
 
 
 # ---------------------------------------------------------------------------
@@ -193,20 +176,21 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
     return _deliver(batch_df, send_task)
 
 
-def _records_per_file(df: DataFrame, col: str, max_file_mb: float) -> int | None:
+def _rows_per_file(max_file_mb: float, bytes_per_row: float) -> int:
     """maxRecordsPerFile for files of about `max_file_mb`: Spark's only
-    rollover knob counts rows, so estimate bytes/row from THIS frame's `col`
-    payload — fidelity with the reference's byte-based maxFileSizeMB
-    (writer/s3/S3Writer.java:371-399).  With variable message sizes the
-    per-batch estimate tracks the actual payload instead of drifting the way
-    a fixed row count does.  None for an empty frame."""
+    rollover knob counts rows, so the reference's byte-based maxFileSizeMB
+    (writer/s3/S3Writer.java:371-399) divides by a payload bytes/row."""
+    return max(int(max_file_mb * 1024 * 1024 / max(bytes_per_row, 1.0)), 1)
+
+
+def _bytes_per_row(df: DataFrame, col: str) -> float | None:
+    """Mean bytes of `col`'s payload in `df` (one job); None if empty."""
     from pyspark.sql import functions as F
 
     n, total = df.agg(F.count("*"),
                       F.sum(F.octet_length(F.col(col).cast("binary")))).first()
-    if not (n and total):
-        return None
-    return max(int(max_file_mb * 1024 * 1024 / max(total / n, 1.0)), 1)
+    return total / n if n and total else None
+
 
 
 def zorder_key(df: DataFrame, cols: list[str], bits: int = 16):
@@ -268,10 +252,10 @@ def write_dataset(df: DataFrame, path: str,
       binary search over files.  Range partitioning samples the data for
       balanced splits (skew-resistant where hash partitioning on a hot
       sort key is not).
-    - `target_file_mb` (+ optional `size_col` payload estimator, see
-      :func:`_records_per_file`): converts to maxRecordsPerFile so one
-      misconfigured writer can't emit a 10 GB file or a million 1 KB
-      files.
+    - `target_file_mb` (+ optional `size_col` payload column, whose
+      bytes/row one aggregate job estimates, see :func:`_bytes_per_row`):
+      converts to maxRecordsPerFile so one misconfigured writer can't emit
+      a 10 GB file or a million 1 KB files.
 
     `sort_by` without `partition_by` lays out the whole dataset as one
     range-ordered sequence; with both, the range shuffle is keyed on
@@ -309,9 +293,10 @@ def write_dataset(df: DataFrame, path: str,
     est_col = size_col or next(
         (c for c, t in df.dtypes if t in ("string", "binary")), None)
     if target_file_mb and est_col is not None:
-        records = _records_per_file(df, est_col, target_file_mb)
-        if records:
-            writer = writer.option("maxRecordsPerFile", records)
+        per_row = _bytes_per_row(df, est_col)
+        if per_row:
+            writer = writer.option("maxRecordsPerFile",
+                                   _rows_per_file(target_file_mb, per_row))
     if parts:
         writer = writer.partitionBy(*parts)
     writer.save(path)
@@ -405,29 +390,54 @@ def compact_dataset(spark, path: str, target_file_mb: float = 256,
 
 def write_batch_idempotent(batch_df: DataFrame, path: str, batch_id: int,
                            fmt: str = "parquet",
-                           max_file_size_mb: float | None = None) -> int:
+                           max_records_per_file: int | None = None) -> tuple[int, int]:
     """Replay-safe micro-batch append: each batch writes (mode=overwrite)
     into its own `batch=<id>` subdirectory, so a foreachBatch retry or a
     post-crash replay of the same batch REPLACES its previous partial output
     instead of appending a duplicate copy — effectively-once file delivery
     on top of the streaming engine's deterministic batch ids, where a plain
     append is only at-least-once.  Readers just scan `path` (the batch dirs
-    read as a partition column `batch`).  `max_file_size_mb` rolls files
-    over on payload bytes (:func:`_records_per_file`).  Returns the rows
-    written, observed on the write itself (no separate count job)."""
+    read as a partition column `batch`).  Returns (rows written, bytes of
+    their `value` payload), observed on the write itself: one Spark job."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    target = f"{path}/batch={int(batch_id)}"
     written = Observation()
-    writer = (batch_df.observe(written, F.count(F.lit(1)).alias("n"))
+    payload = F.octet_length(F.col("value").cast("binary"))
+    writer = (batch_df.observe(written, F.count(F.lit(1)).alias("n"),
+                               F.sum(payload).alias("bytes"))
               .write.mode("overwrite").format(fmt))
-    if max_file_size_mb and "value" in batch_df.columns:
-        records = _records_per_file(batch_df, "value", max_file_size_mb)
-        if records:
-            writer = writer.option("maxRecordsPerFile", records)
-    writer.save(target)
-    return written.get["n"]
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", max_records_per_file)
+    writer.save(f"{path}/batch={int(batch_id)}")
+    got = written.get
+    return got["n"], got["bytes"] or 0
+
+
+def file_deliver(path: str, fmt: str, max_file_size_mb: float | None,
+                 bytes_per_row: dict[str, float]) -> Callable[[DataFrame, int], int]:
+    """The file writer's `deliver` hook for :func:`foreach_batch_sink`:
+    :func:`write_batch_idempotent` per micro-batch, files rolled over at
+    about `max_file_size_mb` from the bytes/row of the last write to
+    `path`, kept in the caller's `bytes_per_row` so that a restarted query
+    (each `run_cycle`, a reload, a failure restart) reuses it.  Until
+    `path` has one, the batch is cached and measured by one aggregate job
+    before the write, so the source is still read once."""
+    def deliver(batch_df: DataFrame, batch_id: int) -> int:
+        per_row = bytes_per_row.get(path)
+        try:
+            if max_file_size_mb and per_row is None:
+                per_row = _bytes_per_row(batch_df.persist(), "value")
+            records = (_rows_per_file(max_file_size_mb, per_row)
+                       if max_file_size_mb and per_row else None)
+            n, size = write_batch_idempotent(batch_df, path, batch_id, fmt, records)
+        finally:
+            batch_df.unpersist()  # a no-op unless measured above
+        if n and size:
+            bytes_per_row[path] = size / n
+        return n
+
+    return deliver
 
 
 _TOKEN_RE = re.compile(r"\{\{(UUID|TIMESTAMP|HOST|LOGNAME|S)\}\}|%\{([A-Za-z_][A-Za-z0-9_]*)\}")

@@ -195,21 +195,26 @@ def test_session_runs_python_tasks_outside_the_checkout(tmp_path):
 
 def test_write_batch_sized_rolls_over_on_bytes(spark, tmp_path):
     """maxFileSizeMB fidelity: rollover derives from payload BYTES — 100
-    rows × ~1 KiB with a tiny size cap must split into many files, while a
-    generous cap writes few."""
+    rows × ~1 KiB with a ~10 KiB cap must split into many files, while 100
+    short rows under the same cap, or the same rows under a generous cap,
+    stay one file.  The first batch is sized by an estimate job, the
+    second from the bytes/row the first write observed."""
     import glob
 
-    from singer_spark.sinks import write_batch_idempotent
+    from singer_spark.sinks import file_deliver
 
-    df = spark.range(100).select(
-        F.rpad(F.col("id").cast("string"), 1024, "x").alias("value")).coalesce(1)
-    small = str(tmp_path / "small")
-    # ~100 KiB of payload with a cap ~10 KiB → ≥ 5 files
-    assert write_batch_idempotent(df, small, 0, "parquet", max_file_size_mb=0.01) == 100
-    assert len(glob.glob(f"{small}/batch=0/part-*")) >= 5
-    big = str(tmp_path / "big")
-    write_batch_idempotent(df, big, 0, "parquet", max_file_size_mb=100)
-    assert len(glob.glob(f"{big}/batch=0/part-*")) == 1
+    def files(width: int, cap_mb: float) -> list[int]:
+        df = spark.range(100).select(
+            F.rpad(F.col("id").cast("string"), width, "x").alias("value")).coalesce(1)
+        out = str(tmp_path / f"w{width}_cap{cap_mb}")
+        deliver = file_deliver(out, "parquet", cap_mb, {})
+        assert [deliver(df, b) for b in (0, 1)] == [100, 100]
+        return [len(glob.glob(f"{out}/batch={b}/part-*")) for b in (0, 1)]
+
+    small = files(1024, 0.01)
+    assert min(small) >= 5
+    assert files(10, 0.01) == [1, 1]
+    assert files(1024, 100) == [1, 1]
 
 
 def test_heartbeat_status_shape(spark):

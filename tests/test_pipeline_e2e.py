@@ -231,6 +231,107 @@ def _append(path: str, data: str) -> None:
         f.write(data)
 
 
+def _file_log(tmp_path, name: str, **writer_kwargs) -> LogConfig:
+    log_dir = str(tmp_path / f"{name}_in")
+    os.makedirs(log_dir, exist_ok=True)
+    return LogConfig(name=name, log_dir=log_dir, log_stream_regex="*.log",
+                     reader=ReaderConfig(type="text"),
+                     writer=WriterConfig(type="file", path=str(tmp_path / f"{name}_out"),
+                                         format="parquet", min_upload_seconds=0,
+                                         **writer_kwargs),
+                     checkpoint_dir=str(tmp_path / f"{name}_ck"))
+
+
+def _kib_lines(tag: str, n: int) -> str:
+    return "".join(f"{tag}{i:05d}".ljust(1024, "x") + "\n" for i in range(n))
+
+
+def test_unaudited_file_log_rolls_over_by_bytes(spark, tmp_path):
+    """writer.maxFileSizeMB takes effect on a plain (unaudited, uncapped)
+    file log: each micro-batch of 100 ~1 KiB lines rolls over at ~10 KiB,
+    the first measured before its write, the second sized from the bytes
+    per row the first batch's write observed."""
+    cfg = _file_log(tmp_path, "rolled", max_file_size_mb=0.01)
+    mgr = PipelineManager(spark)
+    q = mgr.start_log(cfg)
+    try:
+        for tag in ("a", "b"):
+            _append(f"{cfg.log_dir}/app.log", _kib_lines(tag, 100))
+            q.processAllAvailable()
+    finally:
+        mgr.stop_all()
+    out = cfg.writer.path
+    assert len(glob.glob(f"{out}/batch=0/part-*")) >= 5
+    assert len(glob.glob(f"{out}/batch=1/part-*")) >= 5
+    assert spark.read.parquet(out).count() == 200
+
+
+def _jobs(spark, query) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(str(query.runId)))
+
+
+def test_file_log_rollover_estimate_survives_run_cycle_restarts(spark, tmp_path):
+    """Each run_cycle starts a new query, and its one availableNow batch
+    is still rolled over at maxFileSizeMB: the first cycle measures the
+    bytes per row before its write (from a cache, so its row count stays
+    exact), the second reuses what the first cycle's write observed and
+    costs one Spark job."""
+    cfg = _file_log(tmp_path, "cycled", audit_topic="audit.cycled",
+                    max_file_size_mb=0.01)
+    audit = AuditCollector()
+    mgr = PipelineManager(spark)
+    jobs = []
+    for tag in ("a", "b"):
+        _append(f"{cfg.log_dir}/app.log", _kib_lines(tag, 100))
+        assert mgr.run_cycle(cfg, audit_sink=audit) == 100
+        jobs.append(_jobs(spark, mgr.queries[cfg.name]))
+    assert jobs[1] == 1 < jobs[0]
+    out = cfg.writer.path
+    assert len(glob.glob(f"{out}/batch=0/part-*")) >= 5
+    assert len(glob.glob(f"{out}/batch=1/part-*")) >= 5
+    assert audit.total("audit.cycled") == 200
+
+
+def test_audited_file_log_runs_one_spark_job_per_micro_batch(spark, tmp_path):
+    """An audited file micro-batch is one write job: the audit count and
+    the next batch's bytes/row come from the write's own Observation, not
+    from a count or size-estimate job over the batch.  The first batch
+    written to the path is measured before its write, so the count starts
+    after it."""
+    cfg = _file_log(tmp_path, "jobs", audit_topic="audit.jobs")
+    audit = AuditCollector()
+    mgr = PipelineManager(spark)
+    q = mgr.start_log(cfg, audit_sink=audit)
+    counts = []
+    try:
+        for tag in ("a", "b", "c"):
+            _append(f"{cfg.log_dir}/app.log", _kib_lines(tag, 20))
+            q.processAllAvailable()
+            counts.append((_jobs(spark, q),
+                           sum(p.numInputRows > 0 for p in q.recentProgress)))
+    finally:
+        mgr.stop_all()
+    (jobs0, batches0), (jobs, batches) = counts[0], counts[-1]
+    assert batches - batches0 >= 2
+    assert jobs - jobs0 == batches - batches0
+    assert audit.total("audit.jobs") == 60
+    assert spark.read.parquet(cfg.writer.path).count() == 60
+
+
+def test_file_log_refuses_a_spark_file_sink_path(spark, tmp_path):
+    """A path that holds Spark's file-sink log (_spark_metadata) is refused
+    at start: Spark readers would follow that log and never list the
+    batch=<id> dirs this writer adds."""
+    cfg = _file_log(tmp_path, "legacy")
+    os.makedirs(f"{cfg.writer.path}/_spark_metadata")
+    _append(f"{cfg.writer.path}/_spark_metadata/0", "v1\n")
+    _append(f"{cfg.log_dir}/app.log", "m\n")
+    with pytest.raises(ValueError, match="_spark_metadata"):
+        PipelineManager(spark).start_log(cfg)
+    assert os.listdir(cfg.writer.path) == ["_spark_metadata"]
+
+
 def test_text_reader_delivers_growth_and_rename_rotation_once(spark, tmp_path):
     """reader.type=text tails: lines appended to a file already read are
     delivered, and a rename rotation (app.log -> app.log.1 plus a new
@@ -283,7 +384,7 @@ def test_text_reader_refuses_a_spark_file_source_checkpoint(spark, tmp_path):
                     checkpoint_dir=ckpt)
     with pytest.raises(StreamingQueryException, match="fresh checkpoint"):
         PipelineManager(spark).run_cycle(cfg)
-    assert not glob.glob(f"{out}/*.parquet")
+    assert not glob.glob(f"{out}/**/*.parquet", recursive=True)
 
 
 def test_prepend_timestamp_prefixes_the_read_time(spark, tmp_path):

@@ -377,6 +377,56 @@ def test_streaming_heavy_hitters_state_bounds(spark, tmp_path):
         assert c >= truth[item] - thresh
 
 
+def test_streaming_heavy_hitters_restart_invariance(spark, tmp_path):
+    """A fresh availableNow query per chunk (kill + restart between every
+    micro-batch) folds the same state as ONE uninterrupted query reading a
+    chunk per batch (maxFilesPerTrigger=1 on the reader), and that state
+    keeps the Misra-Gries bounds against the true counts."""
+    import os
+    from collections import Counter
+
+    from singer_spark.streaming.stateful import read_fold_state, streaming_heavy_hitters
+
+    # the warm items make each fold prune, so any other batching of the
+    # three chunks (all in one batch) folds a different state
+    cap = 8
+    chunks = [["alpha"] * 60 + ["beta"] * 30 + [f"hot{b}"] * 20
+              + [f"warm{b}_{k}" for k in range(4) for _ in range(6)]
+              + [f"tail{b}_{i}" for i in range(40)] for b in range(3)]
+
+    def deliver(tag: str, b: int) -> None:
+        src = str(tmp_path / f"src_{tag}")
+        os.makedirs(src, exist_ok=True)
+        stage = str(tmp_path / f"stage_{tag}{b}")
+        spark.createDataFrame([(i,) for i in chunks[b]], "item string") \
+             .coalesce(1).write.mode("overwrite").parquet(stage)
+        part = next(p for p in os.listdir(stage) if p.endswith(".parquet"))
+        os.rename(os.path.join(stage, part), os.path.join(src, f"chunk{b}.parquet"))
+
+    def run(tag: str, reader) -> dict:
+        q = (streaming_heavy_hitters(
+            reader.schema("item string").parquet(str(tmp_path / f"src_{tag}")),
+            str(tmp_path / f"state_{tag}"), checkpoint=str(tmp_path / f"ck_{tag}"),
+            item_col="item", capacity=cap)
+            .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        q.stop()
+        return {r.item: r.cnt for r in
+                read_fold_state(spark, str(tmp_path / f"state_{tag}")).collect()}
+
+    for b in range(len(chunks)):
+        deliver("churn", b)
+        churned = run("churn", spark.readStream)
+        deliver("ref", b)
+    ref = run("ref", spark.readStream.option("maxFilesPerTrigger", 1))
+    assert churned == ref
+    truth = Counter(i for c in chunks for i in c)
+    thresh = sum(truth.values()) / cap
+    assert len(churned) <= cap
+    assert all(truth[i] >= c >= truth[i] - thresh for i, c in churned.items())
+    assert all(i in churned for i, c in truth.items() if c > thresh)
+
+
 @pytest.mark.soak
 def test_streaming_heavy_hitters_stale_marker_new_run(spark, tmp_path):
     """Recreating the checkpoint restarts epoch ids at 0; a pointer row

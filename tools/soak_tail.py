@@ -503,11 +503,11 @@ def run_fold_churn_soak(spark, root: str, seconds: float,
         deliver("ref", b)
     q = (streaming_heavy_hitters(
         spark.readStream.schema("item string")
+        .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(root, "fold_src_ref")),
         os.path.join(root, "fold_state_ref"),
         checkpoint=os.path.join(root, "fold_ckpt_ref"),
         item_col="item", capacity=cap)
-        .option("maxFilesPerTrigger", 1)
         .trigger(availableNow=True).start())
     q.awaitTermination(300)
     q.stop()
