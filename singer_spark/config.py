@@ -61,7 +61,7 @@ class WriterConfig:
     # never silently redirect a config that didn't opt in)
     partitioner: str | None = None
     num_partitions: int = 16
-    # P8-P10: rack-local partition ids from a LocalityProvider (None → all)
+    # P8-P10: rack-local partition ids (None → all partitions)
     local_partitions: list[int] | None = None
     # kwargs for the producer factory (kafka-python names for the default
     # KafkaProducer; they override the reference defaults)

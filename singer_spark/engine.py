@@ -22,19 +22,27 @@ import hashlib
 import json
 import os
 import shutil
+import sys
 import tempfile
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from singer_spark import sinks, sources
-from singer_spark.config import LogConfig, SingerConfig
-from singer_spark.fsutil import fs_exists
+from singer_spark.config import LogConfig, ReaderConfig, SingerConfig
+from singer_spark.fsutil import fs_exists, fs_listdir
 from singer_spark.partitioners import get_partitioner
-from singer_spark.transforms import TransformConfig, apply_transforms, inject_headers
+from singer_spark.transforms import (
+    drop_oversize,
+    filter_message_regex,
+    inject_headers,
+    prepend_fields,
+    regex_based_modifier,
+    sample_messages,
+)
 
 
 def _percent_hash(basis: str) -> int:
@@ -132,55 +140,49 @@ def build_source(spark: SparkSession, cfg: LogConfig) -> DataFrame:
     return df
 
 
+def _kube_fields(r: ReaderConfig) -> tuple[str, ...]:
+    """`reader.kube_metadata_fields` as its colon field paths."""
+    return tuple(f.strip() for f in (r.kube_metadata_fields or "").split(",")
+                 if f.strip())
+
+
 def build_transforms(df: DataFrame, cfg: LogConfig,
                      pod_fetcher=None) -> DataFrame:
-    r, t, p = cfg.reader, cfg.transformer, cfg.processor
-    tc = TransformConfig(
-        filter_regex=r.filter_message_regex,
-        modifier_regex=t.regex if t.type == "regex" else None,
-        modifier_template=t.modified_message_format,
-        prepend_hostname=r.prepend_hostname,
-        prepend_timestamp_format="yyyy-MM-dd HH:mm:ss" if r.prepend_timestamp else None,
-        delimiter=r.prepend_field_delimiter,
-        trim_newline=False,  # no reader yields line ends
-        sample_percent=p.sample_percent,
-        max_message_bytes=r.max_message_size,
-    )
-    out = apply_transforms(df, tc, text_col="value")
+    """The LogConfig's per-message settings as column expressions on the
+    `value` column, in the reference's order: filter → rewrite → prepend
+    → sample → oversize drop → pod headers → partition (T1-T11, D8, P1-P10;
+    utils/LogConfigUtils.java parses the reference's equivalents).  No
+    reader yields line ends, so nothing trims a newline."""
+    r, t = cfg.reader, cfg.transformer
+    out = df
+    if r.filter_message_regex:
+        out = filter_message_regex(out, "value", r.filter_message_regex)
+    if t.type == "regex" and t.regex and t.modified_message_format is not None:
+        out = out.withColumn("value", regex_based_modifier(
+            "value", t.regex, t.modified_message_format))
+    prefixes: list[Column] = []
+    if r.prepend_timestamp:  # the read time: the micro-batch's timestamp
+        prefixes.append(F.date_format(F.current_timestamp(), "yyyy-MM-dd HH:mm:ss"))
+    if r.prepend_hostname:
+        prefixes.append(F.lit("localhost"))
+    if prefixes:
+        out = out.withColumn("value", prepend_fields(
+            "value", prefixes, r.prepend_field_delimiter))
+    if cfg.processor.sample_percent < 100:
+        out = sample_messages(out, "value", cfg.processor.sample_percent)
+    if r.max_message_size:
+        out = drop_oversize(out, "value", r.max_message_size)
     if r.pod_metadata:
         # pod identity headers from the path columns; pod-SPEC fields
         # (labels/annotations) from the kubelet fetcher when configured.
         # Enrichment snapshots at plan build — a restart (config reload,
         # failure recovery) picks up fresh labels.
-        from singer_spark.sources import (
-            pod_headers,
-            pod_spec_headers,
-            with_pod_spec_metadata,
-        )
-
-        hdrs = dict(pod_headers())
-        if pod_fetcher is not None and r.kube_metadata_fields:
-            out = with_pod_spec_metadata(out, pod_fetcher)
-            leaf_keys = tuple(p.strip().split(":")[-1]
-                              for p in r.kube_metadata_fields.split(",")
-                              if p.strip())
-            hdrs.update(pod_spec_headers(leaf_keys))
-        if "headers" in out.columns:
-            kv = [x for k, v in hdrs.items()
-                  for x in (F.lit(k), v.cast("binary"))]
-            # first-wins merge (the reference's putIfAbsent semantics):
-            # drop injected keys already present in the row's map — a
-            # bare map_concat would THROW under the default
-            # spark.sql.mapKeyDedupPolicy=EXCEPTION when a static cfg
-            # header collides with a kube leaf key, killing the query
-            inj = F.map_filter(
-                F.create_map(*kv),
-                lambda k, _v: ~F.array_contains(
-                    F.map_keys(F.col("headers")), k))
-            out = out.withColumn(
-                "headers", F.map_concat("headers", inj))
-        else:
-            out = inject_headers(out, hdrs)
+        hdrs = dict(sources.pod_headers())
+        fields = _kube_fields(r)
+        if pod_fetcher is not None and fields:
+            out = sources.with_pod_spec_metadata(out, pod_fetcher)
+            hdrs.update(sources.pod_spec_headers(tuple(f.split(":")[-1] for f in fields)))
+        out = inject_headers(out, hdrs)
     w = cfg.writer
     part_name = w.partitioner
     if part_name is None and w.type in ("kafka", "kafka_direct"):
@@ -191,8 +193,7 @@ def build_transforms(df: DataFrame, cfg: LogConfig,
         key = F.col("key") if "key" in out.columns else F.col("value")
         fn = get_partitioner(part_name)
         kwargs = {}
-        # locality-aware partitioners take the provider-fed local list
-        # (config carries it; a LocalityProvider refreshes it on rebuild)
+        # locality-aware partitioners take the configured rack-local list
         if "local_partitions" in inspect.signature(fn).parameters:
             kwargs["local_partitions"] = w.local_partitions
         out = out.withColumn("partition", fn(key, w.num_partitions, **kwargs))
@@ -268,12 +269,11 @@ class PipelineManager:
             return None
         if self.pod_fetcher is not None:  # injected: shared by design
             return self.pod_fetcher
-        if not r.kube_metadata_fields:
+        fields = _kube_fields(r)
+        if not fields:
             return None
         from singer_spark.sources import PodMetadataFetcher
 
-        fields = tuple(f.strip() for f in r.kube_metadata_fields.split(",")
-                       if f.strip())
         key = (r.kube_pods_url, fields)
         if key not in self._pod_fetchers:
             self._pod_fetchers[key] = PodMetadataFetcher(
@@ -306,11 +306,14 @@ class PipelineManager:
             self._start_query(shadow_cfg)
         return query
 
+    def _checkpoint(self, cfg: LogConfig) -> str:
+        return cfg.checkpoint_dir or os.path.join(self.checkpoint_root, cfg.name)
+
     def _start_query(self, cfg: LogConfig, audit_sink=None,
                      available_now: bool = False) -> StreamingQuery:
         """source → transforms → writer for one LogConfig, started under
         its name against its checkpoint and registered in `queries`."""
-        ckpt = cfg.checkpoint_dir or os.path.join(self.checkpoint_root, cfg.name)
+        ckpt = self._checkpoint(cfg)
         df = build_transforms(build_source(self.spark, cfg), cfg,
                               pod_fetcher=self._pod_fetcher_for(cfg))
         writer = self._build_writer(cfg, df, ckpt, audit_sink)
@@ -401,7 +404,7 @@ class PipelineManager:
             def deliver(batch_df: DataFrame, batch_id: int) -> int:
                 return sinks.pulsar_write_batch(batch_df, w.bootstrap_servers, w.topic,
                                                 client_factory=client_factory)
-        elif w.type in ("file", "s3", "parquet", "text"):
+        elif w.type in ("file", "s3"):
             # one overwrite per micro-batch into <path>/batch=<id> (a replay
             # replaces its output), files sized by maxFileSizeMB, on the
             # minUploadTime trigger (sinks.file_deliver).  Spark's file sink
@@ -421,6 +424,19 @@ class PipelineManager:
             writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
         return writer
 
+    def _start_isolated(self, cfg: LogConfig) -> bool:
+        """`start_log` with the audit sink the log was registered with,
+        isolated: one broken log (a typo'd writer type, an unbuildable
+        reader) must not take down the healthy pipelines or the caller's
+        loop.  The error goes to stderr; returns whether start_log ran
+        through."""
+        try:
+            self.start_log(cfg, audit_sink=self._audit_sinks.get(cfg.name))
+            return True
+        except Exception as e:
+            sys.stderr.write(f"singer_spark: could not start {cfg.name}: {e}\n")
+            return False
+
     def start_all(self, audit_sink=None) -> None:
         for cfg in self.config.logs:
             self.start_log(cfg, audit_sink=audit_sink)
@@ -429,16 +445,26 @@ class PipelineManager:
     def run_cycle(self, cfg: LogConfig, audit_sink=None) -> int:
         """One drain-everything-available cycle (Trigger.AvailableNow against
         the log's checkpoint — resumes where the last cycle stopped).
-        Returns the query's summed `numInputRows`: source rows, which is
-        messages for every reader except `thrift` without `pod_metadata`,
-        whose `binaryFile` source yields one row per FILE."""
-        query = self._start_query(cfg, audit_sink, available_now=True)
-        query.awaitTermination()
+        Returns the summed `numInputRows`: source rows, which is messages
+        for every reader except `thrift` without `pod_metadata`, whose
+        `binaryFile` source yields one row per FILE.
+
+        A checkpoint whose newest `offsets/<n>` has no `commits/<n>` (a
+        crash between the two writes) makes Spark's `availableNow` query
+        replay batch n and stop there, so the cycle runs a second query
+        for what arrived since.  A fresh or clean checkpoint starts one."""
+        ckpt = self._checkpoint(cfg)
+        offsets = [n for n in fs_listdir(self.spark, f"{ckpt}/offsets") if n.isdigit()]
+        replay = bool(offsets) and (max(offsets, key=int)
+                                    not in fs_listdir(self.spark, f"{ckpt}/commits"))
         rows = 0
-        for p in query.recentProgress:
-            if isinstance(p, str):
-                p = json.loads(p)
-            rows += int(p.get("numInputRows", 0) or 0)
+        for _ in range(2 if replay else 1):
+            query = self._start_query(cfg, audit_sink, available_now=True)
+            query.awaitTermination()
+            for p in query.recentProgress:
+                if isinstance(p, str):
+                    p = json.loads(p)
+                rows += int(p.get("numInputRows", 0) or 0)
         return rows
 
     def run_adaptive(self, cfg: LogConfig, audit_sink=None, cycles: int = 1,
@@ -541,25 +567,15 @@ class PipelineManager:
         # preserve agent-level knobs parsed from singer.properties
         self.config = new_config
 
-        def guarded_start(cfg, bucket: str) -> None:
-            # one bad conf.d entry (typo'd writer type, unbuildable reader)
-            # must not take down the healthy pipelines — record and move on
-            try:
-                self.start_log(cfg, audit_sink=self._audit_sinks.get(cfg.name))
-                actions[bucket].append(cfg.name)
-            except Exception as e:
-                import sys
-
-                sys.stderr.write(
-                    f"singer_spark: config reload could not start {cfg.name}: {e}\n")
-                actions["failed"].append(cfg.name)
-
         for name, cfg in new_logs.items():
             if name not in old_logs:
-                guarded_start(cfg, "started")
+                bucket = "started"
             elif cfg != old_logs[name]:
                 self._stop_query(name)
-                guarded_start(cfg, "restarted")
+                bucket = "restarted"
+            else:
+                continue
+            actions[bucket if self._start_isolated(cfg) else "failed"].append(name)
         for name in old_logs:
             if name not in new_logs:
                 self._stop_query(name)
@@ -582,17 +598,11 @@ class PipelineManager:
         monitor/MissingDirChecker.java:40-48).  Returns the names started."""
         started = []
         for name, cfg in list(self.pending_dirs.items()):
-            if os.path.isdir(cfg.log_dir):
-                try:
-                    q = self.start_log(cfg, audit_sink=self._audit_sinks.get(name))
-                except Exception as e:  # isolate one broken log (see reload)
-                    import sys
-
-                    sys.stderr.write(
-                        f"singer_spark: deferred start of {name} failed: {e}\n")
-                    continue
-                if q is not None:
-                    started.append(name)
+            # still parked after a clean start_log: decider-disabled, or
+            # its dir went away again
+            if (os.path.isdir(cfg.log_dir) and self._start_isolated(cfg)
+                    and name not in self.pending_dirs):
+                started.append(name)
         return started
 
     # -- O6 restart-after-failure ------------------------------------------
@@ -624,15 +634,7 @@ class PipelineManager:
             if self.failures[base] > self.config.num_failures_allowed:
                 actions["gave_up"].append(base)
                 continue
-            try:
-                self.start_log(cfg, audit_sink=self._audit_sinks.get(base))
-            except Exception as e:  # one broken log must not kill the loop
-                import sys
-
-                sys.stderr.write(f"singer_spark: restart of {base} failed: {e}\n")
-                actions["failed"].append(base)
-                continue
-            actions["restarted"].append(base)
+            actions["restarted" if self._start_isolated(cfg) else "failed"].append(base)
         return actions
 
     # -- drain / stop (O3 admin `stop`) -----------------------------------

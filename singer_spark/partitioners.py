@@ -103,10 +103,9 @@ def fixed_partitions_partitioner(key: Column, num_partitions: int, subset_size: 
 # Reference: writer/partitioners/LocalityAwarePartitioner.java:29-80,
 # LocalityAwareRandomPartitioner.java:41-49,
 # LocalityAwareSinglePartitionPartitioner.java:45-57.
-# Spark has no broker-metadata feed; the driver fetches partition→rack
-# leadership out of band (e.g. kafka-python AdminClient) and passes the
-# local-partition list here; it is broadcast with the plan as a literal
-# array — the same "refresh by rebuilding" model as the reference's timer.
+# Spark has no broker-metadata feed: the rack-local partition list is
+# static config (`writer.local_partitions`), baked into the plan as a
+# literal array; a changed list takes effect when the query is rebuilt.
 def locality_aware_random_partitioner(key: Column, num_partitions: int,
                                       local_partitions: list[int] | None) -> Column:
     if not local_partitions:  # fallback-to-all, LocalityAwarePartitioner.java:67-71
@@ -124,68 +123,6 @@ def locality_aware_single_partition_partitioner(key: Column, num_partitions: int
         return single_partition_partitioner(key, num_partitions)
     idx = pinned_index if pinned_index is not None else random.randrange(len(local_partitions))
     return F.lit(int(local_partitions[idx])).cast("int")
-
-
-# ---------------------------------------------------------------------------
-# Locality metadata feed (P8-P10) — the driver-side half the reference gets
-# from its broker-metadata refresh timer
-# (writer/partitioners/LocalityAwarePartitioner.java:29-80): fetch
-# partition→leader-rack leadership, keep only partitions whose leader shares
-# the agent's rack, refresh on an interval, and FALL BACK TO ALL partitions
-# when the fetch fails or nothing is rack-local (.java:67-71).  The result
-# feeds `locality_aware_*_partitioner(local_partitions=...)`, baked into the
-# plan as literals — "refresh by rebuilding", exactly the reference's model.
-# ---------------------------------------------------------------------------
-class LocalityProvider:
-    """``fetch_leader_racks() -> {partition_id: rack}`` is injected: in
-    production a kafka AdminClient call (:func:`kafka_leader_rack_fetcher`),
-    in tests a fake.  ``local_partitions()`` returns the rack-local partition
-    ids, or None to signal fallback-to-all."""
-
-    def __init__(self, fetch_leader_racks, local_rack: str,
-                 refresh_seconds: float = 300.0, clock=None) -> None:
-        import time
-
-        self.fetch_leader_racks = fetch_leader_racks
-        self.local_rack = local_rack
-        self.refresh_seconds = refresh_seconds
-        self.clock = clock or time.time
-        self._fetched_at: float | None = None
-        self._local: list[int] | None = None
-
-    def local_partitions(self) -> list[int] | None:
-        now = self.clock()
-        if self._fetched_at is None or now - self._fetched_at >= self.refresh_seconds:
-            try:
-                racks = dict(self.fetch_leader_racks())
-                local = sorted(int(p) for p, r in racks.items() if r == self.local_rack)
-                self._local = local or None   # no rack-local leader → all
-            except Exception:
-                self._local = None            # metadata outage → all
-            self._fetched_at = now
-        return self._local
-
-
-def kafka_leader_rack_fetcher(bootstrap_servers: str, topic: str):
-    """Production ``fetch_leader_racks`` over kafka-python's AdminClient
-    (import-gated — not installed in this container; inject a fake in
-    tests).  Maps each partition to its leader broker's rack, the exact
-    feed LocalityAwarePartitioner.java:29-80 refreshes."""
-
-    def fetch() -> dict[int, str | None]:
-        from kafka import KafkaAdminClient  # type: ignore
-
-        admin = KafkaAdminClient(bootstrap_servers=bootstrap_servers)
-        try:
-            cluster = admin.describe_cluster()
-            broker_rack = {b["node_id"]: b.get("rack") for b in cluster["brokers"]}
-            (topic_md,) = admin.describe_topics([topic])
-            return {p["partition"]: broker_rack.get(p["leader"])
-                    for p in topic_md["partitions"]}
-        finally:
-            admin.close()
-
-    return fetch
 
 
 # ---------------------------------------------------------------------------

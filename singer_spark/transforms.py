@@ -1,16 +1,15 @@
 """Per-record transforms — reference parity for SURVEY.md §2.3 (T1-T11).
 
-Each transform is a composable ``DataFrame -> DataFrame`` (or column
-expression) built from JVM-side functions only, so the whole chain stays
+Each transform is a composable ``DataFrame -> DataFrame`` step or column
+expression built from JVM-side functions only, so a chain of them stays
 inside one WholeStageCodegen span and scales linearly with input bytes —
-no shuffle, no Python boundary.
+no shuffle, no Python boundary.  `engine.build_transforms` composes the
+steps a LogConfig turns on; the oracle queries call each one directly.
 
 Reference citations are to /root/reference (pinterest/singer).
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -144,52 +143,3 @@ def sample_messages(df: DataFrame, key_col: str, percent: int) -> DataFrame:
 # ---------------------------------------------------------------------------
 def drop_oversize(df: DataFrame, column: str, max_bytes: int) -> DataFrame:
     return df.filter(F.octet_length(F.col(column)) <= max_bytes)
-
-
-# ---------------------------------------------------------------------------
-# Config-driven transform chain (mirrors how a SingerLogConfig's
-# reader+transformer settings compose; utils/LogConfigUtils.java parses the
-# reference's equivalents).
-# ---------------------------------------------------------------------------
-@dataclass
-class TransformConfig:
-    filter_regex: str | None = None
-    modifier_regex: str | None = None
-    modifier_template: str | None = None
-    prepend_hostname: bool = False
-    prepend_timestamp_format: str | None = None
-    hostname: str = "localhost"
-    delimiter: str = " "
-    trim_newline: bool = True
-    sample_percent: int = 100
-    max_message_bytes: int | None = None
-    headers: dict[str, str] = field(default_factory=dict)
-
-
-def apply_transforms(df: DataFrame, cfg: TransformConfig, text_col: str = "value",
-                     key_col: str | None = None) -> DataFrame:
-    """Compose the full T1-T11 chain in reference order:
-    filter → transform → prepend → trim → sample → oversize-drop → headers.
-    The prepended timestamp is the read time: the micro-batch's
-    current_timestamp."""
-    out = df
-    if cfg.filter_regex:
-        out = filter_message_regex(out, text_col, cfg.filter_regex)
-    if cfg.modifier_regex and cfg.modifier_template is not None:
-        out = out.withColumn(text_col, regex_based_modifier(text_col, cfg.modifier_regex, cfg.modifier_template))
-    prefixes: list[Column] = []
-    if cfg.prepend_timestamp_format:
-        prefixes.append(F.date_format(F.current_timestamp(), cfg.prepend_timestamp_format))
-    if cfg.prepend_hostname:
-        prefixes.append(F.lit(cfg.hostname))
-    if prefixes:
-        out = out.withColumn(text_col, prepend_fields(text_col, prefixes, cfg.delimiter))
-    if cfg.trim_newline:
-        out = out.withColumn(text_col, trim_trailing_newline(text_col))
-    if cfg.sample_percent < 100:
-        out = sample_messages(out, key_col or text_col, cfg.sample_percent)
-    if cfg.max_message_bytes:
-        out = drop_oversize(out, text_col, cfg.max_message_bytes)
-    if cfg.headers:
-        out = inject_headers(out, {k: F.lit(v) for k, v in cfg.headers.items()})
-    return out

@@ -90,9 +90,9 @@ def test_checkpoint_written_with_crc_files_resumes_without_them(spark, tmp_path)
 def test_uncommitted_batch_replays_the_same_rows(spark, tmp_path):
     """A crash between the offset write and the commit (the last
     `commits/N` is missing): the restarted cycle replays batch N over the
-    same range (Spark's `availableNow` ends that cycle there), and the next
-    cycle reads what arrived since.  Nothing is lost; the only duplicates
-    are batch N's own rows; the audit counts every delivery."""
+    same range, then drains what arrived since in the same cycle, and the
+    next cycle finds nothing.  Nothing is lost; the only duplicates are
+    batch N's own rows; the audit counts every delivery."""
     log_dir, out_dir, ckpt, cfg = _setup(tmp_path)
     audit = AuditCollector()
     first = _append_lines(log_dir, "a")
@@ -102,9 +102,9 @@ def test_uncommitted_batch_replays_the_same_rows(spark, tmp_path):
             os.remove(os.path.join(ckpt, "commits", name))
 
     second = _append_lines(log_dir, "b")
-    assert _run_cycle(spark, cfg, out_dir, audit) == len(first)
+    assert _run_cycle(spark, cfg, out_dir, audit) == len(first) + len(second)
     assert os.path.exists(os.path.join(ckpt, "commits", "0"))
-    assert _run_cycle(spark, cfg, out_dir, audit) == len(second)
+    assert _run_cycle(spark, cfg, out_dir, audit) == 0
     delivered = Counter(r["value"] for r in _read_delivered(out_dir))
     assert delivered - Counter(first + second) == Counter(first)  # the replay
     assert not Counter(first + second) - delivered  # nothing lost

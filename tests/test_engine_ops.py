@@ -497,6 +497,19 @@ def test_unknown_reader_type_is_rejected(spark, tmp_path):
         build_source(spark, cfg)
 
 
+def test_writer_type_text_is_rejected(spark, tmp_path):
+    """Only `file` and `s3` name the file writer: `writer.type=text` would
+    write parquet unless `writer.format` said otherwise, so it fails at
+    start instead."""
+    cfg = _cfg(tmp_path, "text_writer")
+    cfg.writer.type = "text"
+    _write_lines(f"{cfg.log_dir}/a.log", 2)
+    mgr = PipelineManager(spark)
+    with pytest.raises(ValueError, match="unsupported writer type"):
+        mgr.start_log(cfg)
+    assert not mgr.queries
+
+
 # ---------------------------------------------------------------------------
 # D8 completion — pod-SPEC metadata (labels/annotations) from a kubelet
 # /pods endpoint, fake-server tested like the Kafka/Pulsar transports.
@@ -522,36 +535,6 @@ def _fake_kubelet(pod_items):
     srv = http.server.HTTPServer(("127.0.0.1", 0), Handler)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv, f"http://127.0.0.1:{srv.server_port}/pods"
-
-
-def test_pod_header_injection_first_wins_on_collision(spark):
-    """A header key already present on the row (e.g. a static cfg header
-    named 'app' colliding with a kube label leaf key) must survive with
-    its ORIGINAL value — the reference's putIfAbsent semantics.  A bare
-    map_concat would throw under spark.sql.mapKeyDedupPolicy=EXCEPTION
-    and kill the query."""
-    from singer_spark.config import LogConfig, ReaderConfig
-    from singer_spark.engine import build_transforms
-    from singer_spark.sources import PodMetadataFetcher
-
-    fetcher = PodMetadataFetcher(
-        fields=("labels:app",),
-        fetch_pod_list=lambda: {"items": [
-            {"metadata": {"uid": "u1", "labels": {"app": "kube-app"}}}]})
-    df = spark.createDataFrame(
-        [("hello", "team-a", "web-1", "u1",
-          {"app": bytearray(b"static")})],
-        "value string, pod_namespace string, pod_name string, "
-        "pod_uid string, headers map<string,binary>")
-    cfg = LogConfig(
-        name="collide", log_dir="/tmp",
-        reader=ReaderConfig(type="text", pod_metadata=True,
-                            kube_metadata_fields="labels:app"))
-    rows = build_transforms(df, cfg, pod_fetcher=fetcher).collect()
-    h = rows[0]["headers"]
-    assert bytes(h["app"]) == b"static"      # first wins on collision
-    assert bytes(h["podName"]) == b"web-1"   # fresh keys still injected
-    assert bytes(h["podNamespace"]) == b"team-a"
 
 
 def test_pod_metadata_pipeline_e2e_with_fake_kubelet(spark, tmp_path):

@@ -8,9 +8,15 @@ import zlib
 from pyspark.sql import functions as F
 
 from singer_spark import partitioners as P
+from singer_spark.config import (
+    LogConfig,
+    ProcessorConfig,
+    ReaderConfig,
+    TransformerConfig,
+    WriterConfig,
+)
+from singer_spark.engine import build_transforms
 from singer_spark.transforms import (
-    TransformConfig,
-    apply_transforms,
     drop_oversize,
     filter_message_regex,
     inject_headers,
@@ -93,19 +99,40 @@ def test_message_id_16_bytes(spark):
     assert len(bytes(row.mid)) == 16
 
 
+def _chain(spark, rows, **kwargs):
+    """build_transforms on `rows` of `value` under a noop-writer LogConfig
+    (no partition column) with the given reader/transformer/processor."""
+    cfg = LogConfig(name="chain", log_dir="/unused", writer=WriterConfig(type="noop"),
+                    **kwargs)
+    return build_transforms(_df(spark, [(r,) for r in rows], ["value"]), cfg).collect()
+
+
 def test_full_chain(spark):
-    cfg = TransformConfig(
-        filter_regex="keep",
-        modifier_regex=r"keep:(\w+)",
-        modifier_template="$1",
-        prepend_hostname=True,
-        hostname="h9",
-        max_message_bytes=100,
-    )
-    df = _df(spark, [("keep:one\n",), ("drop:two\n",)], ["value"])
-    out = apply_transforms(df, cfg, text_col="value").collect()
-    assert len(out) == 1
-    assert out[0].value == "h9 one"
+    out = _chain(spark, ["keep:one", "drop:two", "keep:" + "x" * 100],
+                 reader=ReaderConfig(filter_message_regex="keep", prepend_hostname=True,
+                                     max_message_size=100),
+                 transformer=TransformerConfig(type="regex", regex=r"keep:(\w+)",
+                                               modified_message_format="$1"))
+    # filter, then rewrite, then prepend; the oversize drop measures the
+    # prepended message (110 bytes for the third row)
+    assert [r.value for r in out] == ["localhost one"]
+
+
+def test_chain_regex_rewrite_passes_unmatched_through(spark):
+    out = _chain(spark, ["user=42", "garbage"],
+                 transformer=TransformerConfig(type="regex", regex=r"user=(\d+)",
+                                               modified_message_format="id:$1"))
+    assert sorted(r.value for r in out) == ["garbage", "id:42"]
+
+
+def test_chain_samples_by_processor_percent(spark):
+    rows = [f"line-{i}" for i in range(2000)]
+    out = _chain(spark, rows, processor=ProcessorConfig(sample_percent=25))
+    kept = [r.value for r in out]
+    # the keyed-hash sample of the message text, as sample_messages keeps it
+    want = sample_messages(_df(spark, [(r,) for r in rows], ["value"]), "value", 25)
+    assert sorted(kept) == sorted(r.value for r in want.collect())
+    assert 380 < len(kept) < 620
 
 
 # -- partitioners -----------------------------------------------------------
