@@ -18,20 +18,13 @@ from __future__ import annotations
 import socket
 import time
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-AUDIT_SCHEMA = StructType([
-    StructField("timestamp", LongType(), False),   # nanos, like the reference
-    StructField("hostname", StringType(), False),
-    StructField("topic", StringType(), False),
-    StructField("numMessages", LongType(), False),
-    StructField("batchId", LongType(), False),
-])
+from pyspark.sql import DataFrame
 
 
 def audit_row(topic: str, num_messages: int, batch_id: int,
               hostname: str | None = None) -> tuple:
+    """One AuditMessage: (timestamp in nanos, like the reference, hostname,
+    topic, numMessages, batchId)."""
     return (
         time.time_ns(),
         hostname or socket.gethostname(),
@@ -39,12 +32,6 @@ def audit_row(topic: str, num_messages: int, batch_id: int,
         int(num_messages),
         int(batch_id),
     )
-
-
-def make_audit_df(spark: SparkSession, topic: str, num_messages: int,
-                  batch_id: int, hostname: str | None = None) -> DataFrame:
-    return spark.createDataFrame([audit_row(topic, num_messages, batch_id, hostname)],
-                                 AUDIT_SCHEMA)
 
 
 def audit_events_for_tracked(df: DataFrame, log_name: str | None = None,
@@ -97,12 +84,9 @@ class AuditCollector:
     def __init__(self) -> None:
         self.rows: list[tuple] = []
 
-    def append(self, audit: tuple | DataFrame) -> None:
-        """Take one :func:`audit_row` tuple, or collect an audit DataFrame."""
-        if isinstance(audit, tuple):
-            self.rows.append(audit)
-        else:
-            self.rows.extend(tuple(r) for r in audit.collect())
+    def __call__(self, row: tuple) -> None:
+        """Take one :func:`audit_row` tuple."""
+        self.rows.append(row)
 
     def total(self, topic: str | None = None) -> int:
         return sum(r[3] for r in self.rows if topic is None or r[2] == topic)

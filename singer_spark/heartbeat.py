@@ -21,15 +21,16 @@ Field parity (SingerStatus.java:108-149):
   the micro-batch twin of the reference's per-topic write-latency
   distributions.
 - `duplicatesSuspected` — per-stream {reopens, bytes} read from the tail
-  source's counters-file side channel: the measurable width of the
-  at-least-once duplicate window under copytruncate rotation, matching
-  the reference's per-stream metric discipline.  The reader counts
-  fingerprint-mismatch reopens and copytruncate copies when it plans a
-  batch, from the batch's (start, end) offsets (see streaming/tail.py),
-  and writes its file once per planned batch; offsets stay
-  position-only, and the reader runs in its own Python worker, so a file
-  under the tempdir is the channel that crosses that boundary.  A stream
-  with no batch in `list_counters`' 15-minute window is not listed.
+  source's counters files: the measurable width of the at-least-once
+  duplicate window under copytruncate rotation, matching the reference's
+  per-stream metric discipline.  The reader counts fingerprint-mismatch
+  reopens and copytruncate copies when it plans a batch, from the batch's
+  (start, end) offsets (see streaming/tail.py), and rewrites its stream's
+  file once per planned batch; offsets stay position-only, and the reader
+  runs in its own Python worker, so a file under the tempdir is the
+  channel that crosses that boundary.  Only the streams this driver's
+  `tail_stream` calls started are listed, and only those with a batch in
+  `list_counters`' 15-minute window.
 """
 
 from __future__ import annotations
@@ -138,16 +139,14 @@ def build_status(spark: SparkSession, started_at: float,
             if now - ts > stuck_threshold(stuck_seconds, prog_ts):
                 stuck += 1
     # tail readers (which run in their own Python worker process)
-    # publish per-stream counters through the counters-file side
-    # channel, keeping streaming offsets position-only (ADVICE r7 #2);
-    # recently-updated entries only, so a long-lived tempdir doesn't
-    # resurrect dead streams, and filtered to THIS application's
-    # namespace so another Spark app run by the same user doesn't leak
-    # its streams into this heartbeat (ADVICE r8 #2)
+    # publish per-stream counters through the counters files, keeping
+    # streaming offsets position-only; only this driver's streams with a
+    # recent batch, so a long-lived tempdir doesn't resurrect dead streams
+    # and another Spark app's streams don't leak into this heartbeat
     try:
         from singer_spark.streaming.tail import list_counters
 
-        for c in list_counters(ns=spark.sparkContext.applicationId):
+        for c in list_counters():
             duplicates[c["stream"]] = {"reopens": c["reopens"],
                                        "bytes": c["bytes"]}
     except ImportError:  # pragma: no cover - tail source always ships

@@ -15,6 +15,7 @@ from __future__ import annotations
 import json
 import socket
 import threading
+from collections import deque
 from datetime import datetime, timezone
 
 from pyspark.sql.streaming.listener import StreamingQueryListener
@@ -25,6 +26,7 @@ _METRICS = {
     "trigger_ms": "singer_spark.processor.trigger_execution_ms",
     "rows_per_sec": "singer_spark.processor.processed_rows_per_second",
 }
+_KEEP_LINES = 1000  # lines a MetricsListener retains for snapshot()
 
 
 def progress_epoch(ts) -> float | None:
@@ -61,7 +63,9 @@ class MetricsListener(StreamingQueryListener):
     def __init__(self, emit=None, hostname: str | None = None) -> None:
         self.emit = emit
         self.hostname = hostname
-        self.lines: list[str] = []   # retained for tests/inspection
+        # the newest lines, for inspection: a long-running agent must not
+        # keep every line it ever emitted
+        self.lines: deque[str] = deque(maxlen=_KEEP_LINES)
         self._lock = threading.Lock()
 
     def onQueryStarted(self, event) -> None:  # noqa: N802 - listener API

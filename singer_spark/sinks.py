@@ -37,10 +37,10 @@ import uuid as _uuid
 from itertools import repeat
 from typing import Callable, Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
 
-from singer_spark.audit import AuditCollector, audit_row, make_audit_df
+from singer_spark.audit import audit_row
 
 
 # ---------------------------------------------------------------------------
@@ -582,36 +582,32 @@ def memory_sink(df: DataFrame, name: str, checkpoint_dir: str | None = None) -> 
 def foreach_batch_sink(df: DataFrame, checkpoint_dir: str,
                        deliver: Callable[[DataFrame, int], int],
                        cap: Callable[[DataFrame], DataFrame] | None = None,
-                       audit: Callable[[SparkSession, int, int], None] | None = None,
+                       audit: Callable[[int, int], None] | None = None,
                        ) -> DataStreamWriter:
     """foreachBatch writer composed from hooks: `cap` maps each micro-batch
     frame before delivery (the engine's hot-key cap), `deliver(batch_df,
     batch_id)` writes it and returns the messages written, and
-    `audit(spark, n, batch_id)` accounts for them once the write has
-    succeeded (see :func:`auditor`)."""
+    `audit(n, batch_id)` accounts for them once the write has succeeded
+    (see :func:`auditor`)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if cap is not None:
             batch_df = cap(batch_df)
         n = deliver(batch_df, batch_id)
         if audit is not None:
-            audit(batch_df.sparkSession, n, batch_id)
+            audit(n, batch_id)
 
     return df.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
 
 
-def auditor(topic: str,
-            audit_sink: AuditCollector | Callable[[DataFrame], None],
-            hostname: str | None = None) -> Callable[[SparkSession, int, int], None]:
+def auditor(topic: str, audit_sink: Callable[[tuple], None],
+            hostname: str | None = None) -> Callable[[int, int], None]:
     """Audit hook for :func:`foreach_batch_sink`: one AuditMessage
-    (numMessages = the count the delivery returned) per batch.  An
-    AuditCollector takes the row as a tuple, with no Spark job; any other
-    sink gets it as a one-row DataFrame (:func:`make_audit_df`)."""
+    (numMessages = the count the delivery returned) per batch, handed to
+    `audit_sink` as an :func:`~singer_spark.audit.audit_row` tuple — no
+    Spark job."""
 
-    def emit(spark: SparkSession, n: int, batch_id: int) -> None:
-        if isinstance(audit_sink, AuditCollector):
-            audit_sink.append(audit_row(topic, n, batch_id, hostname))
-        else:
-            audit_sink(make_audit_df(spark, topic, n, batch_id, hostname))
+    def emit(n: int, batch_id: int) -> None:
+        audit_sink(audit_row(topic, n, batch_id, hostname))
 
     return emit

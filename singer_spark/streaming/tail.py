@@ -74,9 +74,13 @@ fine; millions of hot files in one dir are not the target shape.
 from __future__ import annotations
 
 import fnmatch
+import hashlib
+import json
 import os
 import re
 import stat
+import tempfile
+import time
 import zlib
 from typing import Iterator
 
@@ -203,94 +207,53 @@ class TailRanges(InputPartition):
 
 # ---------------------------------------------------------------------------
 # Side channel for the duplicates-suspected counters.  The offset dict
-# must stay a pure function of source position (ADVICE r7 #2), and the
-# Python DataSource API has no custom-metrics hook — worse, the
-# streaming reader runs in a SEPARATE long-lived Python worker process
+# must stay a pure function of source position, and the Python
+# DataSource API has no custom-metrics hook; the streaming reader also
+# runs in a SEPARATE long-lived Python worker process
 # (python_streaming_source_runner), so an in-process registry never
-# reaches the driver-side heartbeat (measured: the r8 first attempt
-# reported 0 while 33k duplicates were delivered).  The channel that
-# does cross that boundary is a tiny per-reader JSON file under the
-# system tempdir, atomically replaced once per planned batch (an idle
-# query writes nothing); a fresh reader writes a zeroed file
-# (process-lifetime semantics, like the reference's per-stream metrics).
+# reaches the driver-side heartbeat.  The channel that does cross that
+# boundary is one small JSON file per tail stream (log_dir, glob) under
+# a per-uid tempdir, atomically replaced by the stream's reader when it
+# is constructed (zeros: process-lifetime counts, like the reference's
+# per-stream metrics) and once per planned batch (an idle query writes
+# nothing).  Two live readers of one stream share the file; the last
+# write wins.
 # ---------------------------------------------------------------------------
-def _counters_dir() -> str:
-    import tempfile
+# streams started by this process's tail_stream calls: the heartbeat lists
+# these, so another application's streams never reach it
+_started: set[tuple[str, str]] = set()
 
-    # per-uid directory: a world-shared fixed path under /tmp would hand
-    # user B a PermissionError from user A's 0755 dir (review r8) — and
-    # crash a streaming query over telemetry
+
+def _counters_dir() -> str:
+    # per uid: a world-shared fixed path under /tmp would hand user B a
+    # PermissionError from user A's 0755 directory
     uid = os.getuid() if hasattr(os, "getuid") else "na"
     return os.path.join(tempfile.gettempdir(), f"singer_tail_counters_{uid}")
 
 
-def _counters_file(log_dir: str, glob: str, ns: str = "",
-                   token: str = "") -> str:
-    import hashlib
-
-    # per-READER file (the token is unique per reader instance): two
-    # readers on the same (log_dir, glob) — a restarted query
-    # overlapping the old one — must not share a file, or the new
-    # reader's zeroed __init__ write clobbers the live one's counts
-    # (ADVICE r8 #2)
-    key = hashlib.md5(
-        f"{ns}::{log_dir}::{glob}::{token}".encode("utf-8")).hexdigest()[:16]
-    d = _counters_dir()
-    os.makedirs(d, exist_ok=True)
-    return os.path.join(d, key + ".json")
+def _counters_file(log_dir: str, glob: str) -> str:
+    key = hashlib.md5(f"{log_dir}::{glob}".encode("utf-8")).hexdigest()[:16]
+    return os.path.join(_counters_dir(), key + ".json")
 
 
-def _write_counters(log_dir: str, glob: str, reopens: int,
-                    bytes_: int, ns: str = "", token: str = "") -> None:
-    import json
-
-    # best-effort telemetry: a full disk or permission race must NEVER
-    # take the streaming query down — the offsets are the data path,
-    # this file is not.  The writer's pid rides along so GC can key
-    # eligibility on process liveness, not age alone (ADVICE r9 #3).
+def _write_counters(log_dir: str, glob: str, reopens: int, bytes_: int) -> None:
+    # best-effort telemetry: a full disk or a permission race must never
+    # take the streaming query down — the offsets are the data path
     try:
-        path = _counters_file(log_dir, glob, ns, token)
+        path = _counters_file(log_dir, glob)
+        os.makedirs(os.path.dirname(path), exist_ok=True)
         tmp = f"{path}.tmp.{os.getpid()}"
         with open(tmp, "w") as f:
-            json.dump({"stream": f"{log_dir}::{glob}", "ns": ns,
-                       "reopens": int(reopens), "bytes": int(bytes_),
-                       "pid": os.getpid()}, f)
+            json.dump({"reopens": int(reopens), "bytes": int(bytes_)}, f)
         os.replace(tmp, path)
     except OSError:
         pass
 
 
-def _pid_alive(pid: int) -> bool:
-    """Is `pid` a live process?  Signal-0 probe; the counters dir is
-    per-uid so EPERM (another user's pid after reuse) is the rare case —
-    treated as alive (keep the file, the age hard-cap still bounds it)."""
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except (PermissionError, OSError):
-        return True
-
-
-def _gc_counters(max_age_secs: float = 3600.0,
-                 hard_cap_secs: float = 7 * 86400.0) -> None:
-    """Unlink counter files whose writer process is GONE and that are idle
-    past `max_age_secs` — per-reader files (unique token per reader since
-    ADVICE r8 #2) otherwise accumulate one per reader instance forever on
-    hosts with restarting queries (review r9 #5).  Called once per reader
-    construction.
-
-    Eligibility is (idle > max_age AND writer pid dead) — age alone is not
-    enough: a live tail reader whose trigger interval exceeds the cutoff
-    (or a long-paused query) must not lose its file to an unrelated reader
-    starting on the same host (ADVICE r9 #3).  `hard_cap_secs` (default
-    7 days) GCs regardless of pid, bounding files kept alive by pid reuse
-    or files written before the pid field existed.  Best-effort like every
-    write in this channel."""
-    import json
-    import time
-
+def _gc_counters() -> None:
+    """Unlink counters files no reader has written for 7 days, so streams
+    that are gone do not pile up.  Called once per reader construction;
+    best-effort."""
     d = _counters_dir()
     try:
         names = os.listdir(d)
@@ -300,88 +263,37 @@ def _gc_counters(max_age_secs: float = 3600.0,
     for name in names:
         p = os.path.join(d, name)
         try:
-            idle = now - os.stat(p).st_mtime
-            if idle <= max_age_secs:
-                continue
-            if idle <= hard_cap_secs:
-                try:
-                    with open(p) as f:
-                        pid = json.load(f).get("pid")
-                except (OSError, ValueError):
-                    pid = None  # unreadable/corrupt: plain age-based GC
-                if pid is not None and _pid_alive(int(pid)):
-                    continue  # paused-but-live reader: keep its counts
-            os.unlink(p)
-        except (OSError, ValueError):
+            if now - os.stat(p).st_mtime > 7 * 86400:
+                os.unlink(p)
+        except OSError:
             continue
 
 
-def _scan_counters(max_age_secs: float, ns: "str | None") -> "list[dict]":
-    """All recent counter records, newest-mtime first.  ns=None matches
-    everything; a concrete ns matches that namespace only (every reader
-    writes one: tail_stream passes the app id, direct readStream.format
-    users get a private `_local:` namespace)."""
-    import json
-    import time
-
-    d = _counters_dir()
-    recs = []
+def read_counters(log_dir: str, glob: str = "*") -> dict:
+    """{reopens, bytes} for one tail stream; zeros when no reader of it has
+    reported (or the file is unreadable).  No age cutoff: the soak reads
+    its own stream right after the query stops."""
     try:
-        names = os.listdir(d)
-    except OSError:
-        return recs
-    now = time.time()
-    for name in names:
-        p = os.path.join(d, name)
+        with open(_counters_file(log_dir, glob)) as f:
+            c = json.load(f)
+        return {"reopens": int(c["reopens"]), "bytes": int(c["bytes"])}
+    except (OSError, ValueError, KeyError):
+        return {"reopens": 0, "bytes": 0}
+
+
+def list_counters(max_age_secs: float = 900.0) -> "list[dict]":
+    """[{stream, reopens, bytes}] for the streams this process's
+    `tail_stream` calls started whose counters file was written within
+    `max_age_secs` (the heartbeat's listing)."""
+    out = []
+    for log_dir, glob in sorted(_started):
         try:
-            mtime = os.stat(p).st_mtime
-            if not name.endswith(".json") or now - mtime > max_age_secs:
-                continue
-            with open(p) as f:
-                c = json.load(f)
-            c_ns = str(c.get("ns", ""))
-            if ns is not None and c_ns != ns:
-                continue
-            recs.append({"stream": str(c.get("stream", name)), "ns": c_ns,
-                         "reopens": int(c.get("reopens", 0)),
-                         "bytes": int(c.get("bytes", 0)),
-                         "_mtime": mtime})
-        except (OSError, ValueError):
+            idle = time.time() - os.stat(_counters_file(log_dir, glob)).st_mtime
+        except OSError:
             continue
-    recs.sort(key=lambda c: c["_mtime"], reverse=True)
-    return recs
-
-
-def read_counters(log_dir: str, glob: str = "*",
-                  ns: "str | None" = None) -> dict:
-    """{reopens, bytes} for one tail stream — the most recently
-    reporting reader's record (per-reader files since ADVICE r8 #2);
-    zeros when the stream never reported (no reader alive yet, or a
-    cleaned tempdir).  No age cutoff: the soak reads its own stream
-    right after the query stops."""
-    want = f"{log_dir}::{glob}"
-    for c in _scan_counters(float("inf"), ns):
-        if c["stream"] == want:
-            return {"reopens": c["reopens"], "bytes": c["bytes"]}
-    return {"reopens": 0, "bytes": 0}
-
-
-def list_counters(max_age_secs: float = 900.0,
-                  ns: "str | None" = None) -> "list[dict]":
-    """One record per recently-reporting stream (for the heartbeat):
-    [{stream, reopens, bytes}], the most recently written reader's
-    record per stream, entries idle past max_age_secs skipped (a
-    tempdir outlives the queries that wrote it).  Pass the Spark
-    application id as `ns` to exclude OTHER applications' streams
-    (ADVICE r8 #2) — direct readStream.format users included (they get a
-    private `_local:` ns)."""
-    out, seen = [], set()
-    for c in _scan_counters(max_age_secs, ns):
-        if c["stream"] in seen:
-            continue  # older reader on the same stream (restart overlap)
-        seen.add(c["stream"])
-        out.append({"stream": c["stream"], "reopens": c["reopens"],
-                    "bytes": c["bytes"]})
+        if idle <= max_age_secs:
+            out.append({"stream": f"{log_dir}::{glob}",
+                        **read_counters(log_dir, glob)})
     return out
 
 
@@ -431,34 +343,17 @@ class TailStreamReader(DataSourceStreamReader):
         # The start offset is the checkpointed one, so a restarted reader
         # also sees a copytruncate made while no reader was alive.
         # Counters are per reader lifetime (the reference's process-
-        # lifetime metric semantics) and are surfaced through the
-        # counters-file side channel (see _write_counters above), written
-        # once per planned batch — NOT through the offset dict: offsets
-        # must stay a pure function of source position (a counter-bearing
+        # lifetime metric semantics) and are surfaced through the stream's
+        # counters file (see _write_counters above): zeros now, then once
+        # per planned batch — NOT through the offset dict: offsets must
+        # stay a pure function of source position (a counter-bearing
         # offset schedules an empty micro-batch on a zero-new-bytes
         # suspicion event and disagrees with a restarted reader's zeroed
         # counters).
         self._dupes_suspected = 0
         self._dupe_bytes = 0
-        # counters namespace (the Spark application id when constructed
-        # through tail_stream) + a per-reader token: the heartbeat
-        # filters foreign apps by ns, and the token gives each reader
-        # its own file so an overlapping restart can't zero a live
-        # reader's counts (ADVICE r8 #2)
-        import uuid
-
-        self._counters_token = uuid.uuid4().hex[:12]
-        # ns is ALWAYS emitted (r9 task #7): a reader constructed without
-        # `counters_ns` (direct readStream.format user) gets a private
-        # `_local:<token>` namespace, so it never appears in ANOTHER
-        # application's heartbeat.  Its counters stay reachable with
-        # ns=None (match-everything) or read_counters on its stream key;
-        # pass counters_ns=<applicationId> to appear in an app's status.
-        self._counters_ns = (options.get("counters_ns")
-                             or f"_local:{self._counters_token}")
-        _gc_counters()  # bound the per-reader-file population (r9 #5)
-        _write_counters(self.log_dir, self.glob, 0, 0,
-                        self._counters_ns, self._counters_token)
+        _gc_counters()
+        _write_counters(self.log_dir, self.glob, 0, 0)
 
     # -- scanning ----------------------------------------------------------
     def _fingerprint(self, f, off: int) -> tuple[int | None, int]:
@@ -643,11 +538,11 @@ class TailStreamReader(DataSourceStreamReader):
             p = self._paths.get(ino)
         return p or recorded
 
-    @staticmethod
-    def _match_copy(path: str, rec: dict,
+    def _match_copy(self, ino: str, path: str, rec: dict,
                     committed: dict) -> tuple[str, int] | None:
-        """Duplicate-suspect check for an inode new in this batch: is any
-        `committed` stream's prefix also a prefix of this file?  Free when
+        """Duplicate-suspect check for inode `ino` (last listed at `path`),
+        new in this batch: is any `committed` stream's prefix also a prefix
+        of this file?  Free when
         fingerprint lengths match; otherwise one ≤4 KiB read amortized over
         rotations (new inodes only appear when something rotated).  Returns
         the (source ino, window bytes) of the largest matching committed
@@ -662,7 +557,8 @@ class TailStreamReader(DataSourceStreamReader):
         buf = None
         if need_read:
             try:
-                with open(path, "rb") as f:
+                f, _ = self._open_inode(path, int(ino))
+                with f:
                     buf = f.read(max(v["fplen"] for _, v in candidates))
             except OSError:
                 buf = None
@@ -729,7 +625,7 @@ class TailStreamReader(DataSourceStreamReader):
                 # stream's prefix: a copytruncate copy landing in the
                 # watched glob — its committed window WILL re-deliver (the
                 # dominant duplicate source under copytruncate)
-                hit = self._match_copy(path, cur, prev)
+                hit = self._match_copy(ino, path, cur, prev)
                 if hit is not None:
                     copies.append(hit)
             if e <= s:
@@ -769,8 +665,7 @@ class TailStreamReader(DataSourceStreamReader):
         self._dupes_suspected += len(windows)
         self._dupe_bytes += sum(windows)
         _write_counters(self.log_dir, self.glob,
-                        self._dupes_suspected, self._dupe_bytes,
-                        self._counters_ns, self._counters_token)
+                        self._dupes_suspected, self._dupe_bytes)
 
     # -- execution (runs on executors) --------------------------------------
     def _open_inode(self, path: str, want: int):
@@ -900,16 +795,13 @@ def tail_stream(spark, log_dir: str, glob: str = "*",
                 message_start_regex: str | None = None):
     """readStream over growing files in `log_dir` (registers the source)."""
     spark.dataSource.register(TailDataSource)
+    _started.add((log_dir, glob))  # the heartbeat lists this stream
     reader = (
         spark.readStream.format("singer_tail")
         .option("path", log_dir)
         .option("glob", glob)
         .option("chunk_bytes", str(chunk_bytes))
         .option("mode", mode)
-        # the reader runs in its own Python worker with no handle on the
-        # session — the app id must ride in as an option for the
-        # heartbeat's cross-application counter filter (ADVICE r8 #2)
-        .option("counters_ns", spark.sparkContext.applicationId)
     )
     if max_message_size:
         reader = reader.option("max_message_size", str(max_message_size))

@@ -11,7 +11,7 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
-from singer_spark.audit import AuditCollector, audit_row, make_audit_df
+from singer_spark.audit import AuditCollector, audit_row
 from singer_spark.config import (
     LogConfig,
     load_log_config,
@@ -85,12 +85,12 @@ def test_render_key_template_env_fallback():
     assert render_key_template("%{MISSING}/x", env={}) == "/x"
 
 
-def test_audit_collector_counts(spark):
+def test_audit_collector_counts():
     audit = AuditCollector()
-    audit.append(make_audit_df(spark, "topicA", 10, 0, hostname="h"))
-    audit.append(make_audit_df(spark, "topicA", 5, 1, hostname="h"))
-    audit.append(make_audit_df(spark, "topicB", 7, 0, hostname="h"))
-    audit.append(audit_row("topicB", 3, 1, hostname="h"))  # no Spark job
+    audit(audit_row("topicA", 10, 0, hostname="h"))
+    audit(audit_row("topicA", 5, 1, hostname="h"))
+    audit(audit_row("topicB", 7, 0, hostname="h"))
+    audit(audit_row("topicB", 3, 1, hostname="h"))
     assert audit.total("topicA") == 15
     assert audit.total() == 25
 

@@ -430,6 +430,26 @@ def test_metrics_listener_emits_opentsdb_lines(spark, tmp_path):
         spark.streams.removeListener(listener)
 
 
+def test_metrics_listener_retains_a_bounded_window():
+    """A long-running agent's listener keeps only its newest lines, while
+    every line still reaches `emit`."""
+    from types import SimpleNamespace
+
+    from singer_spark.metrics import _KEEP_LINES, MetricsListener
+
+    emitted = []
+    listener = MetricsListener(emit=emitted.append, hostname="h")
+    for i in range(10_000):
+        listener.onQueryProgress(SimpleNamespace(progress={
+            "name": "q", "timestamp": "2026-01-02T03:04:05.000Z",
+            "numInputRows": i, "durationMs": {"triggerExecution": 1},
+            "processedRowsPerSecond": 1.0}))
+    assert len(emitted) == 30_000
+    kept = listener.snapshot()
+    assert len(kept) <= _KEEP_LINES
+    assert kept[-3] == emitted[-3] and " 9999 " in kept[-3]
+
+
 # ---------------------------------------------------------------------------
 # D8 — pod metadata from the kubelet path convention
 # ---------------------------------------------------------------------------

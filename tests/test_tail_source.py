@@ -288,7 +288,7 @@ def test_tail_idle_polls_write_no_counters_file(tmp_path):
     _append(f"{d}/idle.log", "a\nb\n")
     r = _reader(d)
     r.partitions(r.initialOffset(), r.latestOffset())
-    path = _counters_file(d, "*", r._counters_ns, r._counters_token)
+    path = _counters_file(d, "*")
     before = os.stat(path)
     for _ in range(10):
         r.latestOffset()
@@ -323,6 +323,32 @@ def test_tail_restart_counts_copytruncate_made_while_no_reader_ran(tmp_path):
     assert read_counters(d) == {"reopens": 0, "bytes": 0}
     fresh.partitions(committed, fresh.latestOffset())
     assert read_counters(d) == {"reopens": 1, "bytes": committed_bytes}
+
+
+def test_tail_copy_check_reads_the_recorded_inode(tmp_path):
+    """The copy check of an inode new in the batch reads THAT inode, not
+    whatever file is at its recorded path: an unrelated file renamed away
+    between latestOffset() and partitions(), with a copy of a committed
+    stream written under its old name, is not a copy — the copy itself is
+    counted once, in the batch that first lists it."""
+    import shutil
+
+    from singer_spark.streaming.tail import read_counters
+
+    d = str(tmp_path)
+    app, other = f"{d}/app.log", f"{d}/other.log"
+    _append(app, "".join(f"app line {i:05d}\n" for i in range(3)))  # 45 B
+    r = _reader(d)
+    start = r.latestOffset()
+    r.partitions(r.initialOffset(), start)
+    _append(other, "".join(f"unrelated {i:03d}\n" for i in range(5)))  # 70 B
+    end = r.latestOffset()  # records other.log's inode
+    os.rename(other, f"{other}.1")
+    shutil.copyfile(app, other)  # a new inode at the recorded path
+    r.partitions(start, end)
+    assert read_counters(d) == {"reopens": 0, "bytes": 0}
+    r.partitions(end, r.latestOffset())  # the copy is new in this batch
+    assert read_counters(d) == {"reopens": 1, "bytes": 45}
 
 
 def test_tail_plain_growth_keeps_offset(tmp_path):
@@ -771,14 +797,15 @@ def test_full_agent_path_tail_thrift_to_kafka_with_audit_headers(spark, tmp_path
     assert "loggingAuditHeaders" not in by_key["2"]["headers"]  # no audit field
 
 
-def test_counters_file_channel_roundtrip_and_age_cutoff(tmp_path):
+def test_counters_file_channel_roundtrip_and_age_cutoff(tmp_path, monkeypatch):
     """The cross-process side channel directly: atomic write/read
-    round-trip, readable stream identity inside the payload, zeroed
-    default for unknown streams, and the heartbeat's mtime cutoff
-    skipping stale entries (a tempdir outlives dead queries)."""
+    round-trip, zeroed default for unknown streams, and the heartbeat's
+    mtime cutoff skipping stale entries (a tempdir outlives dead
+    queries)."""
     import os
     import time
 
+    from singer_spark.streaming import tail
     from singer_spark.streaming.tail import (
         _counters_file,
         _write_counters,
@@ -787,152 +814,91 @@ def test_counters_file_channel_roundtrip_and_age_cutoff(tmp_path):
     )
 
     d = str(tmp_path / "logs")
+    monkeypatch.setattr(tail, "_started", {(d, "*.log")})  # as tail_stream
     _write_counters(d, "*.log", 3, 4096)
     assert read_counters(d, "*.log") == {"reopens": 3, "bytes": 4096}
     assert read_counters(d, "other-glob") == {"reopens": 0, "bytes": 0}
 
-    entries = {c["stream"]: c for c in list_counters()}
     key = f"{d}::*.log"
-    assert entries[key]["reopens"] == 3 and entries[key]["bytes"] == 4096
+    assert list_counters() == [{"stream": key, "reopens": 3, "bytes": 4096}]
 
     # age out: a counter file idle past the cutoff is skipped
     old = time.time() - 10_000
     os.utime(_counters_file(d, "*.log"), (old, old))
-    assert key not in {c["stream"] for c in list_counters(max_age_secs=900)}
+    assert list_counters(max_age_secs=900) == []
     # but still readable directly (read_counters has no cutoff: the soak
     # reads its own stream right after the query stops)
     assert read_counters(d, "*.log")["reopens"] == 3
 
 
-def test_counters_namespace_and_overlap_isolation(tmp_path):
-    """ADVICE r8 #2, both halves: (1) list_counters(ns=...) excludes
-    OTHER applications' streams, unnamespaced writers included; (2) two readers on the same (log_dir, glob) — a
-    restarted query overlapping the old one — write SEPARATE files, so
-    the new reader's zeroed init can't clobber the live one's counts,
-    and the most recently reporting reader wins the listing."""
-    import time
+def test_counters_listing_holds_only_streams_this_driver_started(
+        tmp_path, monkeypatch):
+    """The heartbeat's listing holds the streams this process's
+    tail_stream calls started: a fresh record of a stream started
+    elsewhere (another application tailing on the same host) is not
+    listed, while a started stream is."""
+    from singer_spark.streaming import tail
+    from singer_spark.streaming.tail import _write_counters, list_counters
 
-    from singer_spark.streaming.tail import (
-        _write_counters,
-        list_counters,
-        read_counters,
-    )
-
-    d = str(tmp_path / "logs")
-    key = f"{d}::*"
-    _write_counters(d, "*", 7, 700, ns="app-A", token="readerA")
-    _write_counters(str(tmp_path / "other"), "*", 9, 900,
-                    ns="app-B", token="readerB")
-    _write_counters(str(tmp_path / "legacy"), "*", 1, 10)  # unnamespaced
-
-    mine = {c["stream"]: c for c in list_counters(ns="app-A")}
-    assert mine[key]["reopens"] == 7
-    assert f"{tmp_path / 'other'}::*" not in mine        # foreign app out
-    assert f"{tmp_path / 'legacy'}::*" not in mine       # legacy out too
-    assert f"{tmp_path / 'other'}::*" in {               # ns=None sees all
-        c["stream"] for c in list_counters()}
-
-    # overlap: a fresh reader (new token) writes its zeroed init file;
-    # the OLD reader's counts survive untouched in its own file, and the
-    # newest mtime wins the per-stream listing
-    time.sleep(0.05)
-    _write_counters(d, "*", 0, 0, ns="app-A", token="readerA2")
-    assert read_counters(d, "*", ns="app-A") == {"reopens": 0, "bytes": 0}
-    time.sleep(0.05)
-    _write_counters(d, "*", 8, 800, ns="app-A", token="readerA")  # old live
-    assert read_counters(d, "*", ns="app-A") == {"reopens": 8, "bytes": 800}
-    assert {c["stream"]: c for c in list_counters(ns="app-A")}[key][
-        "reopens"] == 8
+    mine, foreign = str(tmp_path / "mine"), str(tmp_path / "foreign")
+    monkeypatch.setattr(tail, "_started", set())
+    _write_counters(mine, "*", 7, 700)
+    _write_counters(foreign, "*", 9, 900)
+    assert list_counters() == []
+    tail._started.add((mine, "*"))
+    assert list_counters() == [{"stream": f"{mine}::*", "reopens": 7,
+                                "bytes": 700}]
 
 
 def test_counters_gc_unlinks_stale_files(tmp_path):
-    """Reader construction garbage-collects counter files idle past the
-    age cutoff while leaving recently-written ones (a live overlapping
-    reader's file is rewritten every trigger, so age-based GC can never
-    touch it)."""
+    """Reader construction garbage-collects counter files no reader has
+    written for 7 days while leaving recently-written ones (a live
+    reader's file is rewritten every planned batch)."""
     import os
     import time
 
     from singer_spark.streaming.tail import (
-        _counters_dir,
-        _gc_counters,
-        _write_counters,
-        read_counters,
-    )
-
-    d = str(tmp_path / "gclogs")
-    _write_counters(d, "*", 5, 500, ns="x", token="stale")
-    stale = [p for p in os.listdir(_counters_dir())]
-    assert stale
-    # age one file out; a fresh one stays
-    for name in os.listdir(_counters_dir()):
-        p = os.path.join(_counters_dir(), name)
-        os.utime(p, (time.time() - 7200, time.time() - 7200))
-    _write_counters(d, "*", 7, 700, ns="x", token="live")
-    _gc_counters(max_age_secs=3600)
-    assert read_counters(d, "*") == {"reopens": 7, "bytes": 700}
-
-
-def test_counters_gc_spares_live_pid_reaps_dead_pid(tmp_path):
-    """ADVICE r9 #3: age-based GC alone deletes a LIVE paused reader's
-    counters (trigger interval > cutoff).  GC now keys eligibility on the
-    writer pid: idle + pid alive → kept; idle + pid dead → reaped; idle
-    past the hard cap → reaped regardless (pid-reuse bound)."""
-    import json
-    import os
-    import time
-
-    from singer_spark.streaming.tail import (
-        _counters_dir,
         _counters_file,
         _gc_counters,
         _write_counters,
         read_counters,
     )
 
-    d_live = str(tmp_path / "paused-live")
-    d_dead = str(tmp_path / "dead-writer")
-    # live writer (this process), idle past the cutoff — must survive
-    _write_counters(d_live, "*", 11, 1100, ns="x", token="paused")
-    # dead writer: rewrite the file with a pid that cannot exist
-    _write_counters(d_dead, "*", 13, 1300, ns="x", token="gone")
-    dead_path = _counters_file(d_dead, "*", "x", "gone")
-    with open(dead_path) as f:
-        rec = json.load(f)
-    rec["pid"] = 2 ** 22 + 1  # above any default pid_max
-    with open(dead_path, "w") as f:
-        json.dump(rec, f)
-    old = time.time() - 7200
-    for name in os.listdir(_counters_dir()):
-        os.utime(os.path.join(_counters_dir(), name), (old, old))
-    _gc_counters(max_age_secs=3600)
-    assert read_counters(d_live, "*") == {"reopens": 11, "bytes": 1100}
-    assert read_counters(d_dead, "*") == {"reopens": 0, "bytes": 0}
-    # hard cap: even the live pid's file goes once idle past it
-    for name in os.listdir(_counters_dir()):
-        os.utime(os.path.join(_counters_dir(), name), (old, old))
-    _gc_counters(max_age_secs=3600, hard_cap_secs=7100)
-    assert read_counters(d_live, "*") == {"reopens": 0, "bytes": 0}
+    stale, live = str(tmp_path / "stale"), str(tmp_path / "live")
+    _write_counters(stale, "*", 5, 500)
+    _write_counters(live, "*", 7, 700)
+    six_days = time.time() - 6 * 86400
+    os.utime(_counters_file(stale, "*"), (six_days, six_days))
+    _gc_counters()
+    assert read_counters(stale, "*") == {"reopens": 5, "bytes": 500}
+    eight_days = time.time() - 8 * 86400
+    os.utime(_counters_file(stale, "*"), (eight_days, eight_days))
+    _gc_counters()
+    assert not os.path.exists(_counters_file(stale, "*"))
+    assert read_counters(stale, "*") == {"reopens": 0, "bytes": 0}
+    assert read_counters(live, "*") == {"reopens": 7, "bytes": 700}
 
 
-def test_direct_format_reader_excluded_from_foreign_app_heartbeat(tmp_path):
-    """r9 task #7: a reader constructed WITHOUT counters_ns (direct
-    readStream.format user) must not appear in another application's
-    namespaced listing — every reader now emits a non-empty ns (a
-    private `_local:` one when the app id wasn't passed)."""
-    from singer_spark.streaming.tail import TailStreamReader, list_counters
+def test_direct_format_reader_excluded_from_foreign_app_heartbeat(
+        spark, tmp_path, monkeypatch):
+    """A reader built directly (readStream.format, not tail_stream) writes
+    its stream's counters file but is not listed for any heartbeat; the
+    same stream started through tail_stream is."""
+    from singer_spark.streaming import tail
+    from singer_spark.streaming.tail import (
+        TailStreamReader,
+        list_counters,
+        read_counters,
+        tail_stream,
+    )
 
     d = str(tmp_path / "directlogs")
     os.makedirs(d)
     (tmp_path / "directlogs" / "a.log").write_text("x\n")
-    reader = TailStreamReader({"path": d})  # no counters_ns option
-    assert reader._counters_ns.startswith("_local:")
-    key = f"{d}::*"
-    # foreign app's heartbeat: excluded
-    assert key not in {c["stream"] for c in list_counters(ns="some-other-app")}
-    # unfiltered listing still reaches it (ns=None matches everything)
-    assert key in {c["stream"] for c in list_counters()}
-    # and a reader that DID declare its app keeps matching that app
-    declared = TailStreamReader({"path": d, "counters_ns": "app-Z"})
-    assert declared._counters_ns == "app-Z"
-    assert key in {c["stream"] for c in list_counters(ns="app-Z")}
+    monkeypatch.setattr(tail, "_started", set())
+    TailStreamReader({"path": d})
+    assert read_counters(d) == {"reopens": 0, "bytes": 0}
+    assert list_counters() == []
+
+    tail_stream(spark, d)  # builds the DataFrame; starts no query
+    assert [c["stream"] for c in list_counters()] == [f"{d}::*"]
