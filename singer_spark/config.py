@@ -4,7 +4,9 @@ The reference parses `singer.properties` + `conf.d/*.properties` into Thrift
 SingerConfig/SingerLogConfig structs (utils/LogConfigUtils.java:176,614-657;
 config.thrift:261-310,434-567).  Here the IR is dataclasses, loadable from
 the same flat `key=value` properties shape (`processor.batchSize=200`,
-`writer.kafka.topic=...`) or from a plain dict/JSON.
+`writer.topic=...`) or from a plain dict/JSON.  Keys are the camelCase
+(or snake_case) names of the dataclass fields; a key that names no field
+is refused with a ValueError naming the full dotted key.
 """
 
 from __future__ import annotations
@@ -160,24 +162,32 @@ def parse_properties(text: str) -> dict:
     return out
 
 
-_SNAKE_RE = re.compile(r"(?<!^)(?=[A-Z])")
+# a word starts at an upper-case letter after a lower-case one or digit,
+# or at the last capital of an acronym run: maxFileSizeMB -> max_file_size_mb
+_SNAKE_RE = re.compile(r"(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])")
 
 
 def _snake(name: str) -> str:
     return _SNAKE_RE.sub("_", name).lower()
 
 
-def _build(cls, data: dict):
-    fields = {f for f in cls.__dataclass_fields__}
+def _dotted(key: str, v) -> list[str]:
+    if not isinstance(v, dict):
+        return [key]
+    return [d for k, x in v.items() for d in _dotted(f"{key}.{k}", x)]
+
+
+def _build(cls, data: dict, prefix: str = ""):
     kwargs = {}
-    for k, v in data.items():
-        k = _snake(k)
-        if k not in fields:
-            continue
-        f = cls.__dataclass_fields__[k]
+    for key, v in data.items():
+        k = _snake(key)
+        if k not in cls.__dataclass_fields__:
+            raise ValueError(
+                f"unknown config key {', '.join(_dotted(prefix + key, v))}")
         sub = {"reader": ReaderConfig, "transformer": TransformerConfig,
                "writer": WriterConfig, "processor": ProcessorConfig}.get(k)
-        kwargs[k] = _build(sub, v) if sub and isinstance(v, dict) else v
+        kwargs[k] = (_build(sub, v, f"{prefix}{key}.")
+                     if sub and isinstance(v, dict) else v)
     return cls(**kwargs)
 
 

@@ -100,6 +100,12 @@ def _nb_keep(docs: DataFrame, cfg: "CurationConfig", text_col: str,
                              ).select(id_col, "keep")
 
 
+def _survives_rewrite():
+    """A span-rewrite row's doc survives unless it was CUT TO NOTHING."""
+    return ((F.col("clean_text") != "") | (F.col("n_removed") == 0)
+            | F.col("n_removed").isNull())
+
+
 def _apply_span_rewrite(out: DataFrame, spans: DataFrame, id_col: str,
                         text_col: str) -> DataFrame:
     """Shared rewrite for the two span gates (benchmark decontamination
@@ -113,9 +119,7 @@ def _apply_span_rewrite(out: DataFrame, spans: DataFrame, id_col: str,
     is whitespace-rejoined, which would destroy newlines/tabs
     corpus-wide; rewritten survivors DO get that normalization — see
     CurationConfig.decontaminate_mode docs)."""
-    repl = spans.where((F.col("clean_text") != "")
-                       | (F.col("n_removed") == 0)
-                       | F.col("n_removed").isNull()).select(
+    repl = spans.where(_survives_rewrite()).select(
         F.col("id").alias(id_col),
         F.col("clean_text").alias("_clean_text"),
         F.col("n_removed").alias("_n_removed"))
@@ -130,19 +134,18 @@ def _apply_span_rewrite(out: DataFrame, spans: DataFrame, id_col: str,
 def _gate_frames(docs: DataFrame, cfg: "CurationConfig",
                  benchmark: "DataFrame | None" = None,
                  persist: bool = False) -> "dict[str, DataFrame]":
-    """One raw frame per ENABLED gate, in :func:`curate`'s order —
+    """One raw frame per ENABLED frame gate, in :func:`curate`'s order —
     the single source both :func:`curate` and
     :func:`curation_funnel_cfg` consume, so a pipeline that also emits
-    telemetry never runs a gate pass twice (ADVICE r11 #4:
-    `curate_stream(metrics_path=...)` used to double every gate's
-    compute per micro-batch).  With `persist=True` each frame is
-    `maybe_persist`-registered: the caller releases them at its batch
-    boundary via `release_cache_handles`.
+    telemetry never runs a frame gate twice.  The per-row gates
+    (language, quality) are expressions, not frames: every consumer
+    evaluates them in its own projection.  With `persist=True` each
+    frame is `maybe_persist`-registered: the caller releases them at its
+    batch boundary via `release_cache_handles`.
 
     Frame shapes (keyed by gate name):
 
-    - ``lang`` — (id, predicted_lang); ``quality`` — (id,
-      quality_score); ``quality_model``/``repetition`` — (id, keep);
+    - ``quality_model``/``repetition`` — (id, keep);
     - ``decontaminate`` — `decontaminate` flags (drop mode) or
       `decontaminate_spans` rewrite rows (spans mode);
     - ``dedup`` — exact: canonical ids; minhash: DROPPED ids;
@@ -152,8 +155,6 @@ def _gate_frames(docs: DataFrame, cfg: "CurationConfig",
     from singer_spark.operators.text_analysis import (
         decontaminate,
         hash_embed,
-        lang_id,
-        quality_features,
         repetition_features,
     )
 
@@ -163,12 +164,6 @@ def _gate_frames(docs: DataFrame, cfg: "CurationConfig",
     def add(name: str, df: DataFrame) -> None:
         frames[name] = maybe_persist(df, persist)
 
-    if cfg.lang is not None:
-        add("lang", lang_id(docs, text_col, id_col)
-            .select(id_col, "predicted_lang"))
-    if cfg.min_quality is not None:
-        add("quality", quality_features(docs, text_col, id_col)
-            .select(id_col, "quality_score"))
     if cfg.quality_model_seed is not None or cfg.quality_model_path:
         add("quality_model", _nb_keep(docs, cfg, text_col, id_col))
     if cfg.repetition_screen:
@@ -224,45 +219,29 @@ def curate(docs: DataFrame, cfg: CurationConfig = CurationConfig(),
     `minhash_threshold` Jaccard; `semantic` hash-embeds the text and runs
     SemDeDup.  All three shuffle signatures, never text.
 
-    `_gates`: precomputed :func:`_gate_frames` output, so a caller that
-    also builds the telemetry funnel shares ONE gate pass with it."""
+    Language and quality are per-row expressions
+    (`text_analysis.lang_pred_col` / `quality_score_col`), gated in the
+    projection on every path: no exchange of the text.  `_gates`:
+    precomputed :func:`_gate_frames` output, so a caller that also
+    builds the telemetry funnel shares ONE pass of each frame gate."""
+    from singer_spark.operators.text_analysis import (
+        lang_pred_col,
+        quality_score_col,
+    )
+
     id_col, text_col = cfg.id_col, cfg.text_col
     gates = _gates if _gates is not None \
         else _gate_frames(docs, cfg, benchmark)
     out = docs.select(id_col, text_col, *[c for c in cfg.keep_cols
                                           if c in docs.columns])
-    # lang / quality are pure per-row projections (r13 optimization):
-    # with no shared gate frames in play (_gates is None — the batch
-    # path), gate them IN the projection instead of joining the
-    # corpus-sized lang_id / quality_features frames back by id — two
-    # exchanges of the full text removed from every curate plan at any
-    # scale.  Same expressions (text_analysis.lang_pred_col /
-    # quality_score_col are the one copy lang_id / quality_features
-    # select from), so rows and values are identical.  The funnel /
-    # streaming path passes persisted `_gates` and keeps the join shape
-    # (one gate pass shared with telemetry, ADVICE r11 #4).
     if cfg.lang is not None:
-        if _gates is None:
-            from singer_spark.operators.text_analysis import lang_pred_col
-
-            out = (out.withColumn("predicted_lang",
-                                  lang_pred_col(F.col(text_col)))
-                   .filter(F.col("predicted_lang") == cfg.lang))
-        else:
-            out = (out.join(gates["lang"], id_col)
-                   .filter(F.col("predicted_lang") == cfg.lang))
+        out = (out.withColumn("predicted_lang",
+                              lang_pred_col(F.col(text_col)))
+               .filter(F.col("predicted_lang") == cfg.lang))
     if cfg.min_quality is not None:
-        if _gates is None:
-            from singer_spark.operators.text_analysis import (
-                quality_score_col,
-            )
-
-            out = (out.withColumn("quality_score",
-                                  quality_score_col(F.col(text_col)))
-                   .filter(F.col("quality_score") >= cfg.min_quality))
-        else:
-            out = (out.join(gates["quality"], id_col)
-                   .filter(F.col("quality_score") >= cfg.min_quality))
+        out = (out.withColumn("quality_score",
+                              quality_score_col(F.col(text_col)))
+               .filter(F.col("quality_score") >= cfg.min_quality))
     if cfg.quality_model_seed is not None or cfg.quality_model_path:
         # learned gate (CCNet-style): NB seed-vs-rest model over the FULL
         # input corpus (training on pre-gate docs keeps the model
@@ -395,11 +374,15 @@ def compact_span_state(spark, state_path: str) -> int:
     return spark.read.parquet(state_path).count()
 
 
+# Bloom prefilter size for the spans stream's history probe (about 1%
+# false positives at 400k distinct window digests); a false positive
+# only costs an exact-join row, never a wrong cut.
+_SPAN_BLOOM_BITS = 1 << 22
+
+
 def curate_stream(docs_stream: DataFrame, checkpoint: str, state_path: str,
                   out_path: str, cfg: CurationConfig = CurationConfig(),
-                  minhash_threshold: float = 0.5,
                   stream_dedup: str = "minhash",
-                  span_bloom_bits: "int | None" = 1 << 22,
                   span_compact_every: "int | None" = 16,
                   metrics_path: "str | None" = None):
     """Always-on corpus ingestion: per micro-batch, run the stateless
@@ -410,9 +393,9 @@ def curate_stream(docs_stream: DataFrame, checkpoint: str, state_path: str,
     Backends (`stream_dedup`):
 
     - ``minhash`` (default) — DROP documents that near-duplicate the
-      ACCUMULATED corpus via the MinHash signature state
-      (`dedup.minhash_lsh_incremental`).  State is 8 ints per retained
-      doc.
+      ACCUMULATED corpus at `cfg.minhash_threshold` Jaccard via the
+      MinHash signature state (`dedup.minhash_lsh_incremental`).  State
+      is 8 ints per retained doc.
     - ``spans`` (r10) — REWRITE documents instead of dropping them:
       `dedup.dedup_spans_incremental` cuts every duplicated run of
       >= `cfg.span_min_run` tokens whose k-gram digests live in the
@@ -421,8 +404,8 @@ def curate_stream(docs_stream: DataFrame, checkpoint: str, state_path: str,
       backend, including the whitespace-normalization caveat).  State
       is the increment's DISTINCT window digests (16 B/token), appended
       per batch — historical text is never re-read, and the probe runs
-      behind a broadcast Bloom prefilter by default (`span_bloom_bits`;
-      None disables — output is bit-identical either way).  A FULL
+      behind a broadcast Bloom prefilter of `_SPAN_BLOOM_BITS` bits
+      (output is bit-identical to the exact probe).  A FULL
       epoch replay (crash after both writes, before the epoch commit)
       finds its windows already in state, cuts its docs to nothing and
       drops them — the same self-match idempotence the minhash backend
@@ -446,24 +429,26 @@ def curate_stream(docs_stream: DataFrame, checkpoint: str, state_path: str,
 
     This is the streaming twin of :func:`curate_and_publish` — same
     gates, with cross-batch dedup state replacing the one-shot
-    in-corpus pass.  With ids increasing in arrival order (the natural
-    ingestion shape) the streamed output equals the uninterrupted
-    single-batch run — `tools/soak_tail.py` pins it under kill/restart
-    churn for both backends.
+    in-corpus pass.  Each micro-batch runs the batch :func:`curate` plan
+    under `cfg` with `dedup="none"`, with or without telemetry.  With
+    ids increasing in arrival order (the natural ingestion shape) the
+    streamed output equals the uninterrupted single-batch run —
+    `tools/soak_tail.py` pins it under kill/restart churn for both
+    backends.
 
-    `metrics_path` (r11, VERDICT r10 task #5): when set, each batch also
-    appends its per-gate survivor funnel — :func:`curation_funnel_cfg`
-    stage rows over THIS batch plus a final ``stream_dedup`` stage whose
-    n_kept is the row count actually published — keyed by `epoch_id`, to
-    a parquet metrics table.  The always-on pipeline gets the
-    gate-survivorship observability the batch path's funnel report
-    gives.  Telemetry ordering: the metrics write runs AFTER the
-    output+state writes (losing a crashed batch's metrics is fine;
-    publishing metrics for an unpublished batch would lie).  Each
-    epoch's rows land in an OVERWRITTEN ``epoch_id={n}`` partition
-    (r12, ADVICE r11 #3): a replayed epoch replaces its prior attempt's
-    rows, so readers see exactly one attempt per epoch — the final one
-    — with no ordering or dedup assumptions; epoch_id returns as the
+    `metrics_path`: when set, each batch also appends its per-gate
+    survivor funnel — :func:`curation_funnel_cfg` stage rows over THIS
+    batch, sharing the frame gates' one pass with `curate`, plus a final
+    ``stream_dedup`` stage whose n_kept is the row count actually
+    published — keyed by `epoch_id`, to a parquet metrics table.  The
+    always-on pipeline gets the gate-survivorship observability the
+    batch path's funnel report gives.  Telemetry ordering: the metrics
+    write runs AFTER the output+state writes (losing a crashed batch's
+    metrics is fine; publishing metrics for an unpublished batch would
+    lie).  Each epoch's rows land in an OVERWRITTEN ``epoch_id={n}``
+    partition: a replayed epoch replaces its prior attempt's rows, so
+    readers see exactly one attempt per epoch — the final one — with
+    no ordering or dedup assumptions; epoch_id returns as the
     hive-partition column.  :func:`funnel_trend` is the reader."""
     from singer_spark.fsutil import read_parquet_or_none
 
@@ -509,9 +494,8 @@ def curate_stream(docs_stream: DataFrame, checkpoint: str, state_path: str,
         spark = batch_df.sparkSession
         if metrics_path and not metrics_checked:
             check_metrics_layout(spark)
-        # when telemetry is on, the gate frames are computed ONCE and
-        # shared between the data path (curate) and the funnel (ADVICE
-        # r11 #4 — the funnel used to re-run every gate per batch);
+        # when telemetry is on, the frame gates are computed ONCE and
+        # shared between the data path (curate) and the funnel;
         # released with the rest at the batch boundary below
         gates = (_gate_frames(batch_df, batch_cfg, persist=True)
                  if metrics_path else None)
@@ -538,7 +522,7 @@ def curate_stream(docs_stream: DataFrame, checkpoint: str, state_path: str,
                 kept.select(id_col, text_col), seen,
                 k=cfg.span_k, min_run=cfg.span_min_run,
                 text_col=text_col, id_col=id_col,
-                num_bits=span_bloom_bits if has_state else None,
+                num_bits=_SPAN_BLOOM_BITS if has_state else None,
                 base_grams=grams)
             out = maybe_persist(
                 _apply_span_rewrite(kept, spans, id_col, text_col),
@@ -568,7 +552,7 @@ def curate_stream(docs_stream: DataFrame, checkpoint: str, state_path: str,
             surv_sigs = maybe_persist(minhash_lsh_incremental(
                 kept.select(id_col, text_col), seen,
                 id_col=id_col, text_col=text_col,
-                threshold=minhash_threshold), True)
+                threshold=cfg.minhash_threshold), True)
             out = maybe_persist(
                 kept.join(surv_sigs.select(id_col), id_col, "left_semi"),
                 metrics_path is not None)
@@ -841,6 +825,74 @@ def _funnel_from_stages(docs: DataFrame,
                     .alias("n_dropped")))
 
 
+def _funnel_stages(docs: DataFrame, cfg: CurationConfig,
+                   benchmark: "DataFrame | None" = None,
+                   _gates: "dict[str, DataFrame] | None" = None
+                   ) -> "list[tuple[str, DataFrame]]":
+    """The configured gate chain as ordered (name, id+`flag`) stage
+    frames, in :func:`curate`'s order.  The per-row gates read one
+    persisted projection of `docs` (id plus one boolean per gate); the
+    frame gates read :func:`_gate_frames` output."""
+    from singer_spark.functions import fan_out, maybe_persist
+    from singer_spark.operators.text_analysis import (
+        lang_pred_col,
+        quality_score_col,
+    )
+
+    id_col, text_col = cfg.id_col, cfg.text_col
+    gates = _gates if _gates is not None \
+        else _gate_frames(docs, cfg, benchmark)
+
+    def survivors(spans: DataFrame) -> DataFrame:
+        return spans.select(F.col("id").alias(id_col),
+                            _survives_rewrite().alias("flag"))
+
+    row_gates = {}
+    if cfg.lang is not None:
+        row_gates["lang"] = lang_pred_col(F.col(text_col)) == cfg.lang
+    if cfg.min_quality is not None:
+        row_gates["quality"] = (quality_score_col(F.col(text_col))
+                                >= cfg.min_quality)
+    stages: "list[tuple[str, DataFrame]]" = []
+    if row_gates:
+        flags = maybe_persist(fan_out(docs).select(
+            F.col(id_col), *[c.alias(n) for n, c in row_gates.items()]),
+            True)
+        stages += [(n, flags.select(id_col, F.col(n).alias("flag")))
+                   for n in row_gates]
+    if cfg.quality_model_seed is not None or cfg.quality_model_path:
+        # NULL-text docs pass (the curate() convention)
+        stages.append(("quality_model",
+                       docs.join(gates["quality_model"], id_col, "left")
+                       .select(id_col,
+                               ((F.col("keep") == 1)
+                                | F.col(text_col).isNull()).alias("flag"))))
+    if cfg.repetition_screen:
+        stages.append(("repetition", gates["repetition"]
+                       .select(id_col, F.col("keep").alias("flag"))))
+    if benchmark is not None:
+        if cfg.decontaminate_mode == "spans":
+            stages.append(("decontaminate",
+                           survivors(gates["decontaminate"])))
+        else:
+            stages.append(("decontaminate", gates["decontaminate"].select(
+                F.col("id").alias(id_col),
+                (~F.col("contaminated")).alias("flag"))))
+    if cfg.dedup == "exact":
+        stages.append(("dedup_exact", gates["dedup"]
+                       .select(id_col, F.lit(True).alias("flag"))))
+    elif cfg.dedup == "minhash":
+        stages.append(("dedup_minhash", docs.join(
+            gates["dedup"].withColumn("_hit", F.lit(True)), id_col, "left")
+            .select(id_col, F.col("_hit").isNull().alias("flag"))))
+    elif cfg.dedup == "semantic":
+        stages.append(("dedup_semantic", gates["dedup"]
+                       .select(id_col, F.col("keep").alias("flag"))))
+    elif cfg.dedup == "spans":
+        stages.append(("dedup_spans", survivors(gates["dedup"])))
+    return stages
+
+
 def curation_funnel(docs: DataFrame, benchmark: "DataFrame | None" = None,
                     lang: str = "en", min_quality: float = 0.5,
                     decontaminate_k: int = 8, text_col: str = "text",
@@ -850,53 +902,23 @@ def curation_funnel(docs: DataFrame, benchmark: "DataFrame | None" = None,
     too little (which gate ate the data?) or too much: for each stage
     in `curate()`'s order (lang → quality → repetition →
     decontaminate → exact-dedup → train-split), the docs entering,
-    surviving, and dropped, with every gate's flag computed ONCE and
-    the cumulative conjunctions aggregated in a single pass — no
-    per-stage re-runs of the pipeline.
+    surviving, and dropped.
 
-    100 TB shape: each gate contributes one id+boolean frame (the same
-    narrow passes `corpus_pipeline_full` composes); the funnel is one
-    id-keyed join chain plus ONE aggregation emitting every cumulative
-    count, exploded into tidy stage rows.  Output: (stage_idx, stage,
-    n_in, n_kept, n_dropped)."""
-    from singer_spark.functions import fan_out, maybe_persist
-    from singer_spark.operators.dedup import dedup_exact
-    from singer_spark.operators.text_analysis import (
-        decontaminate,
-        lang_pred_col,
-        quality_score_col,
-        repetition_features,
-        split_cols,
-    )
+    The stages are :func:`curation_funnel_cfg`'s for the default
+    config, plus two fixed extras: an all-pass ``decontaminate`` row
+    when no benchmark is given, and ``split_train``.  Output:
+    (stage_idx, stage, n_in, n_kept, n_dropped)."""
+    from singer_spark.operators.text_analysis import split_cols
 
-    # The three per-row gates (lang, quality, split) ride ONE persisted
-    # flag projection — the same expressions lang_id / quality_features /
-    # train_val_split emit; before, each stage frame re-scanned the
-    # corpus text (r14).  The cache is (id, 3 booleans).
-    _, _split = split_cols(id_col)
-    flags = maybe_persist(fan_out(docs).select(
-        F.col(id_col),
-        (lang_pred_col(F.col(text_col)) == lang).alias("_lang"),
-        (quality_score_col(F.col(text_col)) >= float(min_quality))
-        .alias("_q"),
-        (_split == "train").alias("_s")), True)
-
-    stages = [
-        ("lang", flags.select(id_col, F.col("_lang").alias("flag"))),
-        ("quality", flags.select(id_col, F.col("_q").alias("flag"))),
-        ("repetition", repetition_features(docs, text_col, id_col)
-         .select(id_col, F.col("keep").alias("flag"))),
-        ("decontaminate",
-         (decontaminate(docs, benchmark, k=decontaminate_k,
-                        text_col=text_col, id_col=id_col)
-          .select(F.col("id").alias(id_col),
-                  (~F.col("contaminated")).alias("flag")))
-         if benchmark is not None
-         else docs.select(id_col, F.lit(True).alias("flag"))),
-        ("dedup_exact", dedup_exact(docs, text_col=text_col, id_col=id_col)
-         .select(id_col, F.lit(True).alias("flag"))),
-        ("split_train", flags.select(id_col, F.col("_s").alias("flag"))),
-    ]
+    cfg = CurationConfig(lang=lang, min_quality=min_quality,
+                         decontaminate_k=decontaminate_k,
+                         text_col=text_col, id_col=id_col)
+    stages = _funnel_stages(docs, cfg, benchmark)
+    if benchmark is None:  # before the last (dedup_exact) stage
+        stages.insert(-1, ("decontaminate",
+                           docs.select(id_col, F.lit(True).alias("flag"))))
+    stages.append(("split_train", docs.select(
+        id_col, (split_cols(id_col)[1] == "train").alias("flag"))))
     return _funnel_from_stages(docs, stages, id_col)
 
 
@@ -915,59 +937,9 @@ def curation_funnel_cfg(docs: DataFrame, cfg: CurationConfig,
     filters on it, and the streaming metrics (:func:`curate_stream`
     `metrics_path`) need final-stage == published.
 
-    Same 100 TB shape as the fixed funnel: one narrow id+flag frame per
-    enabled gate, one join chain, ONE aggregation, tidy rows via
-    :func:`_funnel_from_stages` — and (r12, ADVICE r11 #4) the gate
-    frames themselves come from :func:`_gate_frames`, so a caller that
-    already ran `curate` can hand the SAME frames in via `_gates` and
-    this funnel costs one aggregation, not a second gate pass."""
-    id_col, text_col = cfg.id_col, cfg.text_col
-    gates = _gates if _gates is not None \
-        else _gate_frames(docs, cfg, benchmark)
-
-    def _survives_rewrite(spans: DataFrame) -> DataFrame:
-        # mirrors _apply_span_rewrite: only docs CUT TO NOTHING drop
-        return spans.select(
-            F.col("id").alias(id_col),
-            ((F.col("clean_text") != "") | (F.col("n_removed") == 0)
-             | F.col("n_removed").isNull()).alias("flag"))
-
-    stages: "list[tuple[str, DataFrame]]" = []
-    if cfg.lang is not None:
-        stages.append(("lang", gates["lang"].select(
-            id_col, (F.col("predicted_lang") == cfg.lang).alias("flag"))))
-    if cfg.min_quality is not None:
-        stages.append(("quality", gates["quality"].select(
-            id_col,
-            (F.col("quality_score") >= cfg.min_quality).alias("flag"))))
-    if cfg.quality_model_seed is not None or cfg.quality_model_path:
-        # NULL-text docs pass (the curate() convention)
-        stages.append(("quality_model",
-                       docs.join(gates["quality_model"], id_col, "left")
-                       .select(id_col,
-                               ((F.col("keep") == 1)
-                                | F.col(text_col).isNull()).alias("flag"))))
-    if cfg.repetition_screen:
-        stages.append(("repetition", gates["repetition"]
-                       .select(id_col, F.col("keep").alias("flag"))))
-    if benchmark is not None:
-        if cfg.decontaminate_mode == "spans":
-            stages.append(("decontaminate",
-                           _survives_rewrite(gates["decontaminate"])))
-        else:
-            stages.append(("decontaminate", gates["decontaminate"].select(
-                F.col("id").alias(id_col),
-                (~F.col("contaminated")).alias("flag"))))
-    if cfg.dedup == "exact":
-        stages.append(("dedup_exact", gates["dedup"]
-                       .select(id_col, F.lit(True).alias("flag"))))
-    elif cfg.dedup == "minhash":
-        stages.append(("dedup_minhash", docs.join(
-            gates["dedup"].withColumn("_hit", F.lit(True)), id_col, "left")
-            .select(id_col, F.col("_hit").isNull().alias("flag"))))
-    elif cfg.dedup == "semantic":
-        stages.append(("dedup_semantic", gates["dedup"]
-                       .select(id_col, F.col("keep").alias("flag"))))
-    elif cfg.dedup == "spans":
-        stages.append(("dedup_spans", _survives_rewrite(gates["dedup"])))
-    return _funnel_from_stages(docs, stages, id_col)
+    100 TB shape: one narrow id+flag frame per enabled gate, one join
+    chain, ONE aggregation, tidy rows via :func:`_funnel_from_stages`.
+    A caller that already ran `curate` hands the SAME frame-gate frames
+    in via `_gates`, so this funnel costs no second frame-gate pass."""
+    return _funnel_from_stages(
+        docs, _funnel_stages(docs, cfg, benchmark, _gates), cfg.id_col)

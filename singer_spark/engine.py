@@ -93,8 +93,9 @@ class Decider:
 
 def enforce_retention(log_dir: str, retention_seconds: int,
                       glob: str = "*", now: float | None = None) -> list[str]:
-    """O5: delete log files older than ``logRetentionInSeconds``
-    (processor/DefaultLogStreamProcessor.java:252-255, config.thrift:270-274).
+    """O5: delete log files older than ``processor.logRetentionSeconds``
+    (Singer's ``logRetentionInSeconds``,
+    processor/DefaultLogStreamProcessor.java:252-255, config.thrift:270-274).
 
     Call it after a drained cycle (run_adaptive does): everything older than
     the cutoff has necessarily been processed, so deletion never races the
@@ -322,8 +323,11 @@ class PipelineManager:
         query = self.queries[cfg.name] = writer.queryName(cfg.name).start()
         return query
 
-    @staticmethod
-    def _shadow_config(cfg: LogConfig) -> LogConfig | None:
+    def _shadow_config(self, cfg: LogConfig) -> LogConfig | None:
+        """The O8 shadow twin of `cfg`: same source, the shadow
+        destination, no audit, checkpointed next to the log's own
+        checkpoint (`<checkpoint>_shadow`) so it resumes wherever the
+        log does."""
         import dataclasses
 
         w = cfg.writer
@@ -332,7 +336,7 @@ class PipelineManager:
         return dataclasses.replace(
             cfg,
             name=f"{cfg.name}_shadow",
-            checkpoint_dir=None,
+            checkpoint_dir=f"{self._checkpoint(cfg)}_shadow",
             writer=dataclasses.replace(
                 w,
                 topic=w.shadow_topic or w.topic,
@@ -380,7 +384,7 @@ class PipelineManager:
             # direct writeStream sinks have none.  Fail at config time — a
             # guard that silently doesn't guard is worse than an error the
             # operator sees on deploy.
-            if cap is not None or audit is not None:
+            if cap is not None or w.audit_topic:
                 raise ValueError(
                     f"processor.maxEventsPerKey and writer.auditTopic are not "
                     f"supported with writer.type={w.type}; use kafka, file, or pulsar")
@@ -444,15 +448,23 @@ class PipelineManager:
     # -- adaptive poll loop (B3) + retention (O5) + live decider (O2) ------
     def run_cycle(self, cfg: LogConfig, audit_sink=None) -> int:
         """One drain-everything-available cycle (Trigger.AvailableNow against
-        the log's checkpoint — resumes where the last cycle stopped).
-        Returns the summed `numInputRows`: source rows, which is messages
-        for every reader except `thrift` without `pod_metadata`, whose
-        `binaryFile` source yields one row per FILE.
+        the log's checkpoint — resumes where the last cycle stopped), then
+        the same cycle for its shadow twin (O8), if one is configured.
+        Returns the log's own summed `numInputRows`: source rows, which is
+        messages for every reader except `thrift` without `pod_metadata`,
+        whose `binaryFile` source yields one row per FILE."""
+        rows = self._cycle_query(cfg, audit_sink)
+        shadow_cfg = self._shadow_config(cfg)
+        if shadow_cfg is not None:
+            self._cycle_query(shadow_cfg)
+        return rows
 
-        A checkpoint whose newest `offsets/<n>` has no `commits/<n>` (a
-        crash between the two writes) makes Spark's `availableNow` query
-        replay batch n and stop there, so the cycle runs a second query
-        for what arrived since.  A fresh or clean checkpoint starts one."""
+    def _cycle_query(self, cfg: LogConfig, audit_sink=None) -> int:
+        """`run_cycle` for one query.  A checkpoint whose newest
+        `offsets/<n>` has no `commits/<n>` (a crash between the two
+        writes) makes Spark's `availableNow` query replay batch n and stop
+        there, so the cycle runs a second query for what arrived since.
+        A fresh or clean checkpoint starts one."""
         ckpt = self._checkpoint(cfg)
         offsets = [n for n in fs_listdir(self.spark, f"{ckpt}/offsets") if n.isdigit()]
         replay = bool(offsets) and (max(offsets, key=int)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import re
 import sys
 import time
 
@@ -54,6 +55,18 @@ def test_load_log_config_from_properties():
     assert cfg.reader.max_message_size == 1_000_000
     assert cfg.processor.batch_size == 400
     assert cfg.writer.topic == "app_events"
+
+    # acronym runs stay one word; the retention key is the field's name
+    cfg = load_log_config("x", "logDir=/t\nwriter.type=file\n"
+                          "writer.maxFileSizeMB=7\n"
+                          "processor.logRetentionSeconds=5\n")
+    assert cfg.writer.max_file_size_mb == 7
+    assert cfg.processor.log_retention_seconds == 5
+    # a key that names no field is refused, with its full dotted name
+    for bad in ("processor.logRetentionInSeconds=5", "writer.kafka.topic=t",
+                "writer.topc=t"):
+        with pytest.raises(ValueError, match=re.escape(bad.split("=")[0])):
+            load_log_config("x", f"logDir=/t\n{bad}\n")
 
 
 def test_load_singer_config_dir(tmp_path):

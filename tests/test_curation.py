@@ -85,6 +85,39 @@ def test_curate_stream_gates_and_cross_batch_dedup(spark, tmp_path):
     assert kept == [1, 11]
 
 
+def test_curate_stream_minhash_threshold_from_config(spark, tmp_path):
+    """The stream's minhash backend reads `cfg.minhash_threshold`, as
+    batch curate(dedup="minhash") does: a pair at Jaccard 0.39 is one
+    doc under threshold 0.3 and two under 0.5, on both paths."""
+    from singer_spark.curation import CurationConfig, curate, curate_stream
+
+    schema = "doc_id bigint, text string"
+    head = ("the quick brown fox jumps over the lazy dog and then walks "
+            "to the river bank")
+    rows = [(1, head + " to drink some water in the morning sun today"),
+            (2, head + " sits down under an old oak tree to rest for hours")]
+    docs = spark.createDataFrame(rows, schema)
+    src = str(tmp_path / "src")
+    docs.coalesce(1).write.parquet(src)
+    published = {}
+    for t in (0.3, 0.5):
+        cfg = CurationConfig(lang=None, min_quality=None,
+                             repetition_screen=False, dedup="minhash",
+                             minhash_threshold=t, split=False, keep_cols=())
+        batch = sorted(r.doc_id for r in curate(docs, cfg).collect())
+        out = str(tmp_path / f"out_{t}")
+        q = (curate_stream(spark.readStream.schema(schema).parquet(src),
+                           str(tmp_path / f"ckpt_{t}"),
+                           str(tmp_path / f"state_{t}"), out, cfg)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        q.stop()
+        published[t] = sorted(r.doc_id for r in spark.read.parquet(out)
+                              .collect())
+        assert published[t] == batch, t
+    assert published == {0.3: [1], 0.5: [1, 2]}
+
+
 @pytest.mark.soak
 def test_curate_stream_spans_backend_rewrites_and_restart_invariance(
         spark, tmp_path):
@@ -134,25 +167,6 @@ def test_curate_stream_spans_backend_rewrites_and_restart_invariance(
 
     solid = run("solid", [batch1 + batch2])     # uninterrupted single batch
     assert streamed == solid
-
-    # Bloom prefilter off must be bit-identical (same docs, fresh dirs)
-    def run_nobloom(tag, batches):
-        src = str(tmp_path / f"src_{tag}")
-        for rows in batches:
-            spark.createDataFrame(rows, schema).coalesce(1) \
-                .write.mode("append").parquet(src)
-            q = (curate_stream(
-                spark.readStream.schema(schema).parquet(src),
-                str(tmp_path / f"ckpt_{tag}"), str(tmp_path / f"state_{tag}"),
-                str(tmp_path / f"out_{tag}"), cfg, stream_dedup="spans",
-                span_bloom_bits=None)
-                .trigger(availableNow=True).start())
-            q.awaitTermination(120)
-            q.stop()
-        return {r.doc_id: r.text for r in
-                spark.read.parquet(str(tmp_path / f"out_{tag}")).collect()}
-
-    assert run_nobloom("nobloom", [batch1, batch2]) == streamed
 
 
 @pytest.mark.soak

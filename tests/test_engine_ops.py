@@ -222,12 +222,15 @@ def test_max_events_per_key_rejected_for_hookless_sinks(spark, tmp_path):
     mgr = PipelineManager(spark)
     with pytest.raises(ValueError, match="maxEventsPerKey"):
         mgr.start_log(cfg)
-    for sink in ("memory", "noop"):
-        cfg = _cfg(tmp_path, f"audited_{sink}", sink=sink)
+    # the config alone refuses: the CLI passes no audit sink
+    for i, (sink, audit_sink) in enumerate([("memory", AuditCollector()),
+                                            ("noop", AuditCollector()),
+                                            ("noop", None)]):
+        cfg = _cfg(tmp_path, f"audited_{sink}{i}", sink=sink)
         cfg.writer.audit_topic = f"audit.{sink}"
         _write_lines(f"{cfg.log_dir}/a.log", 2)
         with pytest.raises(ValueError, match="auditTopic"):
-            mgr.start_log(cfg, audit_sink=AuditCollector())
+            mgr.start_log(cfg, audit_sink=audit_sink)
     assert not mgr.queries
 
 
@@ -389,6 +392,39 @@ def test_shadow_mode_duplicates_delivery(spark, tmp_path):
     assert primary.count() == 9 and shadow.count() == 9
     assert ({r.value for r in primary.collect()}
             == {r.value for r in shadow.collect()})
+
+
+def test_run_cycle_drains_the_shadow_too(spark, tmp_path):
+    cfg = _cfg(tmp_path, "cycled_shadow")
+    cfg.writer.shadow_path = str(tmp_path / "shadow_copy")
+    _write_lines(f"{cfg.log_dir}/a.log", 7)
+    assert PipelineManager(spark).run_cycle(cfg) == 7
+    for path in (cfg.writer.path, cfg.writer.shadow_path):
+        assert sorted(r.value for r in spark.read.parquet(path).collect()) \
+            == [f"m {i}" for i in range(7)]
+
+
+def test_shadow_resumes_from_the_logs_checkpoint_after_restart(spark,
+                                                               tmp_path):
+    """The shadow checkpoints next to the log's own checkpointDir, not
+    under the manager's (temporary) root: a restarted agent's shadow
+    delivers only what is new."""
+    cfg = _cfg(tmp_path, "restarted_shadow")
+    cfg.writer.shadow_path = str(tmp_path / "shadow_copy")
+
+    def run_agent():
+        mgr = PipelineManager(spark)  # a fresh temporary checkpoint root
+        mgr.start_log(cfg)
+        for query in mgr.queries.values():
+            query.processAllAvailable()
+        mgr.stop_all()
+
+    _write_lines(f"{cfg.log_dir}/a.log", 9)
+    run_agent()
+    _write_lines(f"{cfg.log_dir}/b.log", 4, prefix="n")
+    run_agent()
+    for path in (cfg.writer.path, cfg.writer.shadow_path):
+        assert spark.read.parquet(path).count() == 13
 
 
 # ---------------------------------------------------------------------------

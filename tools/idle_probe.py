@@ -16,6 +16,13 @@ finished a batch and `warm` seconds have passed, nothing is appended for
 - ``child_rss_mb``: resident memory of every process below this one, at
   the end of the window.
 - ``processes``: the number of those processes.
+- ``child_pss_mb``: their proportional set size (PSS) from
+  ``/proc/<pid>/smaps_rollup``, where a page shared by k processes (the
+  copy-on-write pages of a forked Python worker) counts 1/k in each.
+- ``by_kind``: process count, RSS and PSS (MB) per kind of process in
+  the tree, this one included: ``jvm``, ``python_streaming_source_runner``,
+  ``pyspark.daemon``, ``singer_spark.worker_daemon`` (and the workers
+  each daemon forks), ``driver`` and ``other``.
 
 Prints one JSON line.  Linux only (reads ``/proc``).
 
@@ -78,6 +85,53 @@ def _sample(root: int) -> dict[tuple[int, int], tuple[float, int]]:
     return out
 
 
+_KINDS = ("python_streaming_source_runner", "pyspark.daemon",
+          "singer_spark.worker_daemon")
+
+
+def _kind(pid: int, me: int) -> str:
+    if pid == me:
+        return "driver"
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            argv = f.read().decode(errors="replace").split("\0")
+    except OSError:
+        return "other"
+    if os.path.basename(argv[0]) == "java":
+        return "jvm"
+    return next((k for k in _KINDS if any(k in a for a in argv)), "other")
+
+
+def _rss_pss(pid: int) -> tuple[int, int] | None:
+    """(RSS, PSS) bytes of a live process, from smaps_rollup."""
+    vals = {}
+    try:
+        with open(f"/proc/{pid}/smaps_rollup") as f:
+            for line in f:
+                name, _, rest = line.partition(":")
+                if name in ("Rss", "Pss"):
+                    vals[name] = int(rest.split()[0]) * 1024  # kB
+    except (OSError, ValueError):
+        return None
+    return vals.get("Rss", 0), vals.get("Pss", 0)
+
+
+def _memory_by_kind(root: int) -> dict[str, dict[str, float]]:
+    out: dict[str, dict[str, float]] = {}
+    for pid in _tree(root):
+        mem = _rss_pss(pid)
+        if mem is None:
+            continue
+        k = out.setdefault(_kind(pid, root),
+                           {"processes": 0, "rss_mb": 0.0, "pss_mb": 0.0})
+        k["processes"] += 1
+        k["rss_mb"] += mem[0] / 2**20
+        k["pss_mb"] += mem[1] / 2**20
+    return {name: {**k, "rss_mb": round(k["rss_mb"], 1),
+                   "pss_mb": round(k["pss_mb"], 1)}
+            for name, k in sorted(out.items())}
+
+
 def _config(name: str, log_dir: str, ckpt: str):
     from singer_spark.config import LogConfig, ReaderConfig, WriterConfig
 
@@ -112,6 +166,7 @@ def main(n: int = 1, window: float = 15.0, warm: float = 10.0) -> dict:
         t0, before = time.monotonic(), _sample(me)
         time.sleep(window)
         t1, after = time.monotonic(), _sample(me)
+        by_kind = _memory_by_kind(me)
         mgr.stop_all()
     spark.stop()
     cpu = sum(c - before.get(key, (0.0, 0))[0] for key, (c, _) in after.items())
@@ -119,7 +174,10 @@ def main(n: int = 1, window: float = 15.0, warm: float = 10.0) -> dict:
     return {"queries": n, "window_s": round(t1 - t0, 2),
             "cores_busy": round(cpu / (t1 - t0), 3),
             "child_rss_mb": round(sum(children) / 2**20, 1),
-            "processes": len(children)}
+            "processes": len(children),
+            "child_pss_mb": round(sum(k["pss_mb"] for name, k in by_kind.items()
+                                      if name != "driver"), 1),
+            "by_kind": by_kind}
 
 
 if __name__ == "__main__":
